@@ -764,7 +764,7 @@ private[graft] trait EntryDocs extends EntryShared {
     // THE CRAWL->CORPUS FLAGSHIP: the whole chain lives in
     // operators.CrawlCorpus (discovery -> politeness -> real HTTP
     // fetch -> extraction -> 8-family verdict -> banded near-dup ->
-    // corpus membership, per-stage drillable via CrawlCorpusDrill).
+    // corpus membership, per-stage drillable via `Tool drill crawl_corpus`).
     // Verdicts are hand-derived in the oracle: hub fails gopher word
     // count, article3 fails gopher+C4 (word soup, no punctuation),
     // article4 is benchmark-contaminated, dup.html is an exact text

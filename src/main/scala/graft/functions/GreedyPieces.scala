@@ -23,7 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * one flat JVM loop inside whole-stage codegen.
   *
   * Both encode dialects are one parameterization (spec-pinned parity
-  * with the expression forms in BpeSpec/WordpieceSpec):
+  * with the test tree's `ReferenceForms.greedyPiecesHof` and
+  * `wordpiecePiecesHof` in BpeSpec/WordpieceSpec):
   *  - BPE: `cont == initial`, `marker == ""` — one inventory at every
   *    position, pieces emitted as their surface;
   *  - WordPiece: position 1 probes the UNMARKED inventory, later

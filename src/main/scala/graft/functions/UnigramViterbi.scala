@@ -21,7 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * cost table, substring probes against the model's HashMap, integer
   * arithmetic only.
   *
-  * Bit-identical contract (pinned by UnigramSpec's parity test):
+  * Bit-identical contract (pinned by UnigramSpec's parity test against
+  * the test tree's `ReferenceForms.viterbiTable`/`backtrack`):
   *  - costs are LONG adds/subtracts of the same map values — no floats
   *    anywhere, so "same recurrence" IS "same bits";
   *  - a position no piece ends at holds a NULL table entry in the

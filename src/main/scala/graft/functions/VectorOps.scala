@@ -64,9 +64,4 @@ object VectorOps {
     aggregate(d, lit(0.0), (acc, x) => acc + x * x,
       s => transform(d, x => x / sqrt(s)))
   }
-
-  /** Euclidean (L2) distance — used by the LSH/ANN tier. */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x))
 }

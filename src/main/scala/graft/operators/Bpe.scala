@@ -292,40 +292,11 @@ object Bpe {
     // when-chain per position. Flat at bench scale (MatDrill interleaved
     // min 0.64 vs 0.64 on subword_doc_tokens once mode-order bias is
     // controlled), adopted for the inventory-scale shape; bit-parity
-    // with [[greedyPiecesHof]] is spec-pinned.
+    // with the test tree's `ReferenceForms.greedyPiecesHof` is spec-pinned.
     org.apache.spark.sql.GraftColumns.column(
       graft.functions.GreedyPiecesExpr(
         org.apache.spark.sql.GraftColumns.expression(word),
         pieces, pieces, ""))
-  }
-
-  /** The composed `aggregate`-expression reference form of
-    * [[greedyPieces]] (spec-pinned parity with the native kernel). */
-  private[graft] def greedyPiecesHof(word: Column, pieces: Seq[String]): Column = {
-    val maxL = pieces.map(_.length).max
-    val inv = array(pieces.map(lit): _*)
-    def matchLen(pos: Column): Column =
-      (2 to maxL).foldLeft(lit(1)) { (shorter, l) =>
-        when(pos + l <= length(word) + 1 &&
-          array_contains(inv, word.substr(pos, lit(l))), lit(l))
-          .otherwise(shorter)
-      }
-    val walked = aggregate(
-      sequence(lit(1), length(word)),
-      struct(lit(1).as("pos"), array().cast("array<string>").as("pieces")),
-      (acc, i) => {
-        val pos = acc.getField("pos")
-        val l = matchLen(pos)
-        when(i < pos, acc).otherwise(
-          struct((pos + l).as("pos"),
-            array_append(acc.getField("pieces"), word.substr(pos, l)).as("pieces")))
-      },
-      acc => acc.getField("pieces"))
-    // empty-word guard: sequence(1, 0) defaults to step -1 and yields
-    // [1, 0], so the unguarded fold would emit one spurious "" piece.
-    // Unreachable via the [a-z]+ wordVocab paths, but this is a public
-    // Column API over arbitrary input — "" segments to [].
-    when(length(word) === 0, array().cast("array<string>")).otherwise(walked)
   }
 
   /** Corpus-wide greedy-piece frequencies under a trained vocabulary:

@@ -24,8 +24,8 @@ import org.apache.spark.sql.expressions.Window
   *
   * Factored out of the `crawl_corpus_e2e` registry entry so the chain
   * is (a) a reusable pipeline a caller can run over their own seeds
-  * and (b) drillable per stage ([[graft.CrawlCorpusDrill]] times each
-  * boundary — the GoldenDrill pattern). Stage boundaries mirror where
+  * and (b) drillable per stage (the `crawl_corpus` drill leg of
+  * `graft.Tool` times each boundary). Stage boundaries mirror where
   * a production deployment persists: discovered URLs, the extracted
   * page staging table, the verdict table.
   *
@@ -297,7 +297,7 @@ object CrawlCorpus {
     *   AQE sizes to the data.
     * @param fetch the transport seam: urls(url) → (url, content) —
     *   defaults to the real HTTP kernel ([[UrlIngest.fetchBytes]]);
-    *   the width drill ([[graft.BfsWidthDrill]]) plugs a synthetic
+    *   the `bfs`/`bfs_deep` drill legs of `graft.Tool` plug a synthetic
     *   page generator here so the LOOP mechanics (parse → resolve →
     *   canonicalize → robots → distinct → anti-join → checkpoint) can
     *   be measured at 10⁵–10⁶-row frontiers without a socket.
@@ -408,7 +408,7 @@ object CrawlCorpus {
     * band join, frontier window, two real-HTTP fetch legs), not data —
     * narrowing shuffle width was measured a no-op (6.0 s scoped=2 vs
     * 6.0 s at 32); per-stage attribution in SCALING.md via
-    * [[graft.CrawlCorpusDrill]]. */
+    * the `crawl_corpus` drill leg of `graft.Tool`. */
   def run(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val base = UrlIngest.crawlSiteBase

@@ -397,7 +397,7 @@ object Html {
       Some(HtmlParsed(title,
         kept.zipWithIndex.map { case ((h, t), k) => HtmlBlock(k, h, t) }.toSeq,
         links.toSeq, canonical, metaRobots))
-    } catch { case _: Throwable => None }
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   // ---- Spark surface ----------------------------------------------------
 

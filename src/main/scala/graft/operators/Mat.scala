@@ -26,9 +26,10 @@ import org.apache.spark.sql.DataFrame
   * consumers RACE — the classic shape is an aggregate feeding both a
   * broadcast-exchange future and the main join side, where both jobs
   * recompute the upstream corpus pass (r21's unverified pin batch;
-  * measured per site with [[graft.MatDrill]] in r22). Such sites pass
-  * their measured-best mode as `default`; an explicit session conf
-  * still overrides it, most-specific first:
+  * measured per site with interleaved conf A/Bs in r22, today
+  * `graft.Tool time --conf`). Such sites pass their measured-best mode
+  * as `default`; an explicit session conf still overrides it,
+  * most-specific first:
   *
   *  1. `spark.graft.materialize.mode.<site>` — this one site;
   *  2. `spark.graft.materialize.mode` — every site (the drill's A/B);
@@ -67,9 +68,10 @@ object Mat {
       case "eager" => df.localCheckpoint()
       // `none` = passthrough (no materialization): each consumer
       // re-evaluates the shared subtree. Primarily the drill's control
-      // ([[graft.MatDrill]] prices a site's repeated-subtree cost with
-      // it), but also a legitimate site DEFAULT where the re-evaluation
-      // is measured cheaper than the pin at bench scale (cur.sp, r22) —
+      // (`graft.Tool time --conf spark.graft.materialize.mode=...`
+      // prices a site's repeated-subtree cost with it), but also a
+      // legitimate site DEFAULT where the re-evaluation is measured
+      // cheaper than the pin at bench scale (cur.sp, r22) —
       // such sites get flipped to eager/reliable by conf on a cluster,
       // where the re-run is a full corpus pass.
       case "none" => df

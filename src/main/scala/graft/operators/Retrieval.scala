@@ -444,15 +444,6 @@ object Retrieval {
           col("dcg6").cast("double") / col("idcg6")).otherwise(lit(0.0)).as("ndcg"))
   }
 
-  /** A4 answer summary: per question, result count + best-scoring hit
-    * (reference `main.py:116,163`). */
-  def answerSummary(ranked: DataFrame, qidCol: String = "question_id",
-                    idCol: String = "doc_id"): DataFrame =
-    ranked.groupBy(col(qidCol)).agg(
-      count(lit(1)).as("n_results"),
-      max(col("score")).as("best_score"),
-      max_by(col(idCol), struct(col("score"), col(idCol).cast("string"))).as("best_id"))
-
   /** Q2/A4/P6/S11 — the response assembly (reference `main.py:103-118,
     * 176-186`): per question, the ranked context as a nested JSON array
     * plus a result-count summary line. Doubles stay OUT of the JSON

@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   * map. The DP itself runs as a native codegen kernel
   * ([[graft.functions.UnigramViterbi]], r22) — one flat JVM loop per
   * word, no UDF, no join, no shuffle beyond the vocab aggregation; the
-  * `aggregate`-expression forms ([[viterbiTable]]/[[backtrack]]) remain
-  * as the spec-pinned reference (HOFs are CodegenFallback — interpreted
-  * per element — which is why the kernel exists).
+  * `aggregate`-expression forms (`ReferenceForms.viterbiTable` and
+  * `backtrack` in the test tree) remain as the spec-pinned reference
+  * (HOFs are CodegenFallback — interpreted per element — which is why
+  * the kernel exists).
   */
 object Unigram {
 
@@ -90,93 +91,8 @@ object Unigram {
     SeedModel(kept, maxPieceLen, maxWordLen * kept.values.max + 1)
   }
 
-  private def probeLen(model: SeedModel): Int =
+  private[graft] def probeLen(model: SeedModel): Int =
     math.min(model.maxPieceLen, model.pieces.keys.map(_.length).max)
-
-  /** The full Viterbi cost table of `word` under the seed model, as a
-    * codegen'd expression: `aggregate` grows the per-prefix cost table
-    * one character at a time; each step takes the min over pieces
-    * ending at the new position (`least` skips the null candidates
-    * where the substring is not in the inventory — length-1 pieces
-    * guarantee at least one survivor for in-alphabet words). Entry
-    * `i+1` is the best cost of the first `i` characters. */
-  def viterbiTable(word: Column, model: SeedModel): Column = {
-    val cntMap = typedlit(model.pieces)
-    val table = aggregate(
-      sequence(lit(1), length(word)),
-      array(lit(0L)),
-      (acc, j) => {
-        val candidates = (1 to probeLen(model)).map { l =>
-          val piece = word.substr(j - lit(l) + 1, lit(l))
-          val cnt = element_at(cntMap, piece)
-          when(j >= l && cnt.isNotNull,
-            element_at(acc, j - lit(l) + 1) + lit(model.big) - cnt)
-        }
-        array_append(acc, candidates.reduce(least(_, _)))
-      },
-      acc => acc)
-    // empty-word guard: sequence(1, 0) yields [1, 0] (step -1), padding
-    // the table to 3 null-costed entries; the empty word's true table is
-    // the single zero-cost entry (and it then segments to []).
-    when(length(word) === 0, array(lit(0L))).otherwise(table)
-  }
-
-  /** Full-word Viterbi cost `n_pieces · BIG − piece_mass` — the last
-    * table entry. */
-  def viterbiCost(word: Column, model: SeedModel): Column =
-    element_at(viterbiTable(word, model), -1)
-
-  /** The CANONICAL optimal segmentation, reconstructed from the cost
-    * table by the deterministic longest-piece-first backtrack: from the
-    * word's end, take the LONGEST piece whose cost edge is tight
-    * (`cost(pos−l) + BIG − cnt = cost(pos)`) and step back. Every tie
-    * among optimal paths resolves the same way in any engine — integer
-    * equality, no float compare — which is what lets the M-step's
-    * expected counts be oracle-checked. Emitted in word order. */
-  def viterbiPieces(word: Column, model: SeedModel): Column =
-    backtrack(word, viterbiTable(word, model), model)
-
-  /** Backtrack against an already-bound cost `table` column. Callers on
-    * a hot path bind the table with `withColumn` first — the lambda
-    * references the table 2·probeLen times per step, and an inline
-    * table expression would be copied (and recomputed) at every one of
-    * those references. */
-  def backtrack(word: Column, table: Column, model: SeedModel): Column = {
-    val cntMap = typedlit(model.pieces)
-    val raw = backtrackWalk(word, table, cntMap, model)
-    // OUT-OF-ALPHABET guard: a null cost table (word has a character the
-    // model never saw — cross-corpus model reuse) makes every tight-edge
-    // test false, the walk stalls, and the unguarded result would be
-    // len(word) empty strings. Surface null instead, mirroring
-    // [[viterbiStats]]' null stats (and explode() then drops the word
-    // from [[expectedPieceCounts]] rather than polluting it).
-    when(element_at(table, -1).isNull, lit(null).cast("array<string>"))
-      .otherwise(raw)
-  }
-
-  private def backtrackWalk(word: Column, table: Column, cntMap: Column,
-                            model: SeedModel): Column = {
-    val walked = aggregate(
-      sequence(lit(1), length(word)),
-      struct(length(word).as("pos"), array().cast("array<string>").as("rev")),
-      (acc, _) => {
-        val pos = acc.getField("pos")
-        val matchLen = (1 to probeLen(model)).foldLeft(lit(0)) { (shorter, l) =>
-          val piece = word.substr(pos - lit(l) + 1, lit(l))
-          val cnt = element_at(cntMap, piece)
-          when(pos >= l && cnt.isNotNull &&
-            element_at(table, pos - lit(l) + 1) + lit(model.big) - cnt ===
-              element_at(table, pos + 1), lit(l))
-            .otherwise(shorter)
-        }
-        when(pos <= 0, acc).otherwise(
-          struct((pos - matchLen).as("pos"),
-            array_append(acc.getField("rev"),
-              word.substr(pos - matchLen + 1, matchLen)).as("rev")))
-      },
-      acc => reverse(acc.getField("rev")))
-    walked
-  }
 
   /** M-step statistics of the EM iteration: expected piece counts over
     * the corpus — each vocab word's canonical optimal segmentation,
@@ -192,7 +108,7 @@ object Unigram {
       // CodegenFallback, with the Generate-boundary workaround its
       // comment documented); the kernel computes table and canonical
       // walk in one codegen'd loop per word. Bit-parity with
-      // [[backtrack]] is spec-pinned. MatDrill interleaved min:
+      // the test tree's `ReferenceForms.backtrack` is spec-pinned. MatDrill interleaved min:
       // unigram_em 0.73 vs 1.59 s, unigram_em_loop 1.02 vs 1.81 s.
       .withColumn("__pieces",
         org.apache.spark.sql.GraftColumns.column(
@@ -215,8 +131,8 @@ object Unigram {
     // CodegenFallback — every step's 2·probeLen substring probes
     // re-evaluate interpreted per character. The kernel runs the
     // identical integer recurrence as one JVM loop inside whole-stage
-    // codegen; bit-parity with [[viterbiCost]] is spec-pinned
-    // (UnigramSpec "native DP kernel equals the HOF expression form").
+    // codegen; bit-parity with the test tree's
+    // `ReferenceForms.viterbiTable` is spec-pinned (UnigramSpec "native DP kernel equals the HOF expression form").
     // MatDrill interleaved min: unigram_viterbi 0.37 vs 0.62,
     // unigram_em2 0.97 vs 2.04 s.
     val cost = org.apache.spark.sql.GraftColumns.column(

@@ -131,7 +131,7 @@ object UrlIngest {
             Option(conn.getInputStream).foreach { is =>
               is.readAllBytes(); is.close()
             }
-          } catch { case _: Throwable => () }
+          } catch { case scala.util.control.NonFatal(_) => () }
           Option(conn.getHeaderField("Location")) match {
             case Some(loc) => HopRedirect(loc)
             case None => throw new HttpStatusException(code, None) // malformed: no target

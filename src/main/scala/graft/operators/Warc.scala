@@ -96,7 +96,7 @@ object Warc {
         }
       }
       if (out.isEmpty) None else Some(out.toSeq)
-    } catch { case _: Throwable => None }
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Split an HTTP response block into (status, content-type, payload). */
   private def parseHttp(body: Array[Byte]): (Option[Int], Option[String], Array[Byte]) = {

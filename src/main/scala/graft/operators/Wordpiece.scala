@@ -174,46 +174,12 @@ object Wordpiece {
     // later positions the marker-stripped continuation surfaces, `##`
     // re-attached on emit — one codegen'd loop per word instead of the
     // interpreted HOF fold (see [[Bpe.greedyPieces]]; bit-parity with
-    // [[wordpiecePiecesHof]] is spec-pinned).
+    // the test tree's `ReferenceForms.wordpiecePiecesHof` is spec-pinned).
     val (cm, init) = pieces.partition(_.startsWith("##"))
     org.apache.spark.sql.GraftColumns.column(
       graft.functions.GreedyPiecesExpr(
         org.apache.spark.sql.GraftColumns.expression(word),
         init, cm.map(_.drop(2)), "##"))
-  }
-
-  /** The composed `aggregate`-expression reference form of
-    * [[wordpiecePieces]] (spec-pinned parity with the native kernel). */
-  private[graft] def wordpiecePiecesHof(word: Column, pieces: Seq[String]): Column = {
-    val (contMarked, initial) = pieces.partition(_.startsWith("##"))
-    val cont = contMarked.map(_.drop(2))
-    def chain(inv: Seq[String], pos: Column): Column = {
-      val lens = inv.map(_.length).filter(_ >= 2)
-      if (lens.isEmpty) lit(1)
-      else {
-        val arr = array(inv.map(lit): _*)
-        (2 to lens.max).foldLeft(lit(1)) { (shorter, l) =>
-          when(pos + l <= length(word) + 1 &&
-            array_contains(arr, word.substr(pos, lit(l))), lit(l))
-            .otherwise(shorter)
-        }
-      }
-    }
-    val walked = aggregate(
-      sequence(lit(1), length(word)),
-      struct(lit(1).as("pos"), array().cast("array<string>").as("pieces")),
-      (acc, i) => {
-        val pos = acc.getField("pos")
-        val l = when(pos === 1, chain(initial, pos)).otherwise(chain(cont, pos))
-        val piece = when(pos === 1, word.substr(pos, l))
-          .otherwise(concat(lit("##"), word.substr(pos, l)))
-        when(i < pos, acc).otherwise(
-          struct((pos + l).as("pos"),
-            array_append(acc.getField("pieces"), piece).as("pieces")))
-      },
-      acc => acc.getField("pieces"))
-    // "" → [] (sequence(1, 0) yields [1, 0]; see Bpe.greedyPieces)
-    when(length(word) === 0, array().cast("array<string>")).otherwise(walked)
   }
 
   /** Corpus-wide marked-piece frequencies under a trained vocabulary:

@@ -241,7 +241,7 @@ object StreamingIngest {
       // noise normalize to the same key
       .withColumn("crawl_key", graft.operators.UrlOps.canonicalizeUrl(
         coalesce(col("canonical"), col("url"))))
-      .withColumn("fp", TextAnalysis.fingerprint(concat_ws(" ",
+      .withColumn("fp", TextAnalysis.fingerprint(concat_ws("\u0000",
         col("crawl_key"), col("block_idx"))))
       // per-block hashes folded mod a large prime: order-insensitive,
       // and the sum cannot overflow ANSI long arithmetic at any
@@ -612,17 +612,6 @@ object StreamingIngest {
           }
       }
   }
-
-  /** Streaming tumbling-window aggregate over event-time with a
-    * watermark — the streaming twin of [[graft.operators.EventOps.tumblingAgg]]. */
-  def tumblingWindowAgg(events: DataFrame, width: String = "10 minutes",
-                        watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("sum_value"))
-      .select(col("w.start").as("win_start"), col("event_type"),
-        col("n_events"), col("sum_value"))
 
   // ---- streaming incremental recrawl: per-URL validator state --------
 

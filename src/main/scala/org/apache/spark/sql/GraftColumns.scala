@@ -21,4 +21,10 @@ object GraftColumns {
                        builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** Blocks until the listener bus has delivered every posted event, so
+    * counters a listener keeps are complete when read
+    * (`waitUntilEmpty` is `private[spark]`). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

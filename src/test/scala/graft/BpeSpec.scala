@@ -323,7 +323,7 @@ class BpeSpec extends SparkSpec {
     samples(Gen.zip(invGen, Gen.listOfN(10, wordGen)), 30).foreach { case (inv, words) =>
       val rows = (words :+ "").distinct.toDF("word")
         .select(col("word"), Bpe.greedyPieces(col("word"), inv).as("nat"),
-          Bpe.greedyPiecesHof(col("word"), inv).as("hof"))
+          ReferenceForms.greedyPiecesHof(col("word"), inv).as("hof"))
         .collect()
       rows.foreach(r => assert(r.getSeq[String](1) === r.getSeq[String](2),
         s"kernel/HOF divergence for '${r.getString(0)}' inv=$inv"))

@@ -160,7 +160,7 @@ class UnigramSpec extends SparkSpec {
     val stats = Unigram.viterbiStats(vocab, model).collect()
       .map(r => r.getString(0) -> ((r.getLong(2), r.getLong(3)))).toMap
     val paths = vocab.select(col("word"),
-        Unigram.viterbiPieces(col("word"), model).as("p")).collect()
+        ReferenceForms.viterbiPieces(col("word"), model).as("p")).collect()
       .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
     paths.foreach { case (w, ps) =>
       assert(ps === refBacktrack(w, model.pieces, model.big), s"word=$w")
@@ -220,9 +220,9 @@ class UnigramSpec extends SparkSpec {
     val model = Unigram.fitSeed(
       Bpe.wordVocab(docs("abc ab abc")).select("word", "freq"))
     val r = Seq("").toDF("word")
-      .withColumn("__tab", Unigram.viterbiTable(col("word"), model))
+      .withColumn("__tab", ReferenceForms.viterbiTable(col("word"), model))
       .select(col("__tab"),
-        Unigram.backtrack(col("word"), col("__tab"), model).as("p"))
+        ReferenceForms.backtrack(col("word"), col("__tab"), model).as("p"))
       .head()
     assert(r.getSeq[Long](0) === Seq(0L), "empty word's DP table is [0]")
     assert(r.getSeq[String](1) === Seq.empty, "empty word segments to []")
@@ -235,9 +235,9 @@ class UnigramSpec extends SparkSpec {
       Bpe.wordVocab(docs("abc ab abc")).select("word", "freq"))
     val foreign = Seq(("zab", 4L), ("ab", 2L)).toDF("word", "freq")
     val paths = foreign
-      .withColumn("__tab", Unigram.viterbiTable(col("word"), model))
+      .withColumn("__tab", ReferenceForms.viterbiTable(col("word"), model))
       .select(col("word"),
-        Unigram.backtrack(col("word"), col("__tab"), model).as("p"))
+        ReferenceForms.backtrack(col("word"), col("__tab"), model).as("p"))
       .collect().map(r => r.getString(0) -> Option(r.get(1))).toMap
     assert(paths("zab").isEmpty, "unsegmentable word must yield null, not junk")
     assert(paths("ab").isDefined)
@@ -317,10 +317,10 @@ class UnigramSpec extends SparkSpec {
         org.apache.spark.sql.GraftColumns.expression(col("word")),
         model.pieces, model.big, probe))
     val rows = df
-      .withColumn("__tab", Unigram.viterbiTable(col("word"), model))
+      .withColumn("__tab", ReferenceForms.viterbiTable(col("word"), model))
       .select(col("word"),
         element_at(col("__tab"), -1).as("hof_cost"), natCost.as("nat_cost"),
-        Unigram.backtrack(col("word"), col("__tab"), model).as("hof_p"),
+        ReferenceForms.backtrack(col("word"), col("__tab"), model).as("hof_p"),
         natPieces.as("nat_p"))
       .collect()
     assert(rows.length === words.length)

@@ -136,7 +136,7 @@ class WordpieceSpec extends SparkSpec {
     val words = (samples(wordGen, 300) :+ "" :+ "zzz" :+ "thatthatthat").distinct
     val rows = words.toDF("word")
       .select(col("word"), Wordpiece.wordpiecePieces(col("word"), pieces).as("nat"),
-        Wordpiece.wordpiecePiecesHof(col("word"), pieces).as("hof"))
+        ReferenceForms.wordpiecePiecesHof(col("word"), pieces).as("hof"))
       .collect()
     rows.foreach(r => assert(r.getSeq[String](1) === r.getSeq[String](2),
       s"kernel/HOF divergence for '${r.getString(0)}'"))
