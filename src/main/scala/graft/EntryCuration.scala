@@ -173,29 +173,16 @@ private[graft] trait EntryCuration extends EntryShared {
     // downstream drop-duplicates consumer loses the corpus's only copy),
     "dedup_stream_e2e" -> ((s, d) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
-      val work = java.nio.file.Files.createTempDirectory("graft-ledger-stream")
-      val (ledgerDir, verdictDir, ckDir) =
-        (s"$work/ledger", s"$work/verdicts", s"$work/ck")
+      val work = wiped(ledgerStreamDir)
+      val (ledgerDir, verdictDir) = (s"$work/ledger", s"$work/verdicts")
       Dedup.fpLedger(Seq((1L, "alpha text"), (2L, "beta text"))
         .toDF("doc_id", "text")).write.parquet(ledgerDir)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.getOption(shufKey)
-      s.conf.set(shufKey, "2")
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamingIngest.streamingLedgerDedup(
-        input.toDF().toDF("doc_id", "text"), ledgerDir, verdictDir, ckDir).start()
-      try {
-        input.addData((10L, "ALPHA   text"), (11L, "gamma fresh"),
-          (12L, "gamma fresh"))
-        q.processAllAvailable()
-        input.addData((20L, "gamma fresh"), (21L, "delta new"),
-          (11L, "gamma fresh"))
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        prevShuf match { case Some(v) => s.conf.set(shufKey, v); case None => s.conf.unset(shufKey) }
+      graft.streaming.FixtureStream.run(s, Seq(
+          Seq((10L, "ALPHA   text"), (11L, "gamma fresh"), (12L, "gamma fresh")),
+          Seq((20L, "gamma fresh"), (21L, "delta new"), (11L, "gamma fresh"))),
+          conf = graft.streaming.FixtureStream.narrow) { (in, ck) =>
+        graft.streaming.StreamingIngest.streamingLedgerDedup(
+          in.toDF("doc_id", "text"), ledgerDir, verdictDir, ck)
       }
       s.read.parquet(verdictDir)
         .select(col("batch_id").cast("long").as("batch_id"), col("doc_id"),
@@ -211,28 +198,16 @@ private[graft] trait EntryCuration extends EntryShared {
     // but never against ITSELF (the self-id exclusion),
     "neardup_stream_e2e" -> ((s, d) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
-      val work = java.nio.file.Files.createTempDirectory("graft-neardup-stream")
-      val (ledgerDir, pairsDir, ckDir) =
-        (s"$work/ledger", s"$work/pairs", s"$work/ck")
+      val work = wiped(nearDupStreamDir)
+      val (ledgerDir, pairsDir) = (s"$work/ledger", s"$work/pairs")
       Dedup.simhashLedger(Seq((1L, ndBase)).toDF("doc_id", "text"), cap = 2)
         .write.parquet(ledgerDir)
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.getOption(shufKey)
-      s.conf.set(shufKey, "2")
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamingIngest.streamingNearDupLedger(
-        input.toDF().toDF("doc_id", "text"), ledgerDir, pairsDir, ckDir,
-        cap = 2).start()
-      try {
-        input.addData((10L, ndEdit), (11L, ndDiff), (12L, ndDiff))
-        q.processAllAvailable()
-        input.addData((20L, ndBase), (11L, ndDiff))
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        prevShuf match { case Some(v) => s.conf.set(shufKey, v); case None => s.conf.unset(shufKey) }
+      graft.streaming.FixtureStream.run(s, Seq(
+          Seq((10L, ndEdit), (11L, ndDiff), (12L, ndDiff)),
+          Seq((20L, ndBase), (11L, ndDiff))),
+          conf = graft.streaming.FixtureStream.narrow) { (in, ck) =>
+        graft.streaming.StreamingIngest.streamingNearDupLedger(
+          in.toDF("doc_id", "text"), ledgerDir, pairsDir, ck, cap = 2)
       }
       s.read.parquet(pairsDir)
         .select(col("batch_id").cast("long").as("batch_id"), col("source"),

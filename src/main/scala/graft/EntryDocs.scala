@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.operators._
+import graft.streaming.{FixtureStream, StreamingIngest}
 
 /** Document/crawl tier (SURVEY §2.1-2.2): validation + ingest, multimodal decode, binary document extraction (PDF/DOCX/EML/OCR), and the WARC→HTML crawl chain.
   * One `queries` entry per operator with its DuckDB oracle twin;
@@ -540,7 +541,6 @@ private[graft] trait EntryDocs extends EntryShared {
     // unchanged one costs a 304 header exchange with no body,
     "recrawl_stream_e2e" -> ((s, d) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
       val base = s"http://127.0.0.1:${UrlIngest.fixtureServerPort}"
       // a MUTABLE page staged after server init (not in the re-stage
       // keep set; .html stays outside the ingest oracles' globs)
@@ -553,36 +553,18 @@ private[graft] trait EntryDocs extends EntryShared {
         ()
       }
       stage("one")
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.getOption(shufKey)
-      s.conf.set(shufKey, "2")
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, Long)]
-      val q = graft.streaming.StreamingIngest.streamingRecrawl(
-          input.toDS().map { case (u, b) =>
-            graft.streaming.StreamingIngest.RecrawlDue(u, b) },
-          backoffMs = 1)
-        .writeStream.format("memory").queryName("graft_recrawl_stream")
-        .outputMode("append")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-recrawl-ck").toString)
-        .start()
-      try {
-        input.addData((s"$base/recrawl-page.html", 0L),
-          (s"$base/recrawl-page.html", 0L), // duplicate due-mark: collapses
-          (s"$base/notes.txt", 0L))
-        q.processAllAvailable()
-        stage("two") // the page changes between crawl cycles
-        input.addData((s"$base/recrawl-page.html", 1L), (s"$base/notes.txt", 1L))
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
-        prevShuf match { case Some(v) => s.conf.set(shufKey, v); case None => s.conf.unset(shufKey) }
+      FixtureStream.run(s, Seq(
+          Seq((s"$base/recrawl-page.html", 0L),
+            (s"$base/recrawl-page.html", 0L), // duplicate due-mark: collapses
+            (s"$base/notes.txt", 0L)),
+          Seq((s"$base/recrawl-page.html", 1L), (s"$base/notes.txt", 1L))),
+          conf = FixtureStream.narrowRocksDb,
+          // the page changes between crawl cycles
+          afterBatch = i => if (i == 0) stage("two")) { (in, _) =>
+        StreamingIngest.streamingRecrawl(
+            in.map { case (u, b) => StreamingIngest.RecrawlDue(u, b) }, backoffMs = 1)
+          .writeStream.format("memory").queryName("graft_recrawl_stream")
+          .outputMode("append")
       }
       s.table("graft_recrawl_stream")
         .select(col("batch_id"),
@@ -780,44 +762,18 @@ private[graft] trait EntryDocs extends EntryShared {
     // arrival order — the documented streaming contract
     "frontier_stream_e2e" -> ((s, d) => {
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // state-store count = shuffle partitions: 32 RocksDB instances per
-      // micro-batch is pure fixed overhead for a 6-row fixture stream
-      // (measured 4.7 s of the query's cost). Scope it down exactly like
-      // the provider conf — a real deployment sizes this to stream
-      // volume; the checkpoint pins it per query, so each invocation's
-      // fresh checkpoint re-reads the scoped value.
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.getOption(shufKey)
-      s.conf.set(shufKey, "2")
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, Long)]
-      // b.com published its own Crawl-delay (7 s); a.com takes the
-      // global 2 s — per-host spacing must survive the stream path too
-      val q = graft.streaming.StreamingIngest.streamingFrontier(
-          input.toDF().toDF("url", "priority_micro"),
-          hostBudget = 3, crawlDelaySec = 2,
-          hostDelays = Map("b.com" -> 7))
-        .writeStream.format("memory").queryName("graft_frontier_stream")
-        .outputMode("append")
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-frontier-ck").toString)
-        .start()
-      try {
-        input.addData(("http://a.com/p1", 900000L), ("http://a.com/p2", 100000L),
-          ("http://b.com/q1", 500000L)) // batch 0: a gets ranks 1-2, b rank 1
-        q.processAllAvailable()
-        input.addData(("http://a.com/p3", 800000L), ("http://a.com/p4", 700000L),
-          ("http://b.com/q2", 250000L)) // batch 1: only p3 fits a's last slot
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
-        prevShuf match { case Some(v) => s.conf.set(shufKey, v); case None => s.conf.unset(shufKey) }
+      FixtureStream.run(s, Seq(
+          Seq(("http://a.com/p1", 900000L), ("http://a.com/p2", 100000L),
+            ("http://b.com/q1", 500000L)), // batch 0: a gets ranks 1-2, b rank 1
+          Seq(("http://a.com/p3", 800000L), ("http://a.com/p4", 700000L),
+            ("http://b.com/q2", 250000L))), // batch 1: only p3 fits a's last slot
+          conf = FixtureStream.narrowRocksDb) { (in, _) =>
+        // b.com published its own Crawl-delay (7 s); a.com takes the
+        // global 2 s — per-host spacing must survive the stream path too
+        StreamingIngest.streamingFrontier(in.toDF("url", "priority_micro"),
+            hostBudget = 3, crawlDelaySec = 2, hostDelays = Map("b.com" -> 7))
+          .writeStream.format("memory").queryName("graft_frontier_stream")
+          .outputMode("append")
       }
       s.table("graft_frontier_stream")
     }),
@@ -859,37 +815,8 @@ private[graft] trait EntryDocs extends EntryShared {
     // (the parity the CrawlStreamSpec pins); ingest_ts/fp/doc_id are
     // merge plumbing, not output,
     "crawl_stream_e2e" -> ((s, d) => {
-      val dir = crawlStreamDir
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      // wipe target + segments: every invocation (bench min-of-two,
-      // verify) replays the identical lifecycle from scratch
-      Seq(dir, dir + "_seg", dir + "_tmp", dir + "_bak").foreach(p =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), true))
+      val dir = wiped(crawlStreamDir) + "/table"
       import s.implicits._
-      implicit val sqlCtx = s.sqlContext
-      // scope shuffle width to the stream (the frontier_stream_e2e
-      // precedent): the compact's one LWW window over a handful of
-      // rows must not pay 32 shuffle tasks of pure scheduling floor
-      val shufKey = "spark.sql.shuffle.partitions"
-      val prevShuf = s.conf.getOption(shufKey)
-      s.conf.set(shufKey, "2")
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, Array[Byte])]
-      // round-17 shape: the batch path APPENDS one segment per
-      // micro-batch (O(batch), no table read, no swap); the LWW merge
-      // happens ONCE in the closing compact — the Delta/Iceberg MERGE
-      // cadence, and ~half the round-16 floor (which paid a full
-      // read-merge-rewrite cycle per batch)
-      val q = input.toDF()
-        .selectExpr("_1 AS warc", "_2 AS content")
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          graft.streaming.StreamingIngest.crawlAppendBatch(s, b, dir)
-        }
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-crawl-e2e-ck").toString)
-        .start()
       // canonical twins in SEPARATE micro-batches: the amp rendering
       // lands in batch 0, the desktop rendering in batch 2 — both
       // declare (case/utm-noised) rel=canonical to the same story, so
@@ -900,24 +827,25 @@ private[graft] trait EntryDocs extends EntryShared {
         ("twin", graft.operators.Warc.buildWarc(
           Iterator((url, "text/html; charset=utf-8", html.getBytes("UTF-8"))),
           "2026-01-01T00:00:00Z"))
-      try {
-        input.addData(DocFixtures.warcAll.filter(_._1 == "crawl") :+ // batch 0
-          twinWarc("http://amp.example.com/story", DocFixtures.canonicalTwinAHtml))
-        q.processAllAvailable()
-        input.addData(DocFixtures.warcAll.filter(_._1 == "crawl_gz")) // batch 1: re-crawl
-        q.processAllAvailable()
-        input.addData(Seq( // batch 2: the twin's other rendering
-          twinWarc("http://m.example.com/story", DocFixtures.canonicalTwinBHtml)))
-        q.processAllAvailable()
-        // at-least-once replay of batch 1 AFTER its commit: idempotent
-        graft.streaming.StreamingIngest.crawlAppendBatch(s,
-          DocFixtures.warcAll.filter(_._1 == "crawl_gz").toDF("warc", "content"), dir)
-        graft.streaming.StreamingIngest.crawlCompact(s, dir)
-      } finally {
-        q.stop()
-        prevShuf match {
-          case Some(v) => s.conf.set(shufKey, v); case None => s.conf.unset(shufKey)
-        }
+      val recrawl = DocFixtures.warcAll.filter(_._1 == "crawl_gz")
+      FixtureStream.run(s, Seq(
+          DocFixtures.warcAll.filter(_._1 == "crawl") :+
+            twinWarc("http://amp.example.com/story", DocFixtures.canonicalTwinAHtml),
+          recrawl, // batch 1: re-crawl
+          Seq(twinWarc("http://m.example.com/story", DocFixtures.canonicalTwinBHtml))),
+          conf = FixtureStream.narrow,
+          afterBatch = i => if (i == 2) {
+            // at-least-once replay of batch 1 AFTER its commit: idempotent
+            StreamingIngest.crawlAppendBatch(s, recrawl.toDF("warc", "content"), dir)
+            StreamingIngest.crawlCompact(s, dir)
+          }) { (in, _) =>
+        // round-17 shape: the batch path APPENDS one segment per
+        // micro-batch (O(batch), no table read, no swap); the LWW merge
+        // happens ONCE in the closing compact — the Delta/Iceberg MERGE
+        // cadence, and ~half the round-16 floor (which paid a full
+        // read-merge-rewrite cycle per batch)
+        in.toDF("warc", "content").writeStream
+          .foreachBatch((b: DataFrame, _: Long) => StreamingIngest.crawlAppendBatch(s, b, dir))
       }
       s.read.parquet(dir)
         .select("url", "crawl_key", "block_idx", "heading", "content", "n_chars")

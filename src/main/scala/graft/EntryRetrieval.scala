@@ -2,13 +2,51 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{IvfIndex, Tables}
 import graft.operators._
+import graft.streaming.FixtureStream
 
 /** Retrieval tier (SURVEY §2.5-2.6): kNN/ANN search family, persisted IVF index lifecycle, BM25/keyword/hybrid ranking, IR metrics.
   * One `queries` entry per operator with its DuckDB oracle twin;
   * composed into [[SparkEntry.queries]]/[[SparkEntry.oracleSql]]. */
 private[graft] trait EntryRetrieval extends EntryShared {
+
+  /** The ivf_stream_e2e lifecycle on the index at `dir`, up to its
+    * final probe, which the returned thunk builds. `phase` wraps each
+    * step; the `ivf` drill leg times them. */
+  private[graft] def ivfStreamLifecycle(s: SparkSession, e: DataFrame, dir: String,
+                                        phase: FixtureStream.Phase = FixtureStream.untimed)
+      : () => DataFrame = {
+    import s.implicits._
+    // rebuild wipes prior appends + manifest: every invocation (bench's
+    // min-of-two, verify) replays the identical lifecycle from scratch
+    phase("build")(IvfIndex.build(e.filter(col("vec_id") >= 200), dir, nlist = 8))
+    val late = phase("collect") {
+      e.filter(col("vec_id") >= 5 && col("vec_id") < 200)
+        .select("vec_id", "embedding").collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
+    }
+    FixtureStream.run(s, Seq(late.filter(_._1 < 70),
+        late.filter(t => t._1 >= 70 && t._1 < 135),
+        late.filter(_._1 >= 135)), // batch 2 stays unfolded
+        phase = phase,
+        afterBatch = i => if (i == 1) {
+          // compact between triggers — the documented quiesce window; the
+          // forced fold moves batches 0 and 1 into vectors/
+          phase("compact")(IvfIndex.compact(s, dir, foldMinRatio = 0.0))
+          // at-least-once replay of batch 1 AFTER its fold: the manifest
+          // (not the long-gone batch dir) must make this a no-op
+          phase("replay")(IvfIndex.append(
+            e.filter(col("vec_id") >= 70 && col("vec_id") < 135), dir, batchId = Some(1L)))
+        }) { (in, _) =>
+      in.selectExpr("_1 AS vec_id", "CAST(_2 AS ARRAY<FLOAT>) AS embedding").writeStream
+        .foreachBatch((b: DataFrame, id: Long) => IvfIndex.append(b, dir, batchId = Some(id)))
+    }
+    () => IvfIndex.probe(s, dir,
+      e.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding")),
+      k = 10, nprobe = 2)
+  }
 
   protected def retrievalQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "knn_cosine" -> ((s, d) => {
@@ -88,52 +126,11 @@ private[graft] trait EntryRetrieval extends EntryShared {
     // stream delivered is probed with the BUILD-half centroids (append
     // assigns against STORED centroids, never re-trains), so the whole
     // chain equals one probe over the full corpus with those centroids —
-    // exactly what the DuckDB oracle replays. The MemoryStream feed
-    // collects 195 fixture rows (bounded at every SF) to make the
-    // micro-batch boundaries deterministic.,
-    "ivf_stream_e2e" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val dir = ivfStreamDir
-      // rebuild wipes prior appends + manifest: every invocation (bench's
-      // min-of-two, verify) replays the identical lifecycle from scratch
-      graft.io.IvfIndex.build(e.filter(col("vec_id") >= 200), dir, nlist = 8)
-      import s.implicits._
-      implicit val sqlCtx = s.sqlContext
-      val late = e.filter(col("vec_id") >= 5 && col("vec_id") < 200)
-        .select("vec_id", "embedding").collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1)
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Seq[Float])]
-      val q = input.toDF()
-        .selectExpr("_1 AS vec_id", "CAST(_2 AS ARRAY<FLOAT>) AS embedding")
-        .writeStream
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.io.IvfIndex.append(b, dir, batchId = Some(id))
-        }
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-ivf-e2e-ck").toString)
-        .start()
-      try {
-        input.addData(late.filter(_._1 < 70).toSeq) // batch 0
-        q.processAllAvailable()
-        input.addData(late.filter(t => t._1 >= 70 && t._1 < 135).toSeq) // batch 1
-        q.processAllAvailable()
-        // compact between triggers — the documented quiesce window; the
-        // forced fold moves batches 0 and 1 into vectors/
-        graft.io.IvfIndex.compact(s, dir, foldMinRatio = 0.0)
-        // at-least-once replay of batch 1 AFTER its fold: the manifest
-        // (not the long-gone batch dir) must make this a no-op
-        graft.io.IvfIndex.append(
-          e.filter(col("vec_id") >= 70 && col("vec_id") < 135), dir,
-          batchId = Some(1L))
-        input.addData(late.filter(_._1 >= 135).toSeq) // batch 2, stays unfolded
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.io.IvfIndex.probe(s, dir,
-        e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding")),
-        k = 10, nprobe = 2)
-    }),
+    // exactly what the DuckDB oracle replays. The fixture stream
+    // collects 195 rows (bounded at every SF) to make the micro-batch
+    // boundaries deterministic,
+    "ivf_stream_e2e" -> ((s, d) =>
+      ivfStreamLifecycle(s, Tables.embeddings(s, d), ivfStreamDir)()),
     // recall@10 audit of every deterministic approximate path against
     // brute force — the number an ANN deployment is tuned by; the oracle
     // replays each method end-to-end in DuckDB,

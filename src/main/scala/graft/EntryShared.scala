@@ -55,11 +55,24 @@ private[graft] trait EntryShared {
   /** The ivf_persisted demo index location — see that query's comment. */
   protected lazy val ivfDemoDir: String = tmpQueryDir("graft-ivf-q")
 
+  /** Empties a per-JVM query dir, so that every invocation (bench's
+    * min-of-two, verify) replays its stream lifecycle from scratch. */
+  protected def wiped(dir: String): String = {
+    org.apache.commons.io.FileUtils.cleanDirectory(new java.io.File(dir))
+    dir
+  }
+
   /** The ivf_stream_e2e index location. */
   protected lazy val ivfStreamDir: String = tmpQueryDir("graft-ivf-se")
 
-  /** The crawl_stream_e2e corpus-table location. */
-  protected lazy val crawlStreamDir: String = tmpQueryDir("graft-crawl-se", "table")
+  /** The crawl_stream_e2e work dir: the corpus table and its segments. */
+  protected lazy val crawlStreamDir: String = tmpQueryDir("graft-crawl-se")
+
+  /** The dedup_stream_e2e work dir: the ledger and the verdicts. */
+  protected lazy val ledgerStreamDir: String = tmpQueryDir("graft-ledger-se")
+
+  /** The neardup_stream_e2e work dir: the ledger and the pairs. */
+  protected lazy val nearDupStreamDir: String = tmpQueryDir("graft-neardup-se")
 
   /** The staged URL-ingest fixture dir — per-JVM unique (a fixed
     * world-shared /tmp path raced concurrent processes and collided

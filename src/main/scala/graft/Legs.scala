@@ -2,12 +2,15 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.{IvfIndex, Tables}
+import graft.io.Tables
 import graft.operators._
+import graft.streaming.FixtureStream
 
 /** The named drill legs of [[Tool]]. Each leg builds its inputs, then
   * hands every frame it measures to [[Harness.time]]; the rows it
@@ -449,45 +452,14 @@ object Legs {
     * the probe. The index directory is fixed across reps, so rep 2
     * rebuilds over an existing index: the warm shape Bench times. */
   private def ivf(h: Harness): Unit = {
-    val s = h.spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val e = Tables.embeddings(s, h.sfDir)
-    val dir = Files.createTempDirectory("graft-ivf-drill").toString
-    for (rep <- 1 to h.runs) {
-      def step[A](label: String)(f: => A): A = h.step(s"rep$rep/$label")(f)
-      step("build")(IvfIndex.build(e.filter(col("vec_id") >= 200), dir, nlist = 8))
-      val late = step("collect") {
-        e.filter(col("vec_id") >= 5 && col("vec_id") < 200)
-          .select("vec_id", "embedding").collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1)
-      }
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Seq[Float])]
-      val q = step("start") {
-        input.toDF()
-          .selectExpr("_1 AS vec_id", "CAST(_2 AS ARRAY<FLOAT>) AS embedding")
-          .writeStream
-          .foreachBatch((b: DataFrame, id: Long) => IvfIndex.append(b, dir, batchId = Some(id)))
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft-ivf-drill-ck").toString)
-          .start()
-      }
-      try {
-        step("batch0") { input.addData(late.filter(_._1 < 70).toSeq); q.processAllAvailable() }
-        step("batch1") {
-          input.addData(late.filter(x => x._1 >= 70 && x._1 < 135).toSeq)
-          q.processAllAvailable()
-        }
-        step("compact")(IvfIndex.compact(s, dir, foldMinRatio = 0.0))
-        step("replay")(IvfIndex.append(
-          e.filter(col("vec_id") >= 70 && col("vec_id") < 135), dir, batchId = Some(1L)))
-        step("batch2") { input.addData(late.filter(_._1 >= 135).toSeq); q.processAllAvailable() }
-      } finally step("stop")(q.stop())
-      h.time(s"rep$rep/probe", reps = 1)(IvfIndex.probe(s, dir,
-        e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding")),
-        k = 10, nprobe = 2))
-    }
+    val e = Tables.embeddings(h.spark, h.sfDir)
+    val dir = Files.createTempDirectory("graft-ivf-drill")
+    try for (rep <- 1 to h.runs) {
+      val probe = SparkEntry.ivfStreamLifecycle(h.spark, e, dir.toString,
+        new FixtureStream.Phase {
+          def apply[T](label: String)(f: => T): T = h.step(s"rep$rep/$label")(f)
+        })
+      h.time(s"rep$rep/probe", reps = 1)(probe())
+    } finally FileUtils.deleteQuietly(dir.toFile)
   }
 }

@@ -251,7 +251,7 @@ object IvfIndex {
     * This is the S12-style upsert face of the index: wire it as a
     * Structured Streaming `foreachBatch` sink, passing foreachBatch's
     * OWN `batchId`, to keep the index current as documents stream in
-    * (spec does exactly that with a MemoryStream). With a `batchId` the
+    * (`ivf_stream_e2e` and its spec do exactly that). With a `batchId` the
     * write is EXACTLY-ONCE under foreachBatch's at-least-once retries:
     * the batch is staged under a per-ATTEMPT-unique
     * `appends_staging/<id>_<attempt>` and published by a single atomic

@@ -122,22 +122,10 @@ object Decontaminate {
   def clipContaminated(docs: DataFrame, bench: DataFrame, n: Int = 13,
                        padWords: Int = 0,
                        idCol: String = "doc_id", textCol: String = "text",
-                       benchTextCol: String = "text"): DataFrame = {
-    val spans = contaminatedSpans(docs, bench, n, padWords, idCol, textCol, benchTextCol)
-      .groupBy(col(idCol))
-      .agg(collect_list(struct(col("span_start").as("s"), col("span_end").as("e")))
-        .as("_spans"))
-    docs.join(spans, Seq(idCol), "left")
-      .withColumn("_words", split(trim(col(textCol)), "\\s+"))
-      .withColumn("_kept",
-        when(col("_spans").isNull, col("_words")).otherwise(
-          filter(col("_words"), (_, i) =>
-            !exists(col("_spans"), s => i >= s("s") && i <= s("e")))))
-      .select(col(idCol),
-        array_join(col("_kept"), " ").as("clean_text"),
-        size(col("_words")).as("n_words"),
-        (size(col("_words")) - size(col("_kept"))).as("n_words_removed"))
-  }
+                       benchTextCol: String = "text"): DataFrame =
+    Dedup.clipSpans(docs,
+      contaminatedSpans(docs, bench, n, padWords, idCol, textCol, benchTextCol),
+      idCol, textCol)
 
   // ---- Bloom-filter membership (the sketch-sized decontam guard) -------
 

@@ -1070,12 +1070,20 @@ object Dedup {
     * the output. */
   def clipDuplicatedSpans(docs: DataFrame, n: Int = 4, minDocs: Int = 2,
                           minSpanWords: Int = 8,
-                          idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val spans = duplicatedSpans(docs, n, minDocs, minSpanWords, idCol, textCol)
-      .groupBy(col(idCol))
+                          idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    clipSpans(docs, duplicatedSpans(docs, n, minDocs, minSpanWords, idCol, textCol),
+      idCol, textCol)
+
+  /** Removes each document's word spans `[span_start, span_end]` from
+    * its case-preserving `\\s+` split: the shared tail of
+    * [[clipDuplicatedSpans]] and [[Decontaminate.clipContaminated]].
+    * Output: (id, clean_text, n_words, n_words_removed). */
+  private[operators] def clipSpans(docs: DataFrame, spans: DataFrame,
+                                   idCol: String, textCol: String): DataFrame = {
+    val perDoc = spans.groupBy(col(idCol))
       .agg(collect_list(struct(col("span_start").as("s"), col("span_end").as("e")))
         .as("_spans"))
-    docs.join(spans, Seq(idCol), "left")
+    docs.join(perDoc, Seq(idCol), "left")
       .withColumn("_words", split(trim(col(textCol)), "\\s+"))
       .withColumn("_kept",
         when(col("_spans").isNull, col("_words")).otherwise(

@@ -406,7 +406,6 @@ object Html {
     * (and no per-page link-struct serialization) — the [[htmlBlocks]]
     * kernel. */
   val parseBlocksUdf = udf((bytes: Array[Byte]) => parseHtml(bytes, wantLinks = false))
-  val validHtmlUdf = udf((bytes: Array[Byte]) => parseHtml(bytes).isDefined)
 
   /** The HTML fixture corpus as a (doc, fmt, content BINARY) frame. */
   def fixturesDF(spark: org.apache.spark.sql.SparkSession): DataFrame = {

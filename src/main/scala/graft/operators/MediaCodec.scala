@@ -5,7 +5,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.CRC32
 import javax.imageio.ImageIO
-import javax.sound.sampled.AudioSystem
+import javax.sound.sampled.{AudioInputStream, AudioSystem}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -598,25 +598,9 @@ object MediaCodec {
       .mapPartitions { rows =>
         rows.flatMap { case (doc, payload) =>
           scala.util.Try(parseAvi(payload)).toOption.toSeq.flatMap { avi =>
-            val sampled = avi.frames.zipWithIndex.filter(_._2 % step == 0)
-            avi.codec match {
-              case "dib" =>
-                val rowBytes = (avi.width * 3 + 3) / 4 * 4
-                sampled
-                  .filter { case (f, _) => f.length == rowBytes * avi.height }
-                  .map { case (frame, i) =>
-                    VideoFrameHash(doc, i, dhash9x8(avi.width, avi.height, { (x, y) =>
-                      val off = (avi.height - 1 - y) * rowBytes + x * 3
-                      ((frame(off + 2) & 0xFF, frame(off + 1) & 0xFF, frame(off) & 0xFF))
-                    }))
-                  }
-              case "mjpg" =>
-                sampled.flatMap { case (frame, i) =>
-                  decodeImage(frame)
-                    .filter(img => img.getWidth == avi.width && img.getHeight == avi.height)
-                    .map(img => VideoFrameHash(doc, i,
-                      dhash9x8(avi.width, avi.height, (x, y) => rgbOf(img, x, y))))
-                }
+            avi.frames.zipWithIndex.filter(_._2 % step == 0).flatMap { case (frame, i) =>
+              aviPixels(avi, frame).map(px =>
+                VideoFrameHash(doc, i, dhash9x8(avi.width, avi.height, px)))
             }
           }
         }
@@ -682,13 +666,7 @@ object MediaCodec {
       .as[(String, Array[Byte])]
       .mapPartitions { rows =>
         rows.flatMap { case (doc, payload) =>
-          scala.util.Try {
-            AudioSystem.getAudioInputStream(new ByteArrayInputStream(payload))
-          }.toOption.filter { in =>
-            val f = in.getFormat
-            f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-              f.getSampleSizeInBits == 16 && !f.isBigEndian
-          }.map { in =>
+          pcm16(payload).map { in =>
             val f = in.getFormat
             val channels = f.getChannels
             val bytes = in.readAllBytes()
@@ -759,6 +737,18 @@ object MediaCodec {
       .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
         col("a.fingerprint").as("fingerprint"))
 
+  /** The WAV decode gate of [[wavStats]] and [[wavFingerprint]]: the
+    * payload's audio stream when it is 16-bit little-endian PCM_SIGNED,
+    * None for a corrupt payload or any other sample format (the caller
+    * drops the row). */
+  private def pcm16(payload: Array[Byte]): Option[AudioInputStream] =
+    scala.util.Try(AudioSystem.getAudioInputStream(new ByteArrayInputStream(payload)))
+      .toOption.filter { in =>
+        val f = in.getFormat
+        f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
+          f.getSampleSizeInBits == 16 && !f.isBigEndian
+      }
+
   /** Decode WAV audio through `javax.sound.sampled`: format header from
     * the real codec, then exact integer amplitude statistics over the
     * 16-bit PCM stream (all channels, interleaved order). Corrupt or
@@ -777,13 +767,7 @@ object MediaCodec {
       .as[(String, Array[Byte])]
       .mapPartitions { rows =>
         rows.flatMap { case (doc, payload) =>
-          scala.util.Try {
-            AudioSystem.getAudioInputStream(new ByteArrayInputStream(payload))
-          }.toOption.filter { in =>
-            val f = in.getFormat
-            f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-              f.getSampleSizeInBits == 16 && !f.isBigEndian
-          }.map { in =>
+          pcm16(payload).map { in =>
             val fmt = in.getFormat
             val bytes = in.readAllBytes()
             val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
@@ -897,6 +881,26 @@ object MediaCodec {
     AviStream(width, height, scale, rate, codec, frames.result())
   }
 
+  /** The frame walk of [[aviFrames]] and [[aviFrameDHash]]: one frame
+    * as a top-down `(x, y) => (r, g, b)` reader. `"dib"` frames are
+    * bottom-up BGR scanlines padded to 4 bytes; `"mjpg"` frames are
+    * JPEGs through [[decodeImage]]. None when the frame does not match
+    * the stream's geometry (or does not decode): the caller drops the
+    * frame. */
+  private def aviPixels(avi: AviStream, frame: Array[Byte])
+      : Option[(Int, Int) => (Int, Int, Int)] = avi.codec match {
+    case "dib" =>
+      val rowBytes = (avi.width * 3 + 3) / 4 * 4
+      Option.when(frame.length == rowBytes * avi.height) { (x: Int, y: Int) =>
+        val off = (avi.height - 1 - y) * rowBytes + x * 3
+        (frame(off + 2) & 0xFF, frame(off + 1) & 0xFF, frame(off) & 0xFF)
+      }
+    case "mjpg" =>
+      decodeImage(frame)
+        .filter(img => img.getWidth == avi.width && img.getHeight == avi.height)
+        .map(img => (x: Int, y: Int) => rgbOf(img, x, y))
+  }
+
   /** Decode AVI video payloads frame by frame — the real half of the
     * video seam ([[Multimodal.frameSample]] carries the metadata-stub
     * tier for codecs the JVM lacks). Every `step`-th frame is reduced to
@@ -923,43 +927,18 @@ object MediaCodec {
       .mapPartitions { rows =>
         rows.flatMap { case (doc, payload) =>
           scala.util.Try(parseAvi(payload)).toOption.toSeq.flatMap { avi =>
-            def row(i: Int, sr: Long, sg: Long, sb: Long, crc: Long) =
-              VideoFrameStats(doc, i, i.toLong * 1000 * avi.scale / avi.rate,
-                avi.width, avi.height, avi.frames.size, sr, sg, sb, crc)
-            val sampled = avi.frames.zipWithIndex.filter(_._2 % step == 0)
-            avi.codec match {
-              case "dib" =>
-                val rowBytes = (avi.width * 3 + 3) / 4 * 4
-                sampled
-                  .filter { case (f, _) => f.length == rowBytes * avi.height }
-                  .map { case (frame, i) =>
-                    var (sr, sg, sb) = (0L, 0L, 0L)
-                    val crc = new CRC32()
-                    for (y <- 0 until avi.height; x <- 0 until avi.width) {
-                      val off = (avi.height - 1 - y) * rowBytes + x * 3
-                      val b = frame(off) & 0xFF
-                      val g = frame(off + 1) & 0xFF
-                      val r = frame(off + 2) & 0xFF
-                      sr += r; sg += g; sb += b
-                      crc.update(r); crc.update(g); crc.update(b)
-                    }
-                    row(i, sr, sg, sb, crc.getValue)
-                  }
-              case "mjpg" =>
-                sampled.flatMap { case (frame, i) =>
-                  decodeImage(frame)
-                    .filter(img => img.getWidth == avi.width && img.getHeight == avi.height)
-                    .map { img =>
-                      var (sr, sg, sb) = (0L, 0L, 0L)
-                      val crc = new CRC32()
-                      for (y <- 0 until avi.height; x <- 0 until avi.width) {
-                        val (r, g, b) = rgbOf(img, x, y)
-                        sr += r; sg += g; sb += b
-                        crc.update(r); crc.update(g); crc.update(b)
-                      }
-                      row(i, sr, sg, sb, crc.getValue)
-                    }
+            avi.frames.zipWithIndex.filter(_._2 % step == 0).flatMap { case (frame, i) =>
+              aviPixels(avi, frame).map { px =>
+                var (sr, sg, sb) = (0L, 0L, 0L)
+                val crc = new CRC32()
+                for (y <- 0 until avi.height; x <- 0 until avi.width) {
+                  val (r, g, b) = px(x, y)
+                  sr += r; sg += g; sb += b
+                  crc.update(r); crc.update(g); crc.update(b)
                 }
+                VideoFrameStats(doc, i, i.toLong * 1000 * avi.scale / avi.rate,
+                  avi.width, avi.height, avi.frames.size, sr, sg, sb, crc.getValue)
+              }
             }
           }
         }

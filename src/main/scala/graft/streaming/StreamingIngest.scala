@@ -383,8 +383,8 @@ object StreamingIngest {
     * the reference's cache eviction (S16) — use it only with a real
     * trigger interval: pending timeouts make the zero-interval
     * micro-batch loop spin continuously (batches re-fire to check the
-    * clock), which also means `processAllAvailable` never settles in
-    * tests. Default is NoTimeout. */
+    * clock), which also means a test that waits for the stream to go
+    * idle never returns. Default is NoTimeout. */
   def statefulDedup(docs: org.apache.spark.sql.Dataset[FpDoc],
                     stateTtlMs: Option[Long] = None): org.apache.spark.sql.Dataset[FpDecision] = {
     import docs.sparkSession.implicits._
@@ -719,12 +719,12 @@ object StreamingIngest {
   }
 
   private[graft] def ledgerLatest(spark: org.apache.spark.sql.SparkSession,
-                                  ledgerDir: String): (DataFrame, Long) = {
-    import org.apache.spark.sql.functions.{col, lit}
-    versionedLatest(spark, ledgerDir,
-      spark.range(0).select(
-        col("id").cast("string").as("fp"), lit(null).cast("long").as("keeper_id")))
-  }
+                                  ledgerDir: String): (DataFrame, Long) =
+    versionedLatest(spark, ledgerDir, emptyFpLedger(spark))
+
+  private def emptyFpLedger(spark: SparkSession): DataFrame =
+    spark.range(0).select(
+      col("id").cast("string").as("fp"), lit(null).cast("long").as("keeper_id"))
 
   /** Streaming exact dedup against the PERSISTED fingerprint ledger —
     * [[graft.operators.Dedup.exactDupsIncremental]] lifted to a 24/7
@@ -753,25 +753,9 @@ object StreamingIngest {
   def streamingLedgerDedup(docs: DataFrame, ledgerDir: String,
                            verdictDir: String, checkpointDir: String)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.localCheckpoint()
-        val (ledger, nextVersion) = ledgerLatest(spark, ledgerDir)
-        graft.operators.Dedup.exactDupsIncremental(b, ledger)
-          .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(verdictDir)
-        // materialize before writing (the updated ledger is
-        // fingerprint-ledger-sized, not corpus-sized); overwrite can
-        // only touch the fresh version dir (an uncommitted crash
-        // residue at worst), never a committed version
-        val updated = graft.operators.Dedup.ledgerAfter(b, ledger).localCheckpoint()
-        updated.write.mode("overwrite").parquet(s"$ledgerDir/v$nextVersion")
-      }
+    versionedLedgerSink(docs, ledgerDir, verdictDir, checkpointDir, emptyFpLedger,
+      graft.operators.Dedup.exactDupsIncremental(_, _),
+      graft.operators.Dedup.ledgerAfter(_, _))
 
   /** Streaming NEAR-dup against the persisted banded-SimHash keeper
     * ledger — [[streamingLedgerDedup]]'s sibling on the near-dup tier
@@ -794,26 +778,42 @@ object StreamingIngest {
                              pairsDir: String, checkpointDir: String,
                              maxHamming: Int = 3, cap: Int = 64)
       : DataStreamWriter[Row] =
+    versionedLedgerSink(docs, ledgerDir, pairsDir, checkpointDir,
+      _.range(0).select(col("id"),
+        lit(null).cast("long").as("simhash"),
+        lit(null).cast("int").as("band"),
+        lit(null).cast("long").as("bucket")),
+      graft.operators.Dedup.simhashPairsIncremental(_, _, maxHamming, cap),
+      graft.operators.Dedup.simhashLedgerAfter(_, _, cap))
+
+  /** The `foreachBatch` body both versioned-ledger streams share: pin
+    * the batch, read the latest committed ledger version (`empty` when
+    * there is none), land `classify(batch, ledger)` under `outDir` as a
+    * per-batch dynamic partition overwrite, then write
+    * `next(batch, ledger)` as the new version `ledgerDir/v<N>`. */
+  private def versionedLedgerSink(docs: DataFrame, ledgerDir: String, outDir: String,
+                                  checkpointDir: String, empty: SparkSession => DataFrame,
+                                  classify: (DataFrame, DataFrame) => DataFrame,
+                                  next: (DataFrame, DataFrame) => DataFrame)
+      : DataStreamWriter[Row] =
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions.{col, lit}
         val spark = batch.sparkSession
         val b = batch.localCheckpoint()
-        val (ledger, nextVersion) = versionedLatest(spark, ledgerDir,
-          spark.range(0).select(col("id"),
-            lit(null).cast("long").as("simhash"),
-            lit(null).cast("int").as("band"),
-            lit(null).cast("long").as("bucket")))
-        graft.operators.Dedup.simhashPairsIncremental(b, ledger, maxHamming, cap)
+        val (ledger, nextVersion) = versionedLatest(spark, ledgerDir, empty(spark))
+        classify(b, ledger)
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(pairsDir)
-        val updated = graft.operators.Dedup
-          .simhashLedgerAfter(b, ledger, cap).localCheckpoint()
-        updated.write.mode("overwrite").parquet(s"$ledgerDir/v$nextVersion")
+          .partitionBy("batch_id").parquet(outDir)
+        // materialize before writing (the updated ledger is
+        // ledger-sized, not corpus-sized); overwrite can only touch the
+        // fresh version dir (an uncommitted crash residue at worst),
+        // never a committed version
+        next(b, ledger).localCheckpoint()
+          .write.mode("overwrite").parquet(s"$ledgerDir/v$nextVersion")
       }
 
   /** The ledger janitor: delete every COMMITTED version below the
@@ -825,22 +825,16 @@ object StreamingIngest {
     * (`keep` is clamped to ≥ 1). Returns the deleted version numbers. */
   def pruneLedgerVersions(spark: org.apache.spark.sql.SparkSession,
                           ledgerDir: String, keep: Int = 2): Seq[Long] = {
+    val (_, all, committed) = ledgerVersions(spark, ledgerDir)
+    if (committed.isEmpty) return Seq.empty
+    val keepFloor = committed.sorted.takeRight(math.max(1, keep)).head
+    val doomed = all.filter { v =>
+      if (committed.contains(v)) v < keepFloor
+      else v < committed.max // residue provably superseded
+    }.sorted
     val root = new org.apache.hadoop.fs.Path(ledgerDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val versionDirs = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.matches("v\\d+"))
-      .map(st => (st.getPath.getName.drop(1).toLong, st.getPath,
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))))
-    val committed = versionDirs.collect { case (v, _, true) => v }.sorted
-    if (committed.isEmpty) return Seq.empty
-    val keepFloor = committed.takeRight(math.max(1, keep)).head
-    val latestCommitted = committed.last
-    val doomed = versionDirs.filter { case (v, _, isCommitted) =>
-      if (isCommitted) v < keepFloor
-      else v < latestCommitted // residue provably superseded
-    }
-    doomed.foreach { case (_, path, _) => fs.delete(path, true) }
-    doomed.map(_._1).sorted.toSeq
+    doomed.foreach(v => fs.delete(new org.apache.hadoop.fs.Path(root, s"v$v"), true))
+    doomed
   }
 }
