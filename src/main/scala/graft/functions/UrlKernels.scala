@@ -34,9 +34,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * is what keeps every crawl oracle green unchanged. */
 object UrlKernels {
 
-  /** `^(utm_[^=]*|fbclid|gclid)(=.*)?$` — the tracking-param filter,
-    * applied with Java `find` semantics exactly like Column.rlike. */
-  private val Track = Pattern.compile("^(utm_[^=]*|fbclid|gclid)(=.*)?$")
+  /** The tracking-param filter, applied with Java `find` semantics
+    * exactly like Column.rlike. */
+  private val Track = Pattern.compile(graft.operators.UrlOps.trackingRe)
 
   /** Spark's `lower()`: UTF8String.toLowerCase (ASCII fast path, JVM
     * default-locale slow path) — byte-identical to the column form. */

@@ -27,7 +27,7 @@ import graft.operators.Similarity
   *  - `appends/batch=<id>/cell=<c>/…parquet` — streaming [[append]]
   *    batches, each published whole by one atomic rename (the
   *    exactly-once story under foreachBatch retries); folded back into
-  *    `vectors/` by the next [[build]]'s whole-index swap.
+  *    `vectors/` by [[compact]]'s whole-index swap.
   *
   * Determinism: the build stores the same hash-minimal centroid sample
   * and argmax-cosine assignment `ivfTopK` derives in-query, so
@@ -52,15 +52,8 @@ object IvfIndex {
     * listing stays flat no matter how many batches a stream commits
     * over its lifetime (one line of bytes each, not one directory —
     * marker dirs would grow `appends/` listing cost without bound).
-    * Cached per (modTime, length) so the streaming hot path — one
-    * [[append]] per micro-batch — pays one `getFileStatus` RPC, not an
-    * O(lifetime-batches) re-read per commit; the manifest only changes
-    * through a fold's swap (new modTime) and only grows (new length).
-    * Bounded: entries are evicted when their index is rebuilt
-    * ([[build]] drops the manifest with the old tree) and the map is
-    * cleared wholesale past a size cap — a driver cycling through many
-    * ephemeral index dirs must not accrete one batch-name Set per dir
-    * for the JVM's lifetime.
+    * [[compact]]'s `manifestRetain` bounds it (10,000 lines by default),
+    * so every check reads it afresh.
     *
     * Besides `batch=<id>` lines the manifest may carry ONE
     * `watermark=<id>` line — the low-watermark persisted by retention
@@ -68,29 +61,14 @@ object IvfIndex {
     * known folded even though its own line was evicted. The set returned
     * here is the raw line set; [[foldedWatermark]] extracts the
     * watermark, and every exactly-once check consults BOTH. */
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Set[String])]()
-  private val ManifestCacheMax = 64
   private def foldedBatches(fs: org.apache.hadoop.fs.FileSystem,
                             dir: String): Set[String] = {
     val m = foldedManifest(dir)
     if (!fs.exists(m)) Set.empty
     else {
-      val st = fs.getFileStatus(m)
-      val key = fs.makeQualified(m).toString
-      val cached = manifestCache.get(key)
-      if (cached != null && cached._1 == st.getModificationTime && cached._2 == st.getLen)
-        cached._3
-      else {
-        val in = fs.open(m)
-        val set =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-            .filter(_.nonEmpty).toSet
-          finally in.close()
-        if (manifestCache.size >= ManifestCacheMax) manifestCache.clear()
-        manifestCache.put(key, (st.getModificationTime, st.getLen, set))
-        set
-      }
+      val in = fs.open(m)
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toSet
+      finally in.close()
     }
   }
 
@@ -117,17 +95,28 @@ object IvfIndex {
       .schema(baseSchema.add("batch", org.apache.spark.sql.types.LongType))
       .parquet(s"$dir/appends")
 
+  /** The one writer of a `vectors/` tree, shared by [[build]] and the
+    * fold: rebalance by cell before the partitioned write, so each cell
+    * lands in ONE file, or in files of about
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` when AQE splits a
+    * cell bigger than that. Without it every task writes a file into
+    * every cell it holds rows for — task count × nlist small files that
+    * a second rewrite would have to merge. */
+  private def writeCells(assigned: DataFrame, path: String): Unit =
+    assigned.hint("rebalance", col("cell")).write.partitionBy("cell").parquet(path)
+
   /** Build the index: one pass assigns every candidate to its coarse
     * cell and writes the cell-partitioned vector table plus the
     * centroid sidecar. The assignment is map-side (one matrix-scan per
     * row against the broadcast centroid literal); the only exchange is
-    * the partitioned write's own file layout.
+    * [[writeCells]]' rebalance by cell.
     *
     * A rebuild is ATOMIC at the whole-index level: centroids and
     * vectors are staged together under a `_build_tmp` sibling, then
-    * swapped in with the same crash-safe tmp/bak rename dance as
-    * [[Tables.compact]] — a reader never sees new centroids paired with
-    * old assignments, and a mid-build crash leaves the previous index
+    * swapped in with the crash-safe tmp/bak rename dance of
+    * [[graft.streaming.StreamingIngest.swapInto]] — a reader never sees
+    * new centroids paired with old assignments, and a mid-build crash
+    * leaves the previous index
     * (rolled forward/back on the next build or read). A per-table
     * overwrite could not promise that: parquet overwrite is
     * delete-then-write, and the two tables would flip at different
@@ -151,18 +140,13 @@ object IvfIndex {
     graft.streaming.StreamingIngest.recoverSwap(fs, dst, tmp, bak)
     // no fs.delete(tmp) here: recoverSwap's postcondition already
     // guarantees tmp is gone (rolled forward, or deleted as stale)
-    recoverLeafSwaps(fs, dir) // make the outgoing tree whole before replacing it
     val cents = Similarity.coarseCentroids(candidates, nlist, idCol, vecCol)
     cents.toDF("cell", "centroid")
       .coalesce(1) // nlist rows — one sidecar file
       .write.parquet(s"$tmp/centroids")
-    Similarity.assignCells(candidates.select(col(idCol), col(vecCol)), cents, vecCol)
-      .write.partitionBy("cell").parquet(s"$tmp/vectors")
+    writeCells(Similarity.assignCells(candidates.select(col(idCol), col(vecCol)), cents, vecCol),
+      s"$tmp/vectors")
     graft.streaming.StreamingIngest.swapInto(fs, dst, tmp, bak, "build")
-    // the rebuild dropped the old tree's folded manifest — evict its
-    // cache row too, or a dir-path reuse could serve stale batch names
-    manifestCache.remove(fs.makeQualified(foldedManifest(dir)).toString)
-    ()
   }
 
   /** Reader-side recovery: roll an interrupted [[build]] swap
@@ -189,44 +173,6 @@ object IvfIndex {
     val fs = fsOf(spark, dst)
     if (!fs.exists(dst))
       graft.streaming.StreamingIngest.recoverSwap(fs, dst, buildTmp(dir), buildBak(dir))
-    // ALSO heal a crashed per-leaf compact swap (after a build roll too —
-    // not an else): that crash state leaves
-    // an entire cell missing from vectors/ (its only copies in
-    // compact_work) while the index DIR looks healthy — without this,
-    // every probe would silently drop that cell's vectors until the next
-    // compact, and a rebuild would delete the work area holding the only
-    // copy. A non-empty compact_work on the read path can only be a
-    // CRASH remnant under the documented quiesce-while-compacting
-    // contract (a live compact means no concurrent readers), so healing
-    // here never races a healthy maintenance run.
-    if (fs.exists(dst)) recoverLeafSwaps(fs, dir)
-  }
-
-  /** Roll interrupted per-leaf compact swaps forward/back, driven from
-    * the `compact_work` area (a crash mid-swap can leave the leaf
-    * missing from `vectors/` entirely, so the leaf listing alone cannot
-    * see it). Shared by [[compact]] (which must run it before the fold)
-    * and [[recoverIfMissing]] (so the read path never silently serves an
-    * index missing a cell). */
-  private def recoverLeafSwaps(fs: org.apache.hadoop.fs.FileSystem,
-                               dir: String): Unit = {
-    val work = new org.apache.hadoop.fs.Path(s"$dir/compact_work")
-    if (!fs.exists(work)) return
-    val root = new org.apache.hadoop.fs.Path(s"$dir/vectors")
-    fs.listStatus(work).map(_.getPath.getName)
-      .collect {
-        case n if n.endsWith("_compact_tmp") => n.stripSuffix("_compact_tmp")
-        case n if n.endsWith("_compact_bak") => n.stripSuffix("_compact_bak")
-      }
-      .distinct
-      .foreach { leaf =>
-        graft.streaming.StreamingIngest.recoverSwap(fs,
-          new org.apache.hadoop.fs.Path(root, leaf),
-          new org.apache.hadoop.fs.Path(work, leaf + "_compact_tmp"),
-          new org.apache.hadoop.fs.Path(work, leaf + "_compact_bak"))
-      }
-    // all healed: drop the empty work area so later entries short-circuit
-    if (fs.listStatus(work).isEmpty) { fs.delete(work, true); () }
   }
 
   /** The stored centroid sample, cell-ordered — nlist rows of driver
@@ -270,7 +216,8 @@ object IvfIndex {
     * Without a `batchId` (ad-hoc, single-shot maintenance) the write is
     * a plain append into the cell partitions: simplest layout, but a
     * caller that retries a failed call can duplicate rows — streaming
-    * sinks must pass the id. */
+    * sinks must pass the id — and its files stay as written until a
+    * later fold rewrites `vectors/`. */
   def append(newVecs: DataFrame, dir: String,
              idCol: String = "vec_id", vecCol: String = "embedding",
              batchId: Option[Long] = None): Unit = {
@@ -353,35 +300,27 @@ object IvfIndex {
     }
   }
 
-  /** Compact the index's cell partitions. Streaming [[append]] accretes
-    * one `appends/batch=<id>` tree per micro-batch, and at 100 TB scan
-    * task count and object-store listing degrade with file count, not
-    * byte count ([[Tables.compact]]'s rationale) — so compaction FIRST
-    * folds every committed append batch back into `vectors/` through the
-    * same ATOMIC whole-index swap as [[build]] (centroids are copied
-    * unchanged; no retraining): a reader never sees a row in both trees,
-    * and a mid-fold crash leaves the previous forest intact. The fold is
+  /** Compact the index. Streaming [[append]] accretes one
+    * `appends/batch=<id>` tree per micro-batch, and at 100 TB scan task
+    * count and object-store listing degrade with file count, not byte
+    * count — so compaction folds every committed append batch back into
+    * `vectors/` through the same ATOMIC whole-index swap as [[build]]
+    * (centroids are copied unchanged; no retraining): a reader never
+    * sees a row in both trees, and a mid-fold crash leaves the previous
+    * forest intact. The fold writes through [[writeCells]], so the new
+    * tree already holds one file per small cell and advisory-sized files
+    * for a big one — the fold is the only rewrite. The fold is
     * amortized: it runs once append bytes reach `foldMinRatio` of the
     * base tree or once `foldMaxBatches` unfolded batch dirs accumulate
     * (see [[foldAppends]]; ratio `0.0` forces it), because it rewrites
-    * all of `vectors/` — below both thresholds only the per-cell pass
-    * below runs. The fold REMOVES the folded batch dirs and records
-    * their ids in the `appends_folded` manifest (swapped in atomically
-    * with the new tree), so [[append]]'s exactly-once no-op check still
+    * all of `vectors/` — below both thresholds compaction rewrites
+    * nothing. The fold REMOVES the folded batch dirs and records their
+    * ids in the `appends_folded` manifest (swapped in atomically with
+    * the new tree), so [[append]]'s exactly-once no-op check still
     * recognizes a replayed batch after its rows moved, and `appends/`
     * listing cost stays bounded by the UNFOLDED batches rather than
-    * growing one dir per lifetime batch. Then each `cell=<c>` leaf is
-    * compacted independently with the crash-safe tmp/bak swap — the
-    * partition layout (and so probe-time pruning) is untouched, and a
-    * full copy of every leaf exists on disk at every instant. The swap
-    * siblings live in a `compact_work` area OUTSIDE the partition root:
-    * an in-place `cell=3_compact_bak` sibling would pollute partition
-    * discovery (breaking the cell column's type for every reader) and,
-    * after a crash, masquerade as a partition. Interrupted swaps are
-    * recovered FIRST, driven from the work area — a crash mid-swap can
-    * leave the leaf missing from `vectors/` entirely, so the leaf
-    * listing alone cannot see it. Returns the total file count after
-    * compaction.
+    * growing one dir per lifetime batch. Returns the `vectors/` file
+    * count after compaction.
     *
     * Concurrency contract: compaction (like [[build]]) is SINGLE-WRITER
     * maintenance — and "writer" includes the [[append]] stream: the
@@ -390,70 +329,24 @@ object IvfIndex {
     * re-lists batches after staging and skips the swap when anything
     * new appeared, but the re-list-to-rename window remains — stop the
     * stream (or schedule compaction between triggers) while compacting.
-    * The tmp/bak dance makes every state crash-safe — a full copy of
-    * each leaf exists on disk at every instant — but a probe that scans
-    * `vectors/` in the instants between a leaf's two renames will not
-    * see that cell (rename gives atomic per-path swaps, not snapshot
-    * isolation across the root). Run probes against a quiesced index,
-    * or point readers at a copy, while compacting.
     *
     * `manifestRetain` bounds the folded-batch manifest to the newest
     * ids (see the retention note in [[foldAppends]]) so a long-lived
-    * stream's manifest, probe filter, and driver cache stay O(retain),
-    * not O(lifetime batches); the eviction cutoff is persisted as a
-    * `watermark=<id>` manifest line so evicted ids still no-op on
-    * replay — retention never reopens the exactly-once guarantee. */
+    * stream's manifest and probe filter stay O(retain), not O(lifetime
+    * batches); the eviction cutoff is persisted as a `watermark=<id>`
+    * manifest line so evicted ids still no-op on replay — retention
+    * never reopens the exactly-once guarantee. */
   def compact(spark: SparkSession, dir: String,
-              targetFileBytes: Long = 128L * 1024 * 1024,
               foldMinRatio: Double = 0.1,
               foldMaxBatches: Int = 64,
               manifestRetain: Long = 10000L): Int = {
     recoverIfMissing(spark, dir) // heal a crashed build swap first, like every entry
-    val root = new org.apache.hadoop.fs.Path(s"$dir/vectors")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val work = new org.apache.hadoop.fs.Path(s"$dir/compact_work")
-    // leaf-swap recovery MUST precede the fold: a crashed per-leaf swap
-    // leaves that cell only in the work area, and a fold that reads
-    // vectors/ before the leaf is restored would rewrite (and swap in)
-    // an index missing the leaf's rows — then delete the only copy with
-    // the old tree
-    recoverLeafSwaps(fs, dir)
     foldAppends(spark, dir, foldMinRatio, foldMaxBatches, manifestRetain)
-    val leaves = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-      .filter(leaf => fs.listStatus(leaf.getPath)
-        .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet")))
-      .map(_.getPath.toString)
-    // leaves rewrite CONCURRENTLY: each leaf's recover/read/write/swap
-    // touches only its own dst and its own `<cell>_compact_tmp/bak`
-    // siblings in the shared work area, so the per-leaf crash-safety
-    // story is unchanged — concurrency only overlaps the per-job
-    // scheduling floor (nlist sequential jobs was the wall-clock of a
-    // maintenance cycle at any scale; on a cluster the same nlist jobs
-    // pipeline through the scheduler instead of serializing on the
-    // driver). Bounded pool: nlist can be 10⁵ — never spawn that many
-    // driver threads.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(8, leaves.length)))
-    implicit val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val total =
-      try {
-        import scala.concurrent.duration.Duration
-        // lift each leaf to Try and await ALL of them before surfacing
-        // any failure: a fail-fast Future.sequence would rethrow while
-        // sibling swaps are still IN FLIGHT, and a caller's retry would
-        // then run recoverLeafSwaps concurrently with live renames —
-        // recovery deleting a tmp/bak that is the only copy mid-swap.
-        // Quiescence first, then the first failure propagates.
-        val tries = scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(leaves.toSeq.map(leaf =>
-            scala.concurrent.Future(scala.util.Try(
-              Tables.compact(spark, leaf, targetFileBytes,
-                workDir = Some(work.toString)))))), Duration.Inf)
-        tries.map(_.get).sum
-      } finally pool.shutdown()
-    fs.delete(work, true) // empty after successful swaps
-    total
+    val root = new org.apache.hadoop.fs.Path(s"$dir/vectors")
+    val files = fsOf(spark, root).listFiles(root, true)
+    var n = 0
+    while (files.hasNext) if (files.next().getPath.getName.endsWith(".parquet")) n += 1
+    n
   }
 
   /** The fold half of [[compact]]: rewrite `vectors/` as base ∪ committed
@@ -552,24 +445,15 @@ object IvfIndex {
       val base = spark.read.parquet(s"$dir/vectors")
       spark.read.parquet(s"$dir/centroids").coalesce(1)
         .write.parquet(s"$tmp/centroids")
-      // repartition BY THE PARTITION COLUMN before the partitioned
-      // write: without it every task writes a file into every cell it
-      // holds rows for — task-count × nlist small files at scale, which
-      // the per-leaf pass would then pay a second full rewrite to fix.
-      // Clustered by cell, each cell lands in ~one AQE-sized file and
-      // the per-leaf pass below early-exits (Tables.compact skips a
-      // leaf already at its target file count). One rewrite with the
-      // right layout instead of two.
-      base.unionByName(appendsFrame(spark, dir, base.schema).drop("batch"))
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/vectors")
+      writeCells(base.unionByName(appendsFrame(spark, dir, base.schema).drop("batch")),
+        s"$tmp/vectors")
       // record the folded batches in the manifest INSIDE the staged
       // tree (atomic with the swap): their dirs are gone after the
       // fold, and the manifest is what keeps a replay a no-op
       // RETENTION: keep only entries within `manifestRetain` of the
       // newest folded id — without a bound the manifest (and probe's
-      // NOT-IN literal set, and the driver-pinned cache entry) grows one
-      // line per lifetime batch forever on a long-lived stream. Eviction
+      // NOT-IN literal set, and every read of it) grows one line per
+      // lifetime batch forever on a long-lived stream. Eviction
       // is made SAFE structurally by the `watermark=<id>` line: evicted
       // ids are at most `cutoff - 1`, so persisting max(old watermark,
       // cutoff - 1) keeps "id <= watermark → already folded" true for

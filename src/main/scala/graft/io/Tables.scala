@@ -120,39 +120,24 @@ object Tables {
     * table exists on disk at every instant. Returns the output file
     * count. */
   def compact(spark: SparkSession, dir: String,
-              targetFileBytes: Long = 128L * 1024 * 1024,
-              workDir: Option[String] = None): Int = {
+              targetFileBytes: Long = 128L * 1024 * 1024): Int = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val dst = new org.apache.hadoop.fs.Path(dir)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // workDir relocates the swap siblings: when dir is a LEAF of a
-    // hive-partitioned table, in-place `<dir>_compact_tmp/bak` siblings
-    // would sit inside the partition root and pollute partition
-    // discovery (a non-`col=value` name breaks the partition column's
-    // type for every concurrent reader) — the caller passes a work area
-    // OUTSIDE the root instead (see graft.io.IvfIndex.compact).
-    val (tmp, bak) = workDir match {
-      case Some(w) =>
-        val wp = new org.apache.hadoop.fs.Path(w)
-        if (!fs.exists(wp)) fs.mkdirs(wp)
-        (new org.apache.hadoop.fs.Path(wp, dst.getName + "_compact_tmp"),
-          new org.apache.hadoop.fs.Path(wp, dst.getName + "_compact_bak"))
-      case None =>
-        // SAME sibling names as StreamingIngest.upsertBatch, deliberately:
-        // compaction's documented use case is the streaming upsert table,
-        // and recovery at each entry point only knows its own sibling
-        // names. With per-family names, a compact that crashed between
-        // its two renames (dst missing, table only in the siblings) is
-        // invisible to the stream's recoverSwap — the resumed stream
-        // would treat the missing dst as a FIRST-EVER table and commit a
-        // one-micro-batch rebuild, and a later compact's recovery would
-        // then delete the stranded siblings, the only surviving copy.
-        // One shared namespace per dst makes every writer's recoverSwap
-        // heal every other's crash. (Both writers are single-writer on
-        // the dst by contract; the names cannot collide live.)
-        (new org.apache.hadoop.fs.Path(dir + "_tmp"),
-          new org.apache.hadoop.fs.Path(dir + "_bak"))
-    }
+    // SAME sibling names as StreamingIngest.upsertBatch, deliberately:
+    // compaction's documented use case is the streaming upsert table,
+    // and recovery at each entry point only knows its own sibling
+    // names. With per-family names, a compact that crashed between
+    // its two renames (dst missing, table only in the siblings) is
+    // invisible to the stream's recoverSwap — the resumed stream
+    // would treat the missing dst as a FIRST-EVER table and commit a
+    // one-micro-batch rebuild, and a later compact's recovery would
+    // then delete the stranded siblings, the only surviving copy.
+    // One shared namespace per dst makes every writer's recoverSwap
+    // heal every other's crash. (Both writers are single-writer on
+    // the dst by contract; the names cannot collide live.)
+    val (tmp, bak) = (new org.apache.hadoop.fs.Path(dir + "_tmp"),
+      new org.apache.hadoop.fs.Path(dir + "_bak"))
     // one-time LEGACY healing: compacts before the shared-sibling
     // rename staged at `<dir>_compact_tmp`/`_compact_bak`. A crash
     // remnant under those names is invisible to the current recovery
@@ -160,10 +145,9 @@ object Tables {
     // first-ever table and the stranded siblings — the only surviving
     // copy — later deleted. Same roll-forward/back rules; with dst
     // healthy it just clears the stale legacy staging.
-    if (workDir.isEmpty)
-      graft.streaming.StreamingIngest.recoverSwap(fs, dst,
-        new org.apache.hadoop.fs.Path(dir + "_compact_tmp"),
-        new org.apache.hadoop.fs.Path(dir + "_compact_bak"))
+    graft.streaming.StreamingIngest.recoverSwap(fs, dst,
+      new org.apache.hadoop.fs.Path(dir + "_compact_tmp"),
+      new org.apache.hadoop.fs.Path(dir + "_compact_bak"))
     // roll an interrupted previous compact forward/back BEFORE reading —
     // same recovery contract as the streaming upsert's swap
     graft.streaming.StreamingIngest.recoverSwap(fs, dst, tmp, bak)
@@ -184,9 +168,8 @@ object Tables {
     // other thing an entry into compact promises. (The size guard
     // matters: one 10 GB file IS "count <= ceil(bytes/target)" yet
     // must still be re-split into target-sized files.) This turns
-    // maintenance over a mostly-compact table (e.g. the leaves a fresh
-    // IVF fold just wrote cell-clustered) into a pure LIST, the no-op
-    // cost profile a periodic compactor needs at 100 TB.
+    // maintenance over a mostly-compact table into a pure LIST, the
+    // no-op cost profile a periodic compactor needs at 100 TB.
     if (parquet.length <= nFiles && parquet.forall(_.getLen <= targetFileBytes))
       return parquet.length
     // a skipping manifest (Layout.writeWithStats) names the PRE-compact

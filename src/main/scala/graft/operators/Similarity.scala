@@ -5,9 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 
-/** Similarity search over an embedding column (`ARRAY<FLOAT>`):
-  * brute-force cosine top-k as the exactness baseline, and a
-  * sign-LSH-bucketed variant as the scale path (the axis-aligned
+/** Approximate similarity search over an embedding column
+  * (`ARRAY<FLOAT>`); the exactness baseline is [[Retrieval.knnCosine]]'s
+  * brute-force cosine top-k. Here: a sign-LSH-bucketed variant as the
+  * scale path (the axis-aligned
   * random-hyperplane family — deterministic, engine-reproducible). An IVF
   * variant (KMeans coarse quantizer) rides on MLlib at the ANN tier.
   *
@@ -16,14 +17,6 @@ import graft.functions.VectorOps
   * kNN is a query plan (SURVEY.md §2.5/§4.3).
   */
 object Similarity {
-
-  /** Brute-force cosine top-k: queries ⨯ candidates (broadcast the query
-    * side), score, rank-limit per query. WindowGroupLimit keeps per-task
-    * top-k before the shuffle → O(k·|queries|) rows move. */
-  def bruteForceTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-                     qidCol: String = "q_vec_id", qvecCol: String = "q_embedding",
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    Retrieval.knnCosine(queries, candidates, k, qidCol, qvecCol, idCol, vecCol)
 
   /** Sign-LSH bucket id: the concatenated signs of the first `dims`
     * components — hashing by axis-aligned hyperplanes through the origin.

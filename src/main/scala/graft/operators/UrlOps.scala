@@ -29,7 +29,10 @@ import org.apache.spark.sql.functions._
   * targets per-token corpus passes, not per-row metadata). */
 object UrlOps {
 
-  private val trackingRe = "^(utm_[^=]*|fbclid|gclid)(=.*)?$"
+  /** Tracking-param filter (rule 4), applied with `rlike` semantics —
+    * shared by [[graft.functions.UrlKernels]] and the column-form twin
+    * its parity spec checks. */
+  private[graft] final val trackingRe = "^(utm_[^=]*|fbclid|gclid)(=.*)?$"
 
   /** robots.txt rules for one user-agent: (allow?, path prefix),
     * already restricted to the matching agent group; `crawlDelaySec`
@@ -123,33 +126,12 @@ object UrlOps {
     * when-chain (quadratic fold nesting was the crawl tier's dominant
     * driver-side Catalyst cost, SCALING.md r17); the path column is
     * corpus-sized and nothing shuffles. Match semantics are pinned
-    * slot-for-slot against [[robotsAllowedWhenChain]]. */
+    * slot-for-slot against the original when-chain (UrlKernelsSpec). */
   def robotsAllowed(rules: RobotsRules)(path: Column): Column =
     org.apache.spark.sql.GraftColumns.column(
       graft.functions.RobotsAllowedExpr(
         org.apache.spark.sql.GraftColumns.expression(path),
         new graft.functions.RobotsMatcher(rules.rules.toArray, robotsPatternRegex)))
-
-  /** The original when-chain formulation — the fuzz-pinning reference
-    * for the native matcher (UrlKernelsSpec) and the shape the DuckDB
-    * oracles replay. */
-  private[graft] def robotsAllowedWhenChain(rules: RobotsRules)(path: Column): Column = {
-    // (specificity when matched, allow) per rule; fold to the best
-    // (longest pattern, allow-on-tie). Wildcard-free patterns keep the
-    // cheap startsWith; wildcards go through the RFC regex.
-    val scored = rules.rules.map { case (isAllow, pattern) =>
-      val matches =
-        if (pattern.contains('*') || pattern.endsWith("$"))
-          path.rlike(robotsPatternRegex(pattern))
-        else path.startsWith(pattern)
-      (when(matches, lit(pattern.length)).otherwise(lit(-1)), isAllow)
-    }
-    scored.foldLeft((lit(-1), lit(true))) { case ((bestLen, bestAllow), (len, isAllow)) =>
-      val better = (len > bestLen) || (len === bestLen && lit(isAllow) && !bestAllow)
-      (when(better, len).otherwise(bestLen),
-        when(better, lit(isAllow)).otherwise(bestAllow))
-    }._2
-  }
 
   /** One sitemap entry: `kind` is `url` (a urlset member) or `sitemap`
     * (an index member pointing at a child sitemap). */
@@ -276,58 +258,24 @@ object UrlOps {
 
   /** RFC 3986 §6 canonicalization as ONE native expression node
     * ([[graft.functions.CanonicalizeUrl]] — a flat char scan inside
-    * whole-stage codegen; rule list below on the column formulation).
-    * The dedup keys it emits are byte-identical to
-    * [[canonicalizeUrlColumnForm]] (fuzz-pinned, UrlKernelsSpec),
-    * which is what the DuckDB oracles replay. */
+    * whole-stage codegen; rule list in this object's header).
+    * The dedup keys it emits are byte-identical to the original
+    * regexp column formulation (fuzz-pinned, UrlKernelsSpec), which is
+    * what the DuckDB oracles replay. */
   def canonicalizeUrl(url: Column): Column =
     org.apache.spark.sql.GraftColumns.column(
       graft.functions.CanonicalizeUrl(
         org.apache.spark.sql.GraftColumns.expression(url)))
 
-  /** The original ~8-regexp column formulation — the fuzz-pinning
-    * reference for the native kernel and the oracle's shape. */
-  private[graft] def canonicalizeUrlColumnForm(url: Column): Column = {
-    val noFrag = regexp_replace(url, "#.*$", "")
-    val scheme = lower(regexp_extract(noFrag, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    // RFC 3986 §6.2.2.1 lowercases only scheme and HOST — userinfo is
-    // case-sensitive, so split it off before lowering (else
-    // http://User@h/ and http://user@h/ collapse to one dedup key)
-    val authority = regexp_extract(noFrag, "^[^:/?#]+://([^/?#]+)", 1)
-    val userinfo = regexp_extract(authority, "^([^@]*@)", 1)
-    val hostPort = lower(regexp_replace(authority, "^[^@]*@", ""))
-    val bareHost = when(scheme === "http", regexp_replace(hostPort, ":80$", ""))
-      .when(scheme === "https", regexp_replace(hostPort, ":443$", ""))
-      .otherwise(hostPort)
-    val host = concat(userinfo, bareHost)
-    val rawPath = regexp_extract(noFrag, "^[^:/?#]+://[^/?#]+([^?#]*)", 1)
-    val path = regexp_replace(rawPath, "(.)/$", "$1") // non-root trailing slash
-    val query = regexp_extract(noFrag, "\\?([^#]*)", 1)
-    val params = filter(split(query, "&"),
-      p => p =!= "" && !p.rlike(trackingRe))
-    val sortedQ = array_join(array_sort(params), "&")
-    // a URL without "://" is left untouched (not a canonicalizable
-    // absolute URL — less cleaning, never a mangled key). An EMPTY
-    // path normalizes to "/" (RFC 3986 §6.2.3: http://h and http://h/
-    // are the same resource — the single most common dup pair).
-    when(scheme === "", url).otherwise(concat(
-      scheme, lit("://"), host,
-      when(path === "", lit("/")).otherwise(path),
-      when(sortedQ === "", lit("")).otherwise(concat(lit("?"), sortedQ))))
-  }
-
   /** Extract the (lowercased) host from an absolute URL — userinfo and
     * port excluded. Empty string for non-absolute input. ONE native
     * node ([[graft.functions.UrlHost]] — it rides every per-row
     * frontier projection: [[crawlFrontier]], [[urlFilter]], the crawl
-    * stats), byte-identical to [[urlHostColumnForm]] (fuzz-pinned). */
+    * stats), byte-identical to the original regexp formulation
+    * (fuzz-pinned, UrlKernelsSpec). */
   def urlHost(url: Column): Column =
     org.apache.spark.sql.GraftColumns.column(
       graft.functions.UrlHost(org.apache.spark.sql.GraftColumns.expression(url)))
-
-  /** The original regexp formulation — the fuzz-pinning reference. */
-  private[graft] def urlHostColumnForm(url: Column): Column =
-    lower(regexp_extract(url, "^[^:/?#]+://(?:[^/?#@]*@)?([^/?#:]+)", 1))
 
   /** Resolve an extracted href against its page URL — the RFC 3986 §5
     * cases a crawler's discovery stage actually meets: hrefs carrying
@@ -346,7 +294,7 @@ object UrlOps {
     * frontier that re-fetches `a/../b` vs `b` costs one duplicate
     * fetch, never a wrong key collision. ONE native expression node
     * ([[graft.functions.ResolveUrl]]) — zero shuffle, zero UDF,
-    * byte-identical to [[resolveUrlColumnForm]] (fuzz-pinned,
+    * byte-identical to the original when-chain (fuzz-pinned,
     * UrlKernelsSpec) including the null algebra (null href ⇒ null; a
     * null base still resolves scheme-carrying hrefs to themselves). */
   def resolveUrl(base: Column, href: Column): Column =
@@ -354,23 +302,6 @@ object UrlOps {
       graft.functions.ResolveUrl(
         org.apache.spark.sql.GraftColumns.expression(base),
         org.apache.spark.sql.GraftColumns.expression(href)))
-
-  /** The original when-chain formulation — the fuzz-pinning reference
-    * for the native kernel and the oracle's shape. */
-  private[graft] def resolveUrlColumnForm(base: Column, href: Column): Column = {
-    val scheme = regexp_extract(base, "^([A-Za-z][A-Za-z0-9+.-]*):", 1)
-    val origin = regexp_extract(base, "^([^:/?#]+://[^/?#]+)", 1)
-    val basePath = regexp_extract(base, "^[^:/?#]+://[^/?#]+([^?#]*)", 1)
-    val baseDir = when(basePath.contains("/"),
-      regexp_replace(basePath, "/[^/]*$", "/")).otherwise(lit("/"))
-    when(href.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), href)
-      .when(href.startsWith("//"), concat(scheme, lit(":"), href))
-      .when(href.startsWith("/"), concat(origin, href))
-      .when(href === "" || href.startsWith("#"), base)
-      .when(href.startsWith("?"), concat(origin,
-        when(basePath === "", lit("/")).otherwise(basePath), href))
-      .otherwise(concat(origin, baseDir, href))
-  }
 
   /** Is a (resolved) URL something the crawl tier can actually fetch?
     * http/https only — the gate that drops `mailto:`/`javascript:`/

@@ -14,7 +14,7 @@ class HybridSaltedSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("q_vec_id", "rank")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val exact = key(Similarity.bruteForceTopK(qs, cands, k = 5))
+    val exact = key(Retrieval.knnCosine(qs, cands, k = 5))
     val ivf = key(Similarity.ivfTopK(qs, cands, k = 5, nlist = 4, nprobe = 4)
       .select("q_vec_id", "vec_id", "score", "rank"))
     assert(ivf === exact)
@@ -27,7 +27,7 @@ class HybridSaltedSpec extends SparkSpec {
     val qs = Seq.tabulate(5)(i => (i.toLong, vec())).toDF("q_vec_id", "q_embedding")
     def hits(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = hits(Similarity.bruteForceTopK(qs, cands, k = 10))
+    val exact = hits(Retrieval.knnCosine(qs, cands, k = 10))
     // generous single-table params: every pair shares a bucket often enough
     val a = Similarity.brpLshTopK(qs, cands, k = 10, bucketLength = 4.0,
       numHashTables = 4)
@@ -93,7 +93,7 @@ class HybridSaltedSpec extends SparkSpec {
     def hits(df: org.apache.spark.sql.DataFrame) =
       df.select("q_vec_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = hits(Similarity.bruteForceTopK(qs, cands, k = 5))
+    val exact = hits(Retrieval.knnCosine(qs, cands, k = 5))
     val single = Similarity.lshTopK(qs, cands, k = 5, dims = 4, probes = 1)
     val multi = Similarity.lshTopK(qs, cands, k = 5, dims = 4, probes = 5)
     val dups = multi.groupBy("q_vec_id", "vec_id").count()
@@ -119,7 +119,7 @@ class HybridSaltedSpec extends SparkSpec {
     def vec() = Seq.fill(16)(rnd.nextFloat() * 2 - 1)
     val cands = Seq.tabulate(200)(i => (i.toLong, vec())).toDF("vec_id", "embedding")
     val qs = Seq.tabulate(3)(i => (i.toLong, vec())).toDF("q_vec_id", "q_embedding")
-    val exact = Similarity.bruteForceTopK(qs, cands, k = 5)
+    val exact = Retrieval.knnCosine(qs, cands, k = 5)
     val out = Similarity.recallAudit(exact, Seq(
       // nprobe == nlist probes everything → exact → recall must be 1.0
       "ivf_all" -> Similarity.ivfTopK(qs, cands, k = 5, nlist = 4, nprobe = 4),
@@ -168,7 +168,7 @@ class HybridSaltedSpec extends SparkSpec {
     // branch construction has its own driver-state jobs (IVF collects
     // its codebook sample) — build everything first, then isolate the
     // jobs recallAudit itself runs
-    val exact = Similarity.bruteForceTopK(qs, cands, k = 5)
+    val exact = Retrieval.knnCosine(qs, cands, k = 5)
     val branches = Seq("a" -> Similarity.lshTopK(qs, cands, k = 5, dims = 4),
       "b" -> Similarity.ivfTopK(qs, cands, k = 5, nlist = 4, nprobe = 2))
     spark.sparkContext.addSparkListener(listener)

@@ -25,6 +25,12 @@ class IvfIndexSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
 
+  /** Parquet file count per `cell=<c>` directory under `root`. */
+  private def cellFiles(root: String): Map[String, Int] =
+    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+
   test("persisted probe equals in-query ivfTopK row for row") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
     val cands = vecs(300, 16, seed = 5)
@@ -190,56 +196,63 @@ class IvfIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
     val base = vecs(120, 16, seed = 13)
     IvfIndex.build(base, dir, nlist = 4)
-    // several appends -> several files per touched cell
+    // several committed batches, each written by several tasks -> several
+    // files per touched cell across appends/
     for (s <- 1 to 3)
-      IvfIndex.append(vecs(40, 16, seed = 100 + s)
-        .withColumn("vec_id", col("vec_id") + s * 1000L), dir)
-    def parquetFiles() = {
-      val root = new java.io.File(s"$dir/vectors")
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("cell="))
-        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-    }
+      IvfIndex.append(vecs(40, 16, seed = 100 + s).repartition(3)
+        .withColumn("vec_id", col("vec_id") + s * 1000L), dir, batchId = Some(s.toLong))
     val qs = vecs(3, 16, seed = 55)
       .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding"))
     val before = rows(IvfIndex.probe(spark, dir, qs, k = 10, nprobe = 4))
-    val filesBefore = parquetFiles()
-    assert(filesBefore.values.max > 1, s"appends should accrete files: $filesBefore")
-    val total = IvfIndex.compact(spark, dir)
-    val filesAfter = parquetFiles()
-    assert(filesAfter.keySet == filesBefore.keySet, "partition layout must survive")
+    val appended = (1 to 3).map(s => cellFiles(s"$dir/appends/batch=$s"))
+    assert(appended.flatMap(_.values).max > 1, s"appends should accrete files: $appended")
+    val cellsBefore = cellFiles(s"$dir/vectors").keySet ++ appended.flatMap(_.keySet)
+    val total = IvfIndex.compact(spark, dir) // 120 appended vs 120 base: fold due
+    val filesAfter = cellFiles(s"$dir/vectors")
+    assert(filesAfter.keySet == cellsBefore, "partition layout must survive")
     assert(filesAfter.values.forall(_ == 1), s"expected 1 file per cell: $filesAfter")
     assert(total == filesAfter.values.sum)
+    assert(!new java.io.File(s"$dir/appends/batch=1").exists())
     assert(rows(IvfIndex.probe(spark, dir, qs, k = 10, nprobe = 4)) == before)
   }
 
-  test("a crash between compact's swap renames is recovered; work area stays outside vectors/") {
+  test("build over a multi-partition input writes one parquet file per cell") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    IvfIndex.build(vecs(120, 16, seed = 23), dir, nlist = 4)
-    val qs = vecs(3, 16, seed = 66)
-      .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding"))
-    val before = rows(IvfIndex.probe(spark, dir, qs, k = 10, nprobe = 4))
-    // simulate the worst crash point of a per-leaf compact: tmp fully
-    // written in the work area, dst already renamed to bak, process dies
-    // before tmp -> dst (the leaf is GONE from vectors/)
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    val leaf = new java.io.File(s"$dir/vectors").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell=")).head.getName
-    val leafPath = new org.apache.hadoop.fs.Path(s"$dir/vectors/$leaf")
-    spark.read.parquet(leafPath.toString).repartition(1)
-      .write.parquet(s"$dir/compact_work/${leaf}_compact_tmp")
-    assert(fs.rename(leafPath,
-      new org.apache.hadoop.fs.Path(s"$dir/compact_work/${leaf}_compact_bak")))
-    // NO stray partition dirs pollute the root while crashed: the swap
-    // siblings are in compact_work, not vectors/
-    val strays = new java.io.File(s"$dir/vectors").listFiles()
-      .filter(_.isDirectory).map(_.getName).filterNot(_.matches("cell=\\d+"))
-    assert(strays.isEmpty, s"partition root polluted: ${strays.mkString(",")}")
-    // next compact recovers the interrupted swap first, then compacts
-    IvfIndex.compact(spark, dir)
-    assert(rows(IvfIndex.probe(spark, dir, qs, k = 10, nprobe = 4)) == before)
-    assert(!new java.io.File(s"$dir/compact_work").exists())
+    val cands = vecs(400, 16, seed = 21).repartition(4)
+    assert(cands.rdd.getNumPartitions >= 2)
+    IvfIndex.build(cands, dir, nlist = 4)
+    val files = cellFiles(s"$dir/vectors")
+    assert(files.size == 4 && files.values.forall(_ == 1),
+      s"expected one file in each of 4 cells: $files")
   }
 
+  test("a fold under a small advisory size splits the big cell and keeps small cells whole") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    IvfIndex.build(vecs(40, 16, seed = 33), dir, nlist = 4)
+    // near-copies of centroid 0 all land in cell 0, which outgrows the
+    // advisory size; written by 4 tasks, so the fold reads it from
+    // several map outputs it can split along
+    val c0 = IvfIndex.centroids(spark, dir).head._2
+    val rnd = new scala.util.Random(331)
+    val big = Seq.tabulate(3000)(i =>
+      (100000L + i, c0.map(x => x + (rnd.nextFloat() - 0.5f) * 0.01f)))
+      .toDF("vec_id", "embedding").repartition(4)
+    IvfIndex.append(big, dir, batchId = Some(1L))
+    val qs = vecs(3, 16, seed = 57)
+      .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding"))
+    val before = rows(IvfIndex.probe(spark, dir, qs, k = 20, nprobe = 2))
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "16k")
+    try IvfIndex.compact(spark, dir, foldMinRatio = 0.0)
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(spark.conf.getOption(key) == saved)
+    val files = cellFiles(s"$dir/vectors")
+    assert(files.size == 4, s"every cell keeps its directory: $files")
+    assert(files("cell=0") > 1, s"the big cell must be split: $files")
+    assert((files - "cell=0").values.forall(_ == 1), s"small cells stay one file: $files")
+    assert(rows(IvfIndex.probe(spark, dir, qs, k = 20, nprobe = 2)) == before)
+  }
   test("the fold is amortized: tiny appends stay put until the ratio (or 0.0) says fold") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
     IvfIndex.build(vecs(400, 16, seed = 59), dir, nlist = 4)
@@ -321,51 +334,6 @@ class IvfIndexSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/appends/batch=5").exists(),
       "the un-folded batch itself must survive the sweep")
     assert(rows(IvfIndex.probe(spark, dir, qs, k = 500, nprobe = 4)) == before)
-  }
-
-  test("compact recovers a crashed leaf swap BEFORE folding appends — no row lost") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    IvfIndex.build(vecs(120, 16, seed = 37), dir, nlist = 4)
-    IvfIndex.append(vecs(40, 16, seed = 371).withColumn("vec_id", col("vec_id") + 7000L),
-      dir, batchId = Some(1L))
-    val qs = vecs(3, 16, seed = 73)
-      .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding"))
-    val before = rows(IvfIndex.probe(spark, dir, qs, k = 200, nprobe = 4))
-    // crash a leaf swap: the leaf lives only in compact_work's bak while
-    // committed appends are ALSO pending — the dangerous combination:
-    // folding first would rewrite the index without the leaf's rows
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    val leaf = new java.io.File(s"$dir/vectors").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell=")).head.getName
-    spark.read.parquet(s"$dir/vectors/$leaf").repartition(1)
-      .write.parquet(s"$dir/compact_work/${leaf}_compact_tmp")
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/vectors/$leaf"),
-      new org.apache.hadoop.fs.Path(s"$dir/compact_work/${leaf}_compact_bak")))
-    IvfIndex.compact(spark, dir)
-    assert(rows(IvfIndex.probe(spark, dir, qs, k = 200, nprobe = 4)) == before,
-      "recovery must restore the crashed leaf before the fold rewrites the index")
-  }
-
-  test("a PROBE heals a crashed leaf swap — no silently missing cell on the read path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    IvfIndex.build(vecs(120, 16, seed = 41), dir, nlist = 4)
-    val qs = vecs(3, 16, seed = 74)
-      .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding"))
-    val before = rows(IvfIndex.probe(spark, dir, qs, k = 200, nprobe = 4))
-    // crash a leaf swap with NO compact to clean it up: the cell exists
-    // only in compact_work, the index dir looks healthy — a probe that
-    // doesn't heal would silently drop every vector in that cell forever
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    val leaf = new java.io.File(s"$dir/vectors").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell=")).head.getName
-    spark.read.parquet(s"$dir/vectors/$leaf").repartition(1)
-      .write.parquet(s"$dir/compact_work/${leaf}_compact_tmp")
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/vectors/$leaf"),
-      new org.apache.hadoop.fs.Path(s"$dir/compact_work/${leaf}_compact_bak")))
-    assert(rows(IvfIndex.probe(spark, dir, qs, k = 200, nprobe = 4)) == before,
-      "the read path must restore the crashed leaf, not serve a partial index")
-    assert(!new java.io.File(s"$dir/compact_work").exists(),
-      "the healed work area must be cleaned up")
   }
 
   test("the folded-batch manifest is bounded by the retention window") {

@@ -1,14 +1,17 @@
 package graft
 
-import graft.operators.Unigram
+import graft.operators.{Unigram, UrlOps}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** The interpreted `aggregate`-expression forms of the subword kernels
-  * in `graft.functions` (`GreedyPiecesExpr`, `UnigramCost`,
-  * `UnigramPieces`). Higher-order functions are CodegenFallback, which
-  * is why the native kernels replaced them; they stay here as the
-  * reference each kernel's parity spec checks row for row. */
+/** The interpreted forms of native kernels in `graft.functions`: the
+  * `aggregate`-expression forms of the subword kernels
+  * (`GreedyPiecesExpr`, `UnigramCost`, `UnigramPieces`) and the
+  * regexp/when-chain forms of the URL kernels (`CanonicalizeUrl`,
+  * `UrlHost`, `ResolveUrl`, `RobotsAllowedExpr`). Higher-order functions
+  * are CodegenFallback and regexp chains re-scan each row, which is why
+  * the native kernels replaced them; they stay here as the reference
+  * each kernel's parity spec checks row for row. */
 object ReferenceForms {
 
   /** The composed `aggregate`-expression reference form of
@@ -154,5 +157,81 @@ object ReferenceForms {
       },
       acc => reverse(acc.getField("rev")))
     walked
+  }
+
+  /** The when-chain form of [[graft.operators.UrlOps.robotsAllowed]]
+    * (parity with the native matcher: UrlKernelsSpec) — the shape the
+    * DuckDB oracles replay. */
+  def robotsAllowedWhenChain(rules: UrlOps.RobotsRules)(path: Column): Column = {
+    // (specificity when matched, allow) per rule; fold to the best
+    // (longest pattern, allow-on-tie). Wildcard-free patterns keep the
+    // cheap startsWith; wildcards go through the RFC regex.
+    val scored = rules.rules.map { case (isAllow, pattern) =>
+      val matches =
+        if (pattern.contains('*') || pattern.endsWith("$"))
+          path.rlike(UrlOps.robotsPatternRegex(pattern))
+        else path.startsWith(pattern)
+      (when(matches, lit(pattern.length)).otherwise(lit(-1)), isAllow)
+    }
+    scored.foldLeft((lit(-1), lit(true))) { case ((bestLen, bestAllow), (len, isAllow)) =>
+      val better = (len > bestLen) || (len === bestLen && lit(isAllow) && !bestAllow)
+      (when(better, len).otherwise(bestLen),
+        when(better, lit(isAllow)).otherwise(bestAllow))
+    }._2
+  }
+
+  /** The ~8-regexp column form of
+    * [[graft.operators.UrlOps.canonicalizeUrl]] (parity with the native
+    * kernel: UrlKernelsSpec) — the oracle's shape. */
+  def canonicalizeUrlColumnForm(url: Column): Column = {
+    val noFrag = regexp_replace(url, "#.*$", "")
+    val scheme = lower(regexp_extract(noFrag, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
+    // RFC 3986 §6.2.2.1 lowercases only scheme and HOST — userinfo is
+    // case-sensitive, so split it off before lowering (else
+    // http://User@h/ and http://user@h/ collapse to one dedup key)
+    val authority = regexp_extract(noFrag, "^[^:/?#]+://([^/?#]+)", 1)
+    val userinfo = regexp_extract(authority, "^([^@]*@)", 1)
+    val hostPort = lower(regexp_replace(authority, "^[^@]*@", ""))
+    val bareHost = when(scheme === "http", regexp_replace(hostPort, ":80$", ""))
+      .when(scheme === "https", regexp_replace(hostPort, ":443$", ""))
+      .otherwise(hostPort)
+    val host = concat(userinfo, bareHost)
+    val rawPath = regexp_extract(noFrag, "^[^:/?#]+://[^/?#]+([^?#]*)", 1)
+    val path = regexp_replace(rawPath, "(.)/$", "$1") // non-root trailing slash
+    val query = regexp_extract(noFrag, "\\?([^#]*)", 1)
+    val params = filter(split(query, "&"),
+      p => p =!= "" && !p.rlike(UrlOps.trackingRe))
+    val sortedQ = array_join(array_sort(params), "&")
+    // a URL without "://" is left untouched (not a canonicalizable
+    // absolute URL — less cleaning, never a mangled key). An EMPTY
+    // path normalizes to "/" (RFC 3986 §6.2.3: http://h and http://h/
+    // are the same resource — the single most common dup pair).
+    when(scheme === "", url).otherwise(concat(
+      scheme, lit("://"), host,
+      when(path === "", lit("/")).otherwise(path),
+      when(sortedQ === "", lit("")).otherwise(concat(lit("?"), sortedQ))))
+  }
+
+  /** The regexp form of [[graft.operators.UrlOps.urlHost]] (parity with
+    * the native kernel: UrlKernelsSpec). */
+  def urlHostColumnForm(url: Column): Column =
+    lower(regexp_extract(url, "^[^:/?#]+://(?:[^/?#@]*@)?([^/?#:]+)", 1))
+
+  /** The when-chain form of [[graft.operators.UrlOps.resolveUrl]]
+    * (parity with the native kernel: UrlKernelsSpec) — the oracle's
+    * shape. */
+  def resolveUrlColumnForm(base: Column, href: Column): Column = {
+    val scheme = regexp_extract(base, "^([A-Za-z][A-Za-z0-9+.-]*):", 1)
+    val origin = regexp_extract(base, "^([^:/?#]+://[^/?#]+)", 1)
+    val basePath = regexp_extract(base, "^[^:/?#]+://[^/?#]+([^?#]*)", 1)
+    val baseDir = when(basePath.contains("/"),
+      regexp_replace(basePath, "/[^/]*$", "/")).otherwise(lit("/"))
+    when(href.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), href)
+      .when(href.startsWith("//"), concat(scheme, lit(":"), href))
+      .when(href.startsWith("/"), concat(origin, href))
+      .when(href === "" || href.startsWith("#"), base)
+      .when(href.startsWith("?"), concat(origin,
+        when(basePath === "", lit("/")).otherwise(basePath), href))
+      .otherwise(concat(origin, baseDir, href))
   }
 }

@@ -17,7 +17,7 @@ class UrlKernelsSpec extends SparkSpec {
   private def checkCanonical(urls: Seq[String]): Unit = {
     val rows = urls.toDF("url")
       .select(col("url"), UrlOps.canonicalizeUrl(col("url")).as("k"),
-        UrlOps.canonicalizeUrlColumnForm(col("url")).as("r"))
+        ReferenceForms.canonicalizeUrlColumnForm(col("url")).as("r"))
       .collect()
     rows.foreach { row =>
       assert(row.getString(1) === row.getString(2),
@@ -29,7 +29,7 @@ class UrlKernelsSpec extends SparkSpec {
     val rows = pairs.toDF("base", "href")
       .select(col("base"), col("href"),
         UrlOps.resolveUrl(col("base"), col("href")).as("k"),
-        UrlOps.resolveUrlColumnForm(col("base"), col("href")).as("r"))
+        ReferenceForms.resolveUrlColumnForm(col("base"), col("href")).as("r"))
       .collect()
     rows.foreach { row =>
       assert(row.getString(2) === row.getString(3),
@@ -86,7 +86,7 @@ class UrlKernelsSpec extends SparkSpec {
       .toDF("base", "href")
     val rows = df.select(
         UrlOps.resolveUrl(col("base"), col("href")).as("k"),
-        UrlOps.resolveUrlColumnForm(col("base"), col("href")).as("r"),
+        ReferenceForms.resolveUrlColumnForm(col("base"), col("href")).as("r"),
         col("base"), col("href"))
       .collect()
     rows.foreach { row =>
@@ -127,7 +127,7 @@ class UrlKernelsSpec extends SparkSpec {
     def check(urls: Seq[String]): Unit = {
       val rows = urls.toDF("url")
         .select(col("url"), UrlOps.urlHost(col("url")).as("k"),
-          UrlOps.urlHostColumnForm(col("url")).as("r"))
+          ReferenceForms.urlHostColumnForm(col("url")).as("r"))
         .collect()
       rows.foreach { row =>
         assert(row.getString(1) === row.getString(2),
@@ -167,7 +167,7 @@ class UrlKernelsSpec extends SparkSpec {
     ruleSets.zipWithIndex.foreach { case (rules, ri) =>
       val rows = df.select(col("path"),
           UrlOps.robotsAllowed(rules)(col("path")).as("k"),
-          UrlOps.robotsAllowedWhenChain(rules)(col("path")).as("r"))
+          ReferenceForms.robotsAllowedWhenChain(rules)(col("path")).as("r"))
         .collect()
       rows.foreach { row =>
         assert(row.getBoolean(1) === row.getBoolean(2),
