@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{CosineSimilarity, CountContained}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
+import graft.functions.{CosineSimilarity, CountContained, Kernel}
 
 /** Engine SQL surface: `spark.sql.extensions=graft.GraftExtensions`
   * registers the engine's native functions so plain `spark.sql(...)`
@@ -12,40 +13,37 @@ import graft.functions.{CosineSimilarity, CountContained}
   * Connect server-side).
   *
   * Currently: `cosine_sim(ARRAY<FLOAT>, ARRAY<FLOAT>) -> DOUBLE`
-  * ([[graft.functions.CosineSimilarity]]).
+  * ([[graft.functions.CosineSimilarity]]) and
+  * `count_contained(ARRAY<STRING>, STRING) -> INT`
+  * ([[graft.functions.CountContained.count]]; its declared input types
+  * give SQL callers Spark's implicit casts and analysis-time check).
   */
 object GraftExtensions {
+  /** Each function's name and builder; both registration paths read it. */
+  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    binary("cosine_sim")(CosineSimilarity(_, _)),
+    binary("count_contained")((words, text) =>
+      Kernel.expr(CountContained, "count", IntegerType, Seq(words, text),
+        inputTypes = Seq(ArrayType(StringType), StringType))))
+
+  private def binary(name: String)(build: (Expression, Expression) => Expression) =
+    name -> { (children: Seq[Expression]) =>
+      require(children.size == 2, s"$name takes exactly 2 arguments")
+      build(children.head, children(1))
+    }
+
   /** Register the same functions on an already-running session (for
     * sessions not built with the extensions config). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.GraftColumns.registerFunction(spark, "cosine_sim", {
-      children =>
-        require(children.size == 2, "cosine_sim takes exactly 2 arguments")
-        CosineSimilarity(children.head, children(1))
-    })
-    org.apache.spark.sql.GraftColumns.registerFunction(spark, "count_contained", {
-      children =>
-        require(children.size == 2, "count_contained takes exactly 2 arguments")
-        CountContained(children.head, children(1))
-    })
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    functions.foreach { case (name, builder) =>
+      org.apache.spark.sql.GraftColumns.registerFunction(spark, name, builder)
+    }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2, "cosine_sim takes exactly 2 arguments")
-        CosineSimilarity(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("count_contained"),
-      new ExpressionInfo(classOf[CountContained].getName, "count_contained"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 2, "count_contained takes exactly 2 arguments")
-        CountContained(children.head, children(1))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
 }

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernel for the keyword-containment score (reference
@@ -14,31 +10,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The composed form `size(filter(words, w => instr(text, w) > 0))` is a
   * higher-order function — interpreted row-at-a-time, a lambda frame per
-  * word. This expression compiles to a flat loop over the (broadcast,
-  * tiny) words array calling `UTF8String.contains` — byte-level substring
-  * match, identical semantics to `instr(...) > 0` — and stays inside
+  * word. This kernel is a flat loop over the (broadcast, tiny) words
+  * array calling `UTF8String.contains` — byte-level substring match,
+  * identical semantics to `instr(...) > 0` — and stays inside
   * whole-stage codegen, so the retrieval theta-scan fuses scan → score →
   * filter into one loop. Null words count as not-contained; null inputs
-  * yield null (BinaryExpression default).
+  * yield null.
   */
-case class CountContained(left: Expression, right: Expression)
-    extends BinaryExpression {
+object CountContained {
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(StringType, _), StringType) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"count_contained expects (ARRAY<STRING>, STRING), got (${l.simpleString}, ${r.simpleString})")
-  }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "count_contained"
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CountContained =
-    copy(left = newLeft, right = newRight)
-
-  override def nullSafeEval(wordsAny: Any, textAny: Any): Any = {
-    val words = wordsAny.asInstanceOf[ArrayData]
-    val text = textAny.asInstanceOf[UTF8String]
+  /** The per-row loop the generated code calls. */
+  def count(words: ArrayData, text: UTF8String): Int = {
     var c = 0; var i = 0
     val n = words.numElements()
     while (i < n) {
@@ -47,18 +29,4 @@ case class CountContained(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (words, text) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      s"""
-         |int $n = $words.numElements();
-         |int $c = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$words.isNullAt($i) && $text.contains($words.getUTF8String($i))) $c++;
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
 }

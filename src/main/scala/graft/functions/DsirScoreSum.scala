@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native kernel for DSIR's stateless per-row scoring fold
   * (`graft.operators.Dsir.scoreWith`): `dsir_score_sum(feats
@@ -17,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * an INTERPRETED expression tree per feature (measured 6.5 s at sf0.1
   * where the equivalent broadcast-join scoring pass costs 1.6 s — the
   * join path's per-feature hash runs in a codegen'd post-explode
-  * projection instead). This expression is one flat JVM loop — MD5 via
+  * projection instead). This kernel is one flat JVM loop — MD5 via
   * a thread-local digest, the 60-bit prefix extracted from the raw
   * digest bytes (no hex string round-trip), an O(1) dense-array lookup
   * — and stays inside whole-stage codegen, so scan → featurize → score
@@ -34,32 +30,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * Null features (unreachable from the tokenizer, kept total) take
   * `default6`, matching the join path's missed-lookup coalesce.
   */
-case class DsirScoreSum(child: Expression, lut: IndexedSeq[Long], default6: Long)
-    extends UnaryExpression {
-
-  private lazy val lutArr: Array[Long] = lut.toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"dsir_score_sum expects ARRAY<STRING>, got ${t.simpleString}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dsir_score_sum"
-
-  override protected def withNewChildInternal(newChild: Expression): DsirScoreSum =
-    copy(child = newChild)
-
-  override def nullSafeEval(featsAny: Any): Any =
-    DsirScoreSum.score(featsAny.asInstanceOf[ArrayData], lutArr, default6)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, feats => {
-      val lutRef = ctx.addReferenceObj("dsirLut", lutArr, "long[]")
-      s"${ev.value} = graft.functions.DsirScoreSum.score($feats, $lutRef, ${default6}L);"
-    })
-}
-
 object DsirScoreSum {
 
   private val md5 = new ThreadLocal[java.security.MessageDigest] {

@@ -3,10 +3,6 @@ package graft.functions
 import java.nio.charset.{CharacterCodingException, StandardCharsets}
 import java.nio.charset.CodingErrorAction
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `fix_mojibake(text STRING) -> STRING`: repair the dominant
@@ -39,27 +35,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * fixture built by the inverse transform (encode UTF-8 → decode
   * cp1252), so the driver check pins the full repair table without
   * needing ftfy on the oracle side. */
-case class FixMojibake(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"fix_mojibake expects STRING, got ${t.simpleString}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "fix_mojibake"
-
-  override protected def withNewChildInternal(newChild: Expression): FixMojibake =
-    copy(child = newChild)
-
-  override def nullSafeEval(text: Any): Any =
-    FixMojibake.fix(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text =>
-      s"${ev.value} = graft.functions.FixMojibake.fix($text);")
-}
-
 object FixMojibake {
 
   private val Cp1252 = java.nio.charset.Charset.forName("windows-1252")

@@ -1,11 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native one-pass kernel for the Gopher quality counters
@@ -49,28 +45,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    token can never match twice, and a match never consumes the
   *    following token's boundary).
   *
-  * Null text yields null (UnaryExpression default). */
-case class GopherCounts(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"gopher_counts expects STRING, got ${t.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "gopher_counts"
-
-  override protected def withNewChildInternal(newChild: Expression): GopherCounts =
-    copy(child = newChild)
-
-  override def nullSafeEval(textAny: Any): Any =
-    GopherCounts.counts(textAny.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      text => s"${ev.value} = graft.functions.GopherCounts.counts($text);")
-}
-
+  * Null text yields null. */
 object GopherCounts {
 
   final val NWords = 0

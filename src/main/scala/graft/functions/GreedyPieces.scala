@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernel for the greedy longest-match subword ENCODE
@@ -36,38 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Substrings are by Java char — the vocabulary is `[a-z]+` by
   * construction where char, code point and byte agree.
   */
-case class GreedyPiecesExpr(child: Expression, initial: Seq[String],
-                            cont: Seq[String], marker: String)
-    extends UnaryExpression {
-
-  @transient private lazy val initSets = GreedyPiecesExpr.byLength(initial)
-  @transient private lazy val contSets = GreedyPiecesExpr.byLength(cont)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"greedy_pieces expects STRING, got ${t.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "greedy_pieces"
-  override protected def withNewChildInternal(newChild: Expression): GreedyPiecesExpr =
-    copy(child = newChild)
-
-  override def nullSafeEval(wordAny: Any): Any =
-    GreedyPiecesExpr.encode(wordAny.asInstanceOf[UTF8String],
-      initSets, contSets, marker)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, word => {
-      val initRef = ctx.addReferenceObj("gpInit", initSets, "java.util.HashSet[]")
-      val contRef = ctx.addReferenceObj("gpCont", contSets, "java.util.HashSet[]")
-      val markRef = ctx.addReferenceObj("gpMark", marker, "java.lang.String")
-      s"${ev.value} = graft.functions.GreedyPiecesExpr.encode(" +
-        s"$word, $initRef, $contRef, $markRef);"
-    })
-}
-
-object GreedyPiecesExpr {
+object GreedyPieces {
 
   /** Inventory → hash sets indexed by piece length (index l holds the
     * length-l pieces; 0 and 1 unused — the probe floor is the

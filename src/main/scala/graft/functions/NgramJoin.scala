@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernel for space-joined word n-gram construction — the
@@ -32,28 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `distinct = true` reproduces `array_distinct`: first occurrence
   *    kept, order preserved.
   */
-case class NgramJoin(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression {
-  require(n >= 1, s"ngram_join needs n >= 1, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ngram_join expects ARRAY<STRING>, got ${t.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "ngram_join"
-  override protected def withNewChildInternal(newChild: Expression): NgramJoin =
-    copy(child = newChild)
-
-  override def nullSafeEval(wordsAny: Any): Any =
-    NgramJoin.ngrams(wordsAny.asInstanceOf[ArrayData], n, distinct)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, words =>
-      s"${ev.value} = graft.functions.NgramJoin.ngrams($words, $n, $distinct);")
-}
-
 object NgramJoin {
 
   private val Space = UTF8String.fromString(" ")

@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `normalize_text(text STRING) -> STRING`: Unicode normalization —
@@ -12,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * same text to a reader but different bytes to every dedup key,
   * MinHash shingle, and tokenizer vocab lookup; crawled HTML mixes
   * both freely). Spark has no built-in for this; the kernel is the
-  * JDK's `java.text.Normalizer` behind one codegen'd expression node.
+  * JDK's `java.text.Normalizer` behind one codegen'd static call.
   *
   * `form` is plan-time: NFC (the corpus default — W3C's choice for
   * the web), NFD, NFKC (the aggressive variant Dolma/Gopher-style
@@ -28,31 +24,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * (ICU tables) implement the same Unicode normalization algorithm;
   * the `nfc_normalize` driver query pins equality over synthesized
   * composed/decomposed pairs. Null in, null out. */
-case class NormalizeText(child: Expression, form: String = "NFC")
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if NormalizeText.Forms.contains(form) =>
-      TypeCheckResult.TypeCheckSuccess
-    case StringType => TypeCheckResult.TypeCheckFailure(
-      s"normalize_text form must be one of ${NormalizeText.Forms.mkString("/")}, got $form")
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"normalize_text expects STRING, got ${t.simpleString}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "normalize_text"
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeText =
-    copy(child = newChild)
-
-  override def nullSafeEval(text: Any): Any =
-    NormalizeText.normalize(text.asInstanceOf[UTF8String], form)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text =>
-      s"""${ev.value} = graft.functions.NormalizeText.normalize($text, "$form");""")
-}
-
 object NormalizeText {
 
   val Forms: Set[String] = Set("NFC", "NFD", "NFKC", "NFKD")

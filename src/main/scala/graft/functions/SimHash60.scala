@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernel for the per-row 60-bit SimHash fingerprint
@@ -29,29 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * split with limit −1, so an empty trimmed text yields the single
   * empty token whose hash the batch form also folds. Vote rule: bit b
   * of the fingerprint is set iff Σ_tokens (±1 on `(h >> b) & 1`) > 0.
-  * Null text yields null (UnaryExpression default).
+  * Null text yields null.
   */
-case class SimHash60(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"simhash60 expects STRING, got ${t.simpleString}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash60"
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash60 =
-    copy(child = newChild)
-
-  override def nullSafeEval(textAny: Any): Any =
-    SimHash60.fp60(textAny.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      text => s"${ev.value} = graft.functions.SimHash60.fp60($text);")
-}
-
 object SimHash60 {
 
   private val Ws = java.util.regex.Pattern.compile("\\s+")

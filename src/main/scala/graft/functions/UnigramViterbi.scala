@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernels for the unigram-LM Viterbi DP
@@ -116,74 +112,10 @@ object UnigramViterbi {
   }
 
   /** Driver-side model → the kernel's HashMap (built once per plan,
-    * shipped via the expression reference object). */
+    * shipped as an object literal, see [[Kernel]]). */
   def toJavaMap(pieces: Map[String, Long]): java.util.HashMap[String, java.lang.Long] = {
     val m = new java.util.HashMap[String, java.lang.Long](pieces.size * 2)
     pieces.foreach { case (k, v) => m.put(k, java.lang.Long.valueOf(v)) }
     m
   }
-}
-
-/** `unigram_cost(word) -> LONG` — [[UnigramViterbi.cost]] as a codegen
-  * expression; null for out-of-alphabet words. */
-case class UnigramCost(child: Expression, pieces: Map[String, Long],
-                       big: Long, probeLen: Int) extends UnaryExpression {
-  @transient private lazy val jmap = UnigramViterbi.toJavaMap(pieces)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"unigram_cost expects STRING, got ${t.simpleString}")
-  }
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "unigram_cost"
-  override protected def withNewChildInternal(newChild: Expression): UnigramCost =
-    copy(child = newChild)
-
-  override def nullSafeEval(wordAny: Any): Any =
-    UnigramViterbi.cost(wordAny.asInstanceOf[UTF8String], jmap, big, probeLen)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, word => {
-      val mapRef = ctx.addReferenceObj("ugCostMap", jmap, "java.util.HashMap")
-      s"""
-         |java.lang.Long ugc = graft.functions.UnigramViterbi.cost(
-         |  $word, $mapRef, ${big}L, $probeLen);
-         |${ev.isNull} = (ugc == null);
-         |${ev.value} = ${ev.isNull} ? -1L : ugc.longValue();
-       """.stripMargin
-    })
-}
-
-/** `unigram_pieces(word) -> ARRAY<STRING>` — [[UnigramViterbi.pieces]]
-  * as a codegen expression; null for out-of-alphabet words. */
-case class UnigramPieces(child: Expression, pieces: Map[String, Long],
-                         big: Long, probeLen: Int) extends UnaryExpression {
-  @transient private lazy val jmap = UnigramViterbi.toJavaMap(pieces)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"unigram_pieces expects STRING, got ${t.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "unigram_pieces"
-  override protected def withNewChildInternal(newChild: Expression): UnigramPieces =
-    copy(child = newChild)
-
-  override def nullSafeEval(wordAny: Any): Any =
-    UnigramViterbi.pieces(wordAny.asInstanceOf[UTF8String], jmap, big, probeLen)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, word => {
-      val mapRef = ctx.addReferenceObj("ugPiecesMap", jmap, "java.util.HashMap")
-      s"""
-         |org.apache.spark.sql.catalyst.util.GenericArrayData ugp =
-         |  graft.functions.UnigramViterbi.pieces($word, $mapRef, ${big}L, $probeLen);
-         |${ev.isNull} = (ugp == null);
-         |${ev.value} = ugp;
-       """.stripMargin
-    })
 }

@@ -2,12 +2,6 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native one-pass kernels for the crawl tier's per-URL functions
@@ -20,7 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * filter/sort; the robots matcher is a when-chain per rule), and the
   * crawl flagship's drill attributes ~35% of each evaluation to
   * driver-side Catalyst work on exactly these shapes (SCALING.md r17).
-  * Each kernel is ONE expression node with a flat char-scan JVM body —
+  * Each kernel is ONE static call ([[Kernel]]) with a flat char-scan
+  * JVM body —
   * the plan shrinks by two orders of magnitude on the discover leg,
   * analysis/optimization cost drops with it, and the per-row work
   * stays inside whole-stage codegen.
@@ -201,10 +196,14 @@ object UrlKernels {
     UTF8String.fromString(sb.toString)
   }
 
-  /** The `url_host` scan (see [[graft.functions.UrlHost]]): anchored
-    * `scheme://`, optional greedy userinfo-to-first-`@`, then the host
-    * run over `[^/?#:]` — with the empty-host backtrack that re-parses
-    * the userinfo run as the host. */
+  /** The lowercased host of an absolute URL, userinfo and port
+    * excluded; `""` for non-absolute input. The scan replaces the column
+    * form `lower(regexp_extract(url, "^[^:/?#]+://(?:[^/?#@]*@)?([^/?#:]+)", 1))`:
+    * anchored `scheme://`, optional greedy userinfo-to-first-`@`, then
+    * the host run over `[^/?#:]` — including the regex's BACKTRACKING
+    * corner: when the userinfo group consumes up to an `@` but the host
+    * class then fails (e.g. `http://user@:80/`), the regex retries
+    * WITHOUT the group and the `user@` run itself becomes the host. */
   def host(url: UTF8String): UTF8String = {
     val s = url.toString
     // `^[^:/?#]+://` — at least one non-special char, then "://"
@@ -235,10 +234,12 @@ object UrlKernels {
 
   /** RFC 3986 §5 resolution, identical to the UrlOps column
     * formulation (see its scaladoc for the case list and the
-    * documented dot-segment subset). `base` may be null: an href
-    * carrying its own scheme still resolves (to itself); every other
-    * case yields null — exactly the column form's null algebra. */
+    * documented dot-segment subset). A null href is null. `base` may
+    * be null: an href carrying its own scheme still resolves (to
+    * itself); every other case yields null — exactly the column form's
+    * null algebra. */
   def resolve(base: UTF8String, href: UTF8String): UTF8String = {
+    if (href == null) return null
     val h = href.toString
     if (hasSchemePrefix(h)) return href
     if (base == null) return null
@@ -280,110 +281,15 @@ object UrlKernels {
   }
 }
 
-/** `url_host(url STRING) -> STRING` — the lowercased host of an
-  * absolute URL, userinfo and port excluded; `""` for non-absolute
-  * input. One node replacing the column form
-  * `lower(regexp_extract(url, "^[^:/?#]+://(?:[^/?#@]*@)?([^/?#:]+)", 1))`
-  * — including its BACKTRACKING corner: when the optional userinfo
-  * group consumes up to an `@` but the host class (`[^/?#:]+`) then
-  * fails (e.g. `http://user@:80/`), the regex retries WITHOUT the
-  * group and the `user@` run itself becomes the host. Fuzz-pinned
-  * against the column form (UrlKernelsSpec). */
-case class UrlHost(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"url_host expects STRING, got ${t.simpleString}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "url_host"
-
-  override protected def withNewChildInternal(newChild: Expression): UrlHost =
-    copy(child = newChild)
-
-  override def nullSafeEval(url: Any): Any =
-    UrlKernels.host(url.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      url => s"${ev.value} = graft.functions.UrlKernels.host($url);")
-}
-
-/** `canonicalize_url(url STRING) -> STRING` — one expression node for
-  * the whole §6 normalization chain. Null in, null out (the column
-  * form's concat-over-null algebra collapses to the same). */
-case class CanonicalizeUrl(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"canonicalize_url expects STRING, got ${t.simpleString}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "canonicalize_url"
-
-  override protected def withNewChildInternal(newChild: Expression): CanonicalizeUrl =
-    copy(child = newChild)
-
-  override def nullSafeEval(url: Any): Any =
-    UrlKernels.canonicalize(url.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev,
-      url => s"${ev.value} = graft.functions.UrlKernels.canonicalize($url);")
-}
-
-/** `resolve_url(base STRING, href STRING) -> STRING` — RFC 3986 §5 in
-  * one node. Null algebra matches the when-chain form: a null href is
-  * null; a null base resolves only hrefs that carry their own scheme. */
-case class ResolveUrl(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"resolve_url expects (STRING, STRING), got (${l.simpleString}, ${r.simpleString})")
-    }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "resolve_url"
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ResolveUrl =
-    copy(left = newLeft, right = newRight)
-
-  override def eval(input: InternalRow): Any = {
-    val href = right.eval(input)
-    if (href == null) return null
-    val base = left.eval(input)
-    UrlKernels.resolve(base.asInstanceOf[UTF8String], href.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val baseGen = left.genCode(ctx)
-    val hrefGen = right.genCode(ctx)
-    ev.copy(code = code"""
-      ${hrefGen.code}
-      boolean ${ev.isNull} = true;
-      UTF8String ${ev.value} = null;
-      if (!${hrefGen.isNull}) {
-        ${baseGen.code}
-        ${ev.value} = graft.functions.UrlKernels.resolve(
-          ${baseGen.isNull} ? null : ${baseGen.value}, ${hrefGen.value});
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-}
-
 /** The RFC 9309 §2.2.2 longest-match evaluator over ONE parsed
   * per-host rule set, precompiled once at plan time: wildcard-free
   * patterns keep a raw `startsWith`, wildcard/`$` patterns compile to
   * the RFC regex. Rule sets are per-host tiny (they ride the plan, not
   * the data), but the PATH column is corpus-sized — this turns the
   * per-rule when-chain (4 Catalyst nodes per rule, quadratic fold
-  * nesting) into one node with a flat loop. A null path is ALLOWED —
-  * the when-chain's fold-over-null algebra, pinned in the spec. */
+  * nesting) into one call of [[allowed]] with a flat loop. A null path
+  * is ALLOWED — the when-chain's fold-over-null algebra, pinned in the
+  * spec. */
 final class RobotsMatcher(rules: Array[(Boolean, String)],
                           regexOf: String => String) extends Serializable {
   private val allows: Array[Boolean] = rules.map(_._1)
@@ -414,36 +320,5 @@ final class RobotsMatcher(rules: Array[(Boolean, String)],
       i += 1
     }
     bestAllow
-  }
-}
-
-/** `robots_allowed(path STRING) -> BOOLEAN` over a plan-time rule set. */
-case class RobotsAllowedExpr(child: Expression, matcher: RobotsMatcher)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"robots_allowed expects STRING, got ${t.simpleString}")
-  }
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "robots_allowed"
-  override def nullable: Boolean = false
-
-  override protected def withNewChildInternal(newChild: Expression): RobotsAllowedExpr =
-    copy(child = newChild)
-
-  override def eval(input: InternalRow): Any =
-    matcher.allowed(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("robotsMatcher", matcher,
-      classOf[RobotsMatcher].getName)
-    val childGen = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${childGen.code}
-      boolean ${ev.isNull} = false;
-      boolean ${ev.value} = $ref.allowed(
-        ${childGen.isNull} ? null : ${childGen.value});""")
   }
 }

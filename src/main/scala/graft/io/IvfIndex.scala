@@ -197,7 +197,7 @@ object IvfIndex {
     * This is the S12-style upsert face of the index: wire it as a
     * Structured Streaming `foreachBatch` sink, passing foreachBatch's
     * OWN `batchId`, to keep the index current as documents stream in
-    * (`ivf_stream_e2e` and its spec do exactly that). With a `batchId` the
+    * (`ivf_stream_e2e` and its spec do exactly that). The
     * write is EXACTLY-ONCE under foreachBatch's at-least-once retries:
     * the batch is staged under a per-ATTEMPT-unique
     * `appends_staging/<id>_<attempt>` and published by a single atomic
@@ -211,93 +211,85 @@ object IvfIndex {
     * every committed batch (cell stays a partition column in both trees,
     * so pruning holds), and [[compact]] folds accumulated batches back
     * into one `vectors/` tree through the build-style whole-index swap —
-    * the LSM-style L0/compaction split.
-    *
-    * Without a `batchId` (ad-hoc, single-shot maintenance) the write is
-    * a plain append into the cell partitions: simplest layout, but a
-    * caller that retries a failed call can duplicate rows — streaming
-    * sinks must pass the id — and its files stay as written until a
-    * later fold rewrites `vectors/`. */
+    * the LSM-style L0/compaction split. `batchId` must be given: `None`
+    * fails before anything is written. */
   def append(newVecs: DataFrame, dir: String,
              idCol: String = "vec_id", vecCol: String = "embedding",
-             batchId: Option[Long] = None): Unit = {
+             batchId: Option[Long]): Unit = {
+    require(batchId.isDefined, s"append to $dir needs the caller's batch id")
     val spark = newVecs.sparkSession
     // deferred: the replayed-batch no-op path below must not pay the
     // centroid sidecar read + collect it will never use
     def assigned = Similarity.assignCells(
       newVecs.select(col(idCol), col(vecCol)), centroids(spark, dir), vecCol)
-    batchId match {
-      case None =>
-        assigned.write.mode("append").partitionBy("cell").parquet(s"$dir/vectors")
-      case Some(b) =>
-        // heal a crashed build/fold swap BEFORE the marker check: with
-        // the index dir missing, exists(committed) is vacuously false
-        // and a replayed batch would re-stage (and re-publish) instead
-        // of no-oping
-        recoverIfMissing(spark, dir)
-        val committed = new org.apache.hadoop.fs.Path(s"$dir/appends/batch=$b")
-        val fs = fsOf(spark, committed)
-        // a replayed batch no-ops on ANY commit record: its dir (not
-        // yet folded), its line in the folded manifest (dir removed by
-        // a fold), or an id at/below the retention low-watermark (line
-        // itself evicted by manifestRetain — the watermark is the
-        // structural guarantee that eviction never reopens exactly-once,
-        // however far behind the tip a replay reaches)
-        val manifest0 = foldedBatches(fs, dir)
-        if (!fs.exists(committed) &&
-            !manifest0.contains(s"batch=$b") && b > foldedWatermark(manifest0)) {
-          // staging is PER-ATTEMPT-unique: a shared path would let a
-          // zombie driver's resumed write interleave with a concurrent
-          // retry staging the same batch (the restarted-driver replay
-          // this feature exists for) and publish a mixed directory. With
-          // unique paths each attempt renames only bytes it wrote alone;
-          // losers either fail the rename (local FS) or nest their
-          // staging INSIDE the winner's published dir (HDFS/object-store
-          // rename-onto-existing-directory semantics) — the nested case
-          // is detected and undone right below.
-          val attempt = java.util.UUID.randomUUID().toString.substring(0, 8)
-          val tmp = new org.apache.hadoop.fs.Path(s"$dir/appends_staging/${b}_$attempt")
-          assigned.write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
-          fs.mkdirs(committed.getParent)
-          if (!fs.rename(tmp, committed)) {
-            // lost a race against a concurrent retry that just published:
-            // fine iff the batch is now committed; anything else is real
-            require(fs.exists(committed), s"commit rename failed for batch $b")
-            fs.delete(tmp, true)
-          }
-          // REVALIDATE against the manifest after publishing: a zombie
-          // attempt can pass the pre-check, stall through a concurrent
-          // commit AND a fold of this very batch, then resume and
-          // publish rows the fold already moved into vectors/ — a
-          // duplicate the manifest can't undo once the next fold unions
-          // it in. The post-publish check closes that ordering: if the
-          // batch is in the manifest, this publish is a stale replay —
-          // remove it (idempotently; a racing replica removing too is
-          // fine). A fold IN FLIGHT during this window is caught by the
-          // fold's own re-list guard instead; the residual exposure is
-          // the fold's re-list-to-rename instant, the same documented
-          // single-writer window as every other rename-based layout here.
-          val manifest1 = foldedBatches(fs, dir)
-          if (manifest1.contains(s"batch=$b") || b <= foldedWatermark(manifest1))
-            fs.delete(committed, true)
-          // NOTE: on HDFS a rename onto an existing dir SUCCEEDS by
-          // moving the source inside it (batch=<b>/<b>_<attempt>/…), so
-          // a losing attempt may believe it published — the sweep below
-          // removes exactly that nested staging (cell= children make a
-          // false match impossible), and [[foldAppends]] sweeps orphans
-          // from attempts that died before reaching it.
-        }
-        // crashed attempts leave orphans — staging dirs, and (cluster
-        // rename semantics) staging nested inside the committed dir.
-        // Sweep both now that the batch is committed (deleting a LIVE
-        // concurrent attempt's staging is also safe: its rename fails or
-        // nests, it sees the committed dir, and its own sweep no-ops)
-        (Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-            s"$dir/appends_staging/${b}_*"))).getOrElse(Array.empty) ++
-         Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-            s"$dir/appends/batch=$b/${b}_*"))).getOrElse(Array.empty))
-          .foreach(s => fs.delete(s.getPath, true))
+    val b = batchId.get
+    // heal a crashed build/fold swap BEFORE the marker check: with
+    // the index dir missing, exists(committed) is vacuously false
+    // and a replayed batch would re-stage (and re-publish) instead
+    // of no-oping
+    recoverIfMissing(spark, dir)
+    val committed = new org.apache.hadoop.fs.Path(s"$dir/appends/batch=$b")
+    val fs = fsOf(spark, committed)
+    // a replayed batch no-ops on ANY commit record: its dir (not
+    // yet folded), its line in the folded manifest (dir removed by
+    // a fold), or an id at/below the retention low-watermark (line
+    // itself evicted by manifestRetain — the watermark is the
+    // structural guarantee that eviction never reopens exactly-once,
+    // however far behind the tip a replay reaches)
+    val manifest0 = foldedBatches(fs, dir)
+    if (!fs.exists(committed) &&
+        !manifest0.contains(s"batch=$b") && b > foldedWatermark(manifest0)) {
+      // staging is PER-ATTEMPT-unique: a shared path would let a
+      // zombie driver's resumed write interleave with a concurrent
+      // retry staging the same batch (the restarted-driver replay
+      // this feature exists for) and publish a mixed directory. With
+      // unique paths each attempt renames only bytes it wrote alone;
+      // losers either fail the rename (local FS) or nest their
+      // staging INSIDE the winner's published dir (HDFS/object-store
+      // rename-onto-existing-directory semantics) — the nested case
+      // is detected and undone right below.
+      val attempt = java.util.UUID.randomUUID().toString.substring(0, 8)
+      val tmp = new org.apache.hadoop.fs.Path(s"$dir/appends_staging/${b}_$attempt")
+      assigned.write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
+      fs.mkdirs(committed.getParent)
+      if (!fs.rename(tmp, committed)) {
+        // lost a race against a concurrent retry that just published:
+        // fine iff the batch is now committed; anything else is real
+        require(fs.exists(committed), s"commit rename failed for batch $b")
+        fs.delete(tmp, true)
+      }
+      // REVALIDATE against the manifest after publishing: a zombie
+      // attempt can pass the pre-check, stall through a concurrent
+      // commit AND a fold of this very batch, then resume and
+      // publish rows the fold already moved into vectors/ — a
+      // duplicate the manifest can't undo once the next fold unions
+      // it in. The post-publish check closes that ordering: if the
+      // batch is in the manifest, this publish is a stale replay —
+      // remove it (idempotently; a racing replica removing too is
+      // fine). A fold IN FLIGHT during this window is caught by the
+      // fold's own re-list guard instead; the residual exposure is
+      // the fold's re-list-to-rename instant, the same documented
+      // single-writer window as every other rename-based layout here.
+      val manifest1 = foldedBatches(fs, dir)
+      if (manifest1.contains(s"batch=$b") || b <= foldedWatermark(manifest1))
+        fs.delete(committed, true)
+      // NOTE: on HDFS a rename onto an existing dir SUCCEEDS by
+      // moving the source inside it (batch=<b>/<b>_<attempt>/…), so
+      // a losing attempt may believe it published — the sweep below
+      // removes exactly that nested staging (cell= children make a
+      // false match impossible), and [[foldAppends]] sweeps orphans
+      // from attempts that died before reaching it.
     }
+    // crashed attempts leave orphans — staging dirs, and (cluster
+    // rename semantics) staging nested inside the committed dir.
+    // Sweep both now that the batch is committed (deleting a LIVE
+    // concurrent attempt's staging is also safe: its rename fails or
+    // nests, it sees the committed dir, and its own sweep no-ops)
+    (Option(fs.globStatus(new org.apache.hadoop.fs.Path(
+        s"$dir/appends_staging/${b}_*"))).getOrElse(Array.empty) ++
+     Option(fs.globStatus(new org.apache.hadoop.fs.Path(
+        s"$dir/appends/batch=$b/${b}_*"))).getOrElse(Array.empty))
+      .foreach(s => fs.delete(s.getPath, true))
   }
 
   /** Compact the index. Streaming [[append]] accretes one

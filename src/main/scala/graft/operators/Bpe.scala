@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
+import graft.functions.{GreedyPieces, Kernel}
 
 /** Distributed byte-pair-encoding tokenizer training (beyond-reference
   * training-data-pipeline tier; the reference counts tokens with a
@@ -293,10 +295,9 @@ object Bpe {
     // min 0.64 vs 0.64 on subword_doc_tokens once mode-order bias is
     // controlled), adopted for the inventory-scale shape; bit-parity
     // with the test tree's `ReferenceForms.greedyPiecesHof` is spec-pinned.
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.GreedyPiecesExpr(
-        org.apache.spark.sql.GraftColumns.expression(word),
-        pieces, pieces, ""))
+    val sets = GreedyPieces.byLength(pieces)
+    Kernel.call(GreedyPieces, "encode", ArrayType(StringType, containsNull = false), word,
+      sets, sets, "")
   }
 
   /** Corpus-wide greedy-piece frequencies under a trained vocabulary:

@@ -89,11 +89,11 @@ object Decontaminate {
       .withColumn("_words", split(lower(trim(col(textCol))), "\\s+"))
       .filter(size(col("_words")) >= n)
       .select(col(idCol).as("doc_id"), size(col("_words")).as("nw"),
-        posexplode(Dedup.posGramCol(col("_words"), n)).as(Seq("pos", "gram")))
+        posexplode(Dedup.ngrams(col("_words"), n)).as(Seq("pos", "gram")))
     val benchGrams = bench
       .withColumn("_bw", split(lower(trim(col(benchTextCol))), "\\s+"))
       .filter(size(col("_bw")) >= n)
-      .select(explode(Dedup.posGramCol(col("_bw"), n)).as("gram"))
+      .select(explode(Dedup.ngrams(col("_bw"), n)).as("gram"))
       .distinct()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("pos"))

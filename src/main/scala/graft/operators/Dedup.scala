@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+import graft.functions.{Kernel, NgramJoin, SimHash60}
 
 /** Deduplication operators for the training-data-pipeline tier: exact
   * (hash-groupBy), n-gram Jaccard, and MinHash+LSH near-dup. The scale
@@ -136,14 +138,11 @@ object Dedup {
     // windows via the native ngram_join kernel (r22, first-occurrence
     // dedup included): the transform-HOF form re-evaluated the
     // array_join+slice subtree interpreted per window (CodegenFallback;
-    // see graft.functions.NgramJoin). The short-document fallback (one
+    // see graft.functions.NgramJoin.ngrams). The short-document fallback (one
     // whole-word shingle) stays SQL — the kernel's empty result for
     // size < n never reaches it. MatDrill interleaved min:
     // decontam_report 0.76 vs 1.03 s, minhash_pairs 0.39 vs 0.44.
-    when(size(words) >= n,
-      org.apache.spark.sql.GraftColumns.column(
-        graft.functions.NgramJoin(
-          org.apache.spark.sql.GraftColumns.expression(words), n, distinct = true)))
+    when(size(words) >= n, ngrams(words, n, distinct = true))
       .otherwise(array_distinct(array(array_join(words, " "))))
 
   /** Distinct word n-gram shingles of `text` (test/API convenience —
@@ -391,9 +390,7 @@ object Dedup {
     // 60-element arrays (see [[graft.functions.SimHash60]]'s scaladoc
     // for the bit-identical tokenize/vote contract; the parity specs
     // pin it against [[simhash60]]'s explode+aggregate form)
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.SimHash60(
-        org.apache.spark.sql.GraftColumns.expression(text)))
+    Kernel.call(SimHash60, "fp60", LongType, text)
 
   /** 60-bit SimHash — the wide twin of [[simhash32]] (same vote math
     * over all 60 bits of [[md5Hash60]]) used for Hamming-bucket pairing,
@@ -954,18 +951,22 @@ object Dedup {
       .withColumn("_words", split(lower(trim(col(textCol))), "\\s+"))
       .filter(size(col("_words")) >= n)
       .select(col(idCol).as("id"),
-        posexplode(posGramCol(col("_words"), n)).as(Seq("pos", "gram")))
+        posexplode(ngrams(col("_words"), n)).as(Seq("pos", "gram")))
       .select(col("id"), col("pos"), md5Hash60(col("gram")).as("fp"))
 
-  /** Ordered (non-distinct) n-gram windows via the native ngram_join
-    * kernel (r22) — posexplode over it yields the same (pos, gram) rows
-    * as the old transform(sequence, array_join(slice)) HOF, without the
-    * per-window interpreted join (MatDrill interleaved min, HOF listed
-    * first: dup_spans 1.08 vs 1.86, decontam_spans 0.71 vs 0.95 s). */
-  private[operators] def posGramCol(ws: Column, n: Int): Column =
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.NgramJoin(
-        org.apache.spark.sql.GraftColumns.expression(ws), n, distinct = false))
+  /** Every length-`n` window of `ws` joined by one space, first
+    * occurrences only when `distinct`, via the native ngram_join kernel
+    * ([[graft.functions.NgramJoin.ngrams]], r22). posexplode over the
+    * ordered form yields the same (pos, gram) rows as the old
+    * transform(sequence, array_join(slice)) HOF, without the per-window
+    * interpreted join (MatDrill interleaved min, HOF listed first:
+    * dup_spans 1.08 vs 1.86, decontam_spans 0.71 vs 0.95, lm_bigram
+    * 0.98 vs 1.14, lm_bigram_artifact 1.02 vs 1.41 s). */
+  private[operators] def ngrams(ws: Column, n: Int, distinct: Boolean = false): Column = {
+    require(n >= 1, s"ngram_join needs n >= 1, got $n")
+    Kernel.call(NgramJoin, "ngrams", ArrayType(StringType, containsNull = false),
+      ws, n, distinct)
+  }
 
   /** Per-gram smallest distinct doc ids, capped at `minDocs` — the
     * bounded exact state the gram LEDGER stores per fingerprint. The

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import graft.functions.{DsirScoreSum, Kernel}
 
 /** DSIR — Data Selection via Importance Resampling (Xie et al.,
   * NeurIPS 2023) — the published scale path for "pick the raw-corpus
@@ -63,9 +65,7 @@ object Dsir {
     // (CodegenFallback; see graft.functions.NgramJoin). For size < 2
     // the kernel returns the empty array — the old otherwise() branch.
     // MatDrill interleaved min: dsir_fit 0.85 vs 1.15 s.
-    concat(ws, org.apache.spark.sql.GraftColumns.column(
-      graft.functions.NgramJoin(
-        org.apache.spark.sql.GraftColumns.expression(ws), 2, distinct = false)))
+    concat(ws, Dedup.ngrams(ws, 2))
   }
 
   /** Feature list straight from text (test/API convenience — hot paths
@@ -208,16 +208,12 @@ object Dsir {
     // md5+conv+modulo subtree re-evaluated INTERPRETED per feature
     // (measured 13.8 s with a map-literal lut, 6.5 s with a dense
     // array-literal lut, vs the join path's 1.6 s at sf0.1 — see
-    // [[graft.functions.DsirScoreSum]]). The model rides along as a
+    // [[graft.functions.DsirScoreSum.score]]). The model rides along as a
     // dense per-bucket long[] with unseen buckets pre-filled by the
     // smoothing default — O(1) lookups, values straight from
     // [[llr6Expr]] so the path stays bit-identical to [[logImportance]]
-    val lut = (0 until dm.numBuckets)
-      .map(b => dm.llr6.getOrElse(b.toLong, dm.default6)).toIndexedSeq
-    val s6 = org.apache.spark.sql.GraftColumns.column(
-      graft.functions.DsirScoreSum(
-        org.apache.spark.sql.GraftColumns.expression(col("_feats")),
-        lut, dm.default6))
+    val lut = Array.tabulate(dm.numBuckets)(b => dm.llr6.getOrElse(b.toLong, dm.default6))
+    val s6 = Kernel.call(DsirScoreSum, "score", LongType, col("_feats"), lut, dm.default6)
     docs
       // words then features as attributes, each in its own projection:
       // both are multiply referenced downstream, which keeps

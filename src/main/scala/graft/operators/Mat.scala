@@ -43,18 +43,12 @@ object Mat {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val hookInstalled = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   /** Remove every reliable-mode staging dir this JVM created. Idempotent;
     * also registered as a shutdown hook the first time reliable mode runs. */
   def cleanupReliable(): Unit = {
     val it = createdDirs.iterator()
     while (it.hasNext) {
-      deleteRecursively(new java.io.File(it.next()))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(it.next()))
       it.remove()
     }
   }

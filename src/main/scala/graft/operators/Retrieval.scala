@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorOps
+import org.apache.spark.sql.types.IntegerType
+import graft.functions.{CountContained, Kernel, VectorOps}
 
 /** The reference's two retrieval strategies, re-expressed as set-oriented
   * Spark plans:
@@ -194,9 +195,8 @@ object Retrieval {
       .withColumn("_ltext", lower(col(textCol)))
       .crossJoin(qWords)
       .withColumn("matches",
-        org.apache.spark.sql.GraftColumns.column(graft.functions.CountContained(
-          org.apache.spark.sql.GraftColumns.expression(col("words")),
-          org.apache.spark.sql.GraftColumns.expression(col("_ltext")))).cast("long"))
+        Kernel.call(CountContained, "count", IntegerType, col("words"), col("_ltext"))
+          .cast("long"))
       .withColumn("score", round(col("matches").cast("double") / col("n_words"), 4))
     // The matches>0 cut is applied AFTER the rank, not before: a filter
     // above the scoring projection gets its predicate pushed below it,

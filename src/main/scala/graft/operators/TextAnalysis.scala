@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+import graft.functions.{FixMojibake, GopherCounts, Kernel, NormalizeText}
 
 /** Text-analysis operators for the training-data-pipeline tier (builder
   * brief): language ID, quality scoring, token counting, fingerprinting.
@@ -90,43 +92,41 @@ object TextAnalysis {
     floor(num * 1000000L / den).cast("long")
 
   /** `gopher_counts(text)` — the native one-pass counter kernel
-    * ([[graft.functions.GopherCounts]]) as a Column. */
+    * ([[graft.functions.GopherCounts.counts]]) as a Column. */
   private def gopherCountsCol(t: Column): Column =
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.GopherCounts(org.apache.spark.sql.GraftColumns.expression(t)))
+    Kernel.call(GopherCounts, "counts", ArrayType(LongType, containsNull = false), t)
 
-  /** Unicode normalization ([[graft.functions.NormalizeText]]) — run
+  /** Unicode normalization ([[graft.functions.NormalizeText.normalize]]) — run
     * it BEFORE content fingerprinting/shingling so composed and
     * decomposed spellings of the same text share one dedup key. NFC is
     * the corpus default; NFKC is the aggressive fold (ligatures,
     * fullwidth forms) Gopher-style pipelines apply. ASCII rows return
     * the input buffer untouched. */
-  def normalizeText(t: Column, form: String = "NFC"): Column =
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.NormalizeText(
-        org.apache.spark.sql.GraftColumns.expression(t), form))
+  def normalizeText(t: Column, form: String = "NFC"): Column = {
+    require(NormalizeText.Forms.contains(form),
+      s"normalize_text form must be one of ${NormalizeText.Forms.mkString("/")}, got $form")
+    Kernel.call(NormalizeText, "normalize", StringType, t, form)
+  }
 
-  /** Mojibake repair ([[graft.functions.FixMojibake]]) — the ftfy-class
+  /** Mojibake repair ([[graft.functions.FixMojibake.fix]]) — the ftfy-class
     * pass for UTF-8-read-as-cp1252 corruption, run alongside NFC in
     * the normalization stage; strict-decode guarded, so legitimate
     * non-ASCII text is untouchable by construction. */
   def fixMojibake(t: Column): Column =
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.FixMojibake(
-        org.apache.spark.sql.GraftColumns.expression(t)))
+    Kernel.call(FixMojibake, "fix", StringType, t)
 
   /** The Gopher quality metrics as named expressions over one text
     * column — the single source both the DataFrame surface and the
     * composed-verdict column ([[gopherQualityPass]]) build from.
     * All seven counters come from ONE evaluation-shared
-    * [[graft.functions.GopherCounts]] scan (the column formulation's
+    * [[graft.functions.GopherCounts.counts]] scan (the column formulation's
     * nine regex passes measured 160 MB/s saturated on the
     * QualityDrill ladder — the kernel closes the gap to the
     * repetition pass's ~400); `n_stop` stays the codegen'd 8×instr
     * marker chain (already regex-free, and Unicode-lowering exactly
     * like the DuckDB oracle's `lower`). */
   private def gopherQualityCols(t: Column): Seq[(String, Column)] = {
-    import graft.functions.GopherCounts._
+    import GopherCounts._
     val gc = gopherCountsCol(t)
     def slot(i: Int): Column = element_at(gc, i + 1) // element_at is 1-based
     val words = slot(NWords)
@@ -438,18 +438,8 @@ object TextAnalysis {
       : DataFrame = {
     val words = docs.select(col(idCol), wsTokens(col(textCol)).as("_words"))
     words.filter(size(col("_words")) >= 2)
-      .select(col(idCol), explode(ngramCol(col("_words"), 2)).as("bigram"))
+      .select(col(idCol), explode(Dedup.ngrams(col("_words"), 2)).as("bigram"))
   }
-
-  /** n-gram windows via the native ngram_join kernel (r22) — the old
-    * zip_with(slice, slice, concat_ws) form was CodegenFallback, the
-    * concat re-evaluated interpreted per window (MatDrill interleaved
-    * min, HOF listed first: lm_bigram 0.98 vs 1.14, lm_bigram_artifact
-    * 1.02 vs 1.41 s). */
-  private def ngramCol(ws: Column, n: Int): Column =
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.NgramJoin(
-        org.apache.spark.sql.GraftColumns.expression(ws), n, distinct = false))
 
   /** Train the corpus bigram LM ONCE: `(bigram, c12, cctx, v)` — the
     * context count and vocabulary size denormalized into every row
@@ -466,7 +456,7 @@ object TextAnalysis {
     val vocab = words.select(explode(col("_words")).as("term"))
       .agg(count_distinct(col("term")).as("v"))
     val bcounts = words.filter(size(col("_words")) >= 2)
-      .select(explode(ngramCol(col("_words"), 2)).as("bigram"))
+      .select(explode(Dedup.ngrams(col("_words"), 2)).as("bigram"))
       .groupBy(col("bigram")).agg(count(lit(1)).as("c12"))
     // cctx = sum(c12) over the bigrams sharing w1, computed as a WINDOW
     // over the count table instead of a re-aggregate joined back (r22):
@@ -601,14 +591,11 @@ object TextAnalysis {
     val words = docs
       .withColumn("_words", split(lower(trim(col(textCol))), "\\s+"))
     // bigrams via the native ngram_join kernel (r22; see
-    // graft.functions.NgramJoin) — explode drops the short-document
+    // graft.functions.NgramJoin.ngrams) — explode drops the short-document
     // empty array exactly like the old null-valued when(). MatDrill
     // interleaved min: repetition_stats 1.01 vs 1.25 s.
     val bigrams = words.select(col(idCol),
-      explode(org.apache.spark.sql.GraftColumns.column(
-        graft.functions.NgramJoin(
-          org.apache.spark.sql.GraftColumns.expression(col("_words")),
-          2, distinct = false))).as("bigram"))
+      explode(Dedup.ngrams(col("_words"), 2)).as("bigram"))
     val bigramStats = bigrams
       .groupBy(col(idCol), col("bigram")).agg(count(lit(1)).as("tf"))
       .groupBy(col(idCol))

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+import graft.functions.{Kernel, UnigramViterbi}
 
 /** Unigram-LM subword segmentation (the SentencePiece model family),
   * beyond-reference training-pipeline tier alongside [[Bpe]].
@@ -111,10 +113,8 @@ object Unigram {
       // the test tree's `ReferenceForms.backtrack` is spec-pinned. MatDrill interleaved min:
       // unigram_em 0.73 vs 1.59 s, unigram_em_loop 1.02 vs 1.81 s.
       .withColumn("__pieces",
-        org.apache.spark.sql.GraftColumns.column(
-          graft.functions.UnigramPieces(
-            org.apache.spark.sql.GraftColumns.expression(col("word")),
-            model.pieces, model.big, probeLen(model))))
+        Kernel.call(UnigramViterbi, "pieces", ArrayType(StringType, containsNull = false),
+          col("word"), UnigramViterbi.toJavaMap(model.pieces), model.big, probeLen(model)))
       .select(col("freq"), explode(col("__pieces")).as("piece"))
       .groupBy("piece").agg(sum("freq").as("expected_cnt"))
 
@@ -135,10 +135,8 @@ object Unigram {
     // `ReferenceForms.viterbiTable` is spec-pinned (UnigramSpec "native DP kernel equals the HOF expression form").
     // MatDrill interleaved min: unigram_viterbi 0.37 vs 0.62,
     // unigram_em2 0.97 vs 2.04 s.
-    val cost = org.apache.spark.sql.GraftColumns.column(
-      graft.functions.UnigramCost(
-        org.apache.spark.sql.GraftColumns.expression(col("word")),
-        model.pieces, model.big, probeLen(model)))
+    val cost = Kernel.call(UnigramViterbi, "cost", LongType, col("word"),
+      UnigramViterbi.toJavaMap(model.pieces), model.big, probeLen(model))
     // exact long floor-division (a float divide would lose ulps once
     // costs pass 2^53 at real corpus scale); mass ≥ 1 keeps the cost
     // strictly inside its tier so `div` never lands on a boundary

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StringType}
+import graft.functions.{Kernel, RobotsMatcher, UrlKernels}
 
 /** URL canonicalization — the crawl-dedup primitive that pairs with
   * [[Html]]: a web corpus keyed by raw URL over-counts (case, default
@@ -119,19 +121,17 @@ object UrlOps {
   /** Is `path` allowed under the rules? The most specific (longest
     * PATTERN) matching rule wins; Allow wins a length tie; no match ⇒
     * allowed (RFC 9309 §2.2.2). Patterns support the RFC's `*` and
-    * trailing `$` wildcards via [[robotsPatternRegex]]. ONE native
-    * expression node ([[graft.functions.RobotsAllowedExpr]]) holding
-    * the precompiled per-host matcher — the rule set rides the plan as
-    * a single reference object instead of a 4-nodes-per-rule
+    * trailing `$` wildcards via [[robotsPatternRegex]]. ONE call of
+    * the precompiled per-host matcher ([[graft.functions.RobotsMatcher]])
+    * — the rule set rides the plan as a single reference object
+    * instead of a 4-nodes-per-rule
     * when-chain (quadratic fold nesting was the crawl tier's dominant
     * driver-side Catalyst cost, SCALING.md r17); the path column is
     * corpus-sized and nothing shuffles. Match semantics are pinned
     * slot-for-slot against the original when-chain (UrlKernelsSpec). */
   def robotsAllowed(rules: RobotsRules)(path: Column): Column =
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.RobotsAllowedExpr(
-        org.apache.spark.sql.GraftColumns.expression(path),
-        new graft.functions.RobotsMatcher(rules.rules.toArray, robotsPatternRegex)))
+    Kernel.invoke(new RobotsMatcher(rules.rules.toArray, robotsPatternRegex),
+      "allowed", BooleanType, path)
 
   /** One sitemap entry: `kind` is `url` (a urlset member) or `sitemap`
     * (an index member pointing at a child sitemap). */
@@ -256,26 +256,23 @@ object UrlOps {
         round(col("e.priority") * 1e6, 0).cast("long").as("priority_micro"))
   }
 
-  /** RFC 3986 §6 canonicalization as ONE native expression node
-    * ([[graft.functions.CanonicalizeUrl]] — a flat char scan inside
+  /** RFC 3986 §6 canonicalization as ONE native kernel call
+    * ([[graft.functions.UrlKernels.canonicalize]] — a flat char scan inside
     * whole-stage codegen; rule list in this object's header).
     * The dedup keys it emits are byte-identical to the original
     * regexp column formulation (fuzz-pinned, UrlKernelsSpec), which is
     * what the DuckDB oracles replay. */
   def canonicalizeUrl(url: Column): Column =
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.CanonicalizeUrl(
-        org.apache.spark.sql.GraftColumns.expression(url)))
+    Kernel.call(UrlKernels, "canonicalize", StringType, url)
 
   /** Extract the (lowercased) host from an absolute URL — userinfo and
     * port excluded. Empty string for non-absolute input. ONE native
-    * node ([[graft.functions.UrlHost]] — it rides every per-row
+    * kernel call ([[graft.functions.UrlKernels.host]] — it rides every per-row
     * frontier projection: [[crawlFrontier]], [[urlFilter]], the crawl
     * stats), byte-identical to the original regexp formulation
     * (fuzz-pinned, UrlKernelsSpec). */
   def urlHost(url: Column): Column =
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.UrlHost(org.apache.spark.sql.GraftColumns.expression(url)))
+    Kernel.call(UrlKernels, "host", StringType, url)
 
   /** Resolve an extracted href against its page URL — the RFC 3986 §5
     * cases a crawler's discovery stage actually meets: hrefs carrying
@@ -292,16 +289,13 @@ object UrlOps {
     * Dot segments (`../`) are NOT collapsed — a documented subset; the
     * canonicalizer downstream dedups the common spellings, and a
     * frontier that re-fetches `a/../b` vs `b` costs one duplicate
-    * fetch, never a wrong key collision. ONE native expression node
-    * ([[graft.functions.ResolveUrl]]) — zero shuffle, zero UDF,
+    * fetch, never a wrong key collision. ONE native kernel call
+    * ([[graft.functions.UrlKernels.resolve]]) — zero shuffle, zero UDF,
     * byte-identical to the original when-chain (fuzz-pinned,
     * UrlKernelsSpec) including the null algebra (null href ⇒ null; a
     * null base still resolves scheme-carrying hrefs to themselves). */
   def resolveUrl(base: Column, href: Column): Column =
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.ResolveUrl(
-        org.apache.spark.sql.GraftColumns.expression(base),
-        org.apache.spark.sql.GraftColumns.expression(href)))
+    Kernel.callNulls(UrlKernels, "resolve", StringType, base, href)
 
   /** Is a (resolved) URL something the crawl tier can actually fetch?
     * http/https only — the gate that drops `mailto:`/`javascript:`/

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
+import graft.functions.{GreedyPieces, Kernel}
 
 /** Distributed WordPiece tokenizer training — the third subword family
   * next to merge-order BPE ([[Bpe]]) and the unigram LM ([[Unigram]]),
@@ -176,10 +178,8 @@ object Wordpiece {
     // interpreted HOF fold (see [[Bpe.greedyPieces]]; bit-parity with
     // the test tree's `ReferenceForms.wordpiecePiecesHof` is spec-pinned).
     val (cm, init) = pieces.partition(_.startsWith("##"))
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.GreedyPiecesExpr(
-        org.apache.spark.sql.GraftColumns.expression(word),
-        init, cm.map(_.drop(2)), "##"))
+    Kernel.call(GreedyPieces, "encode", ArrayType(StringType, containsNull = false), word,
+      GreedyPieces.byLength(init), GreedyPieces.byLength(cm.map(_.drop(2))), "##")
   }
 
   /** Corpus-wide marked-piece frequencies under a trained vocabulary:

@@ -83,6 +83,13 @@ class CosineSimilaritySpec extends SparkSpec {
     assert(rows.getInt(1) === 1)   // null word not contained
     assert(rows.getInt(2) === 0)   // empty word set
     assert(rows.isNullAt(3))       // null text -> null
+    // SQL input comes from outside the program: a wrong arity fails in
+    // the builder, an argument that cannot be cast fails analysis
+    val arity = intercept[Exception](spark.sql("SELECT count_contained(array('x'))").collect())
+    assert(arity.getMessage.contains("count_contained takes exactly 2 arguments"))
+    val typed = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT count_contained(map('a', 1), 'xyz')").collect())
+    assert(typed.getMessage.contains("DATATYPE_MISMATCH"), typed.getMessage)
   }
 
   test("cosine_sim returns null on mismatched dimensions") {

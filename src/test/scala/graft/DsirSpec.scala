@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Dsir
+import graft.functions.{Kernel, NgramJoin}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** DSIR importance resampling: feature extraction, a hand-computed
   * weight under a degenerate 1-bucket model, target-affinity ordering,
@@ -32,8 +34,8 @@ class DsirSpec extends SparkSpec {
       Seq("x", "x", "x", "x")
     val df = arrs.toDF("ws")
     def kernel(n: Int, distinct: Boolean) =
-      org.apache.spark.sql.GraftColumns.column(graft.functions.NgramJoin(
-        org.apache.spark.sql.GraftColumns.expression(col("ws")), n, distinct))
+      Kernel.call(NgramJoin, "ngrams", ArrayType(StringType, containsNull = false),
+        col("ws"), n, distinct)
     // the three composed forms the kernel replaces, evaluated side by side
     val bigramsHof = when(size(col("ws")) >= 2,
       transform(sequence(lit(1), size(col("ws")) - 1),

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
+import graft.functions.{GopherCounts, Kernel}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
-/** Parity for the native [[graft.functions.GopherCounts]] kernel: every
+/** Parity for the native [[graft.functions.GopherCounts.counts]] kernel: every
   * slot must count exactly what the regex column formulation counts —
   * the formulation the DuckDB oracle replays. Edge fixtures pin the
   * split/trim/anchor corners; the fuzz loop sweeps a hostile alphabet
@@ -25,8 +27,7 @@ class GopherCountsSpec extends SparkSpec {
     regexp_count(t, lit("(^|\\s)[^\\s]*[A-Za-z]")).cast("long"))
 
   private def kernelCol(t: org.apache.spark.sql.Column) =
-    org.apache.spark.sql.GraftColumns.column(
-      graft.functions.GopherCounts(org.apache.spark.sql.GraftColumns.expression(t)))
+    Kernel.call(GopherCounts, "counts", ArrayType(LongType, containsNull = false), t)
 
   private def check(texts: Seq[String]): Unit = {
     val df = texts.toDF("text")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.ExplainMode
 
 import graft.io.IvfIndex
 import graft.operators.Similarity
+import scala.jdk.CollectionConverters._
 
 /** The persisted IVF index: build/probe must be byte-for-byte the same
   * ranking as the in-query ivfTopK, the vector table must land
@@ -137,6 +138,22 @@ class IvfIndexSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/appends/batch=0").exists(),
       "a replayed folded-empty batch must not re-publish")
     assert(rows(IvfIndex.probe(spark, dir, qs, k = 5, nprobe = 4)) == before)
+  }
+
+  test("append without a batch id fails before it writes anything") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    IvfIndex.build(vecs(100, 16, seed = 17), dir, nlist = 4)
+    def listing = {
+      val root = new java.io.File(s"$dir/vectors").toPath
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.map(root.relativize(_).toString).toSet
+      finally files.close()
+    }
+    val before = listing
+    val late = vecs(40, 16, seed = 23).withColumn("vec_id", col("vec_id") + 1000L)
+    intercept[IllegalArgumentException](IvfIndex.append(late.repartition(3), dir, batchId = None))
+    assert(listing == before)
+    assert(!new java.io.File(s"$dir/appends").exists())
   }
 
   test("compact folds committed appends into vectors/ and the manifest keeps replays no-ops") {

@@ -6,7 +6,7 @@ import graft.functions.NormalizeText
 import graft.operators.TextAnalysis
 
 /** Parity and fast-path semantics for the Unicode-normalization kernel
-  * ([[graft.functions.NormalizeText]]): form-for-form equality with
+  * ([[graft.functions.NormalizeText.normalize]]): form-for-form equality with
   * `java.text.Normalizer` (the JDK is the reference the kernel wraps;
   * the DuckDB oracle `nfc_normalize` pins cross-engine NFC equality
   * independently), the zero-copy ASCII path, and codegen execution. */

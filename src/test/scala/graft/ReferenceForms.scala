@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** The interpreted forms of native kernels in `graft.functions`: the
   * `aggregate`-expression forms of the subword kernels
-  * (`GreedyPiecesExpr`, `UnigramCost`, `UnigramPieces`) and the
-  * regexp/when-chain forms of the URL kernels (`CanonicalizeUrl`,
-  * `UrlHost`, `ResolveUrl`, `RobotsAllowedExpr`). Higher-order functions
+  * (`GreedyPieces.encode`, `UnigramViterbi.cost` and `.pieces`) and the
+  * regexp/when-chain forms of the URL kernels (`UrlKernels.canonicalize`,
+  * `.host` and `.resolve`, `RobotsMatcher.allowed`). Higher-order functions
   * are CodegenFallback and regexp chains re-scan each row, which is why
   * the native kernels replaced them; they stay here as the reference
   * each kernel's parity spec checks row for row. */

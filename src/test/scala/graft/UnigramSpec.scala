@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.{Bpe, Unigram}
+import graft.functions.{Kernel, UnigramViterbi}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -293,7 +295,7 @@ class UnigramSpec extends SparkSpec {
   }
 
   test("native DP kernel equals the HOF expression form row-for-row") {
-    // the UnigramCost/UnigramPieces kernels must be BIT-identical to the
+    // the UnigramViterbi cost/pieces kernels must be BIT-identical to the
     // viterbiCost/backtrack expression forms (integer arithmetic only,
     // same recurrence): random in-alphabet words, out-of-alphabet words,
     // the empty word, and words longer than every piece
@@ -308,14 +310,11 @@ class UnigramSpec extends SparkSpec {
     val words = (samples(wordGen, 400) :+ "" :+ "zzz" :+ "abababababababab")
       .distinct
     val df = words.toDF("word")
-    def natCost = org.apache.spark.sql.GraftColumns.column(
-      graft.functions.UnigramCost(
-        org.apache.spark.sql.GraftColumns.expression(col("word")),
-        model.pieces, model.big, probe))
-    def natPieces = org.apache.spark.sql.GraftColumns.column(
-      graft.functions.UnigramPieces(
-        org.apache.spark.sql.GraftColumns.expression(col("word")),
-        model.pieces, model.big, probe))
+    val table = UnigramViterbi.toJavaMap(model.pieces)
+    def natCost = Kernel.call(UnigramViterbi, "cost", LongType,
+      col("word"), table, model.big, probe)
+    def natPieces = Kernel.call(UnigramViterbi, "pieces",
+      ArrayType(StringType, containsNull = false), col("word"), table, model.big, probe)
     val rows = df
       .withColumn("__tab", ReferenceForms.viterbiTable(col("word"), model))
       .select(col("word"),

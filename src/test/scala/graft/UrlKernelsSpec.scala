@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.UrlOps
 
 /** Parity for the native URL kernels
-  * ([[graft.functions.CanonicalizeUrl]] / [[graft.functions.ResolveUrl]]
-  * / [[graft.functions.RobotsAllowedExpr]]): every output must be
+  * ([[graft.functions.UrlKernels.canonicalize]] /
+  * [[graft.functions.UrlKernels.resolve]] /
+  * [[graft.functions.RobotsMatcher.allowed]]): every output must be
   * byte-identical to the original column formulations — the shapes the
   * DuckDB oracles replay. Edge fixtures pin the parse corners (empty
   * authority, userinfo case, default ports, tracking params, fragment
