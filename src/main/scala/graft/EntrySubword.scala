@@ -372,7 +372,7 @@ private[graft] trait EntrySubword extends EntryShared {
         | CAST(row_number() OVER (ORDER BY doc_id) - 1 AS BIGINT) AS global_idx
         |FROM documents""".stripMargin,
 
-    // replay of `Unigram.segmentCorpus` (maxPieceLen 4, keepTop 40):
+    // replay of `Unigram.fitSeed` + `viterbiStats` (maxPieceLen 4, keepTop 40):
     // substring seed counts, single-chars + top-40 multi-char pruning,
     // then the per-word Viterbi cost table grown one character per
     // recursion step — min over pieces ending at the new position via

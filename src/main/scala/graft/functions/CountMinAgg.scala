@@ -61,8 +61,4 @@ object CountMinAgg {
       ((bytes(2) & 0xffL) << 8) | (bytes(3) & 0xffL)
     (v % width).toInt
   }
-
-  /** Estimate of `key` from a finished sketch: min over rows. */
-  def estimate(sketch: Seq[Long], key: String, depth: Int, width: Int): Long =
-    (0 until depth).map(i => sketch(i * width + bucket(i, key, width))).min
 }

@@ -14,9 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * MD5 (thread-local digest, 60-bit prefix straight from the digest
   * bytes — [[DsirScoreSum.md5Prefix60]]), then 60 branch-free vote
   * accumulations; it stays inside whole-stage codegen, which matters
-  * because this is the STREAMING form — the fingerprint computed
-  * per-row before any stateful operator, on the hot path of
-  * `StreamingIngest.streamingNearDups` at ingest rate.
+  * because this is the per-row form — the fingerprint computed
+  * without the explode+aggregate, on the hot path of the banded
+  * near-dup operators at ingest rate.
   *
   * Bit-identical contract (StreamingNearDupSpec asserts equality with
   * the explode+aggregate batch form over the corpus): tokens =

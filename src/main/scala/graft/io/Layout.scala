@@ -83,9 +83,9 @@ object Layout {
 
   /** (Re)derive the stats manifest for an EXISTING parquet dir — the
     * footer-scan + tmp/rename commit of [[writeWithStats]] without the
-    * data write. [[graft.io.Tables.compact]] calls this after its swap
-    * (compaction re-files the table, which orphans the old manifest;
-    * re-deriving restores skipping without another data pass). */
+    * data write. A rewriter that re-files a table orphans the old
+    * manifest; calling this after its swap restores skipping without
+    * another data pass. */
   def refreshStats(spark: org.apache.spark.sql.SparkSession, dir: String,
                    statsCols: Seq[String]): Unit = {
     require(statsCols.nonEmpty, "need at least one stats column")
@@ -210,24 +210,6 @@ object Layout {
       case c => sb += c
     }
     (sb += '"').toString
-  }
-
-  /** The column names a dir's manifest tracks (parsed from its
-    * `min_<col>` keys) — empty when there is no manifest. Lets a
-    * rewriter ([[graft.io.Tables.compact]]) re-derive stats without
-    * being told which columns the writer originally chose. */
-  def trackedCols(spark: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val manifest = new org.apache.hadoop.fs.Path(dir, "_graft_stats.json")
-    val fs = manifest.getFileSystem(conf)
-    if (!fs.exists(manifest)) return Seq.empty
-    val text = {
-      val in = fs.open(manifest)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
-    // nested-field names carry dots via toDotString and must round-trip
-    // through compact intact — the JSON key is taken whole
-    parsedManifest(text).flatMap { case (_, b) => b.longs.keys ++ b.strs.keys }.distinct
   }
 
   /** One manifest file's bounds: long-typed and string-typed columns

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * bigram tally, broadcast-scored LM, n-gram semi-join), so the verdict
   * join is four equi-joins on the document key — co-partitioned after
   * the first exchange, and trivially colocated if the table is bucketed
-  * by id ([[graft.io.Tables.writeBucketed]]). Reasons are ordered and
+  * by id at write time. Reasons are ordered and
   * joined to a string so the output hashes stably across engines.
   */
 object Cleaning {

@@ -48,9 +48,9 @@ object Dedup {
     * rescanning them: CommonCrawl-style monthly processing): one row
     * per distinct content fingerprint with its canonical keeper (the
     * smallest doc id ever seen). Fingerprint-keyed, so it grows with
-    * DISTINCT content, not with corpus-times-snapshots; persist with
-    * [[graft.io.Tables.writeBucketed]] on `fp` and the per-batch join
-    * below is colocated. */
+    * DISTINCT content, not with corpus-times-snapshots; persist it
+    * bucketed on `fp` (`bucketBy` + `saveAsTable`) and the per-batch
+    * join below is colocated. */
   def fpLedger(docs: DataFrame, idCol: String = "doc_id",
                textCol: String = "text"): DataFrame =
     docs.withColumn("fp", TextAnalysis.fingerprint(col(textCol)))
@@ -81,7 +81,7 @@ object Dedup {
     * fingerprint to one row per mapper — the window form this replaced
     * sorted EVERY copy of the hottest fp in one task), then two fp
     * equi-joins (both AQE-skew-splittable; the ledger side arrives
-    * pre-bucketed on fp when persisted via writeBucketed — zero ledger
+    * pre-bucketed on fp when persisted bucketed — zero ledger
     * shuffle), batch-sized work per day regardless of how many
     * snapshots the ledger summarizes. [[ledgerAfter]] emits the
     * updated artifact for the next batch. */
@@ -318,34 +318,6 @@ object Dedup {
     cross.unionByName(inBatch)
   }
 
-  /** The updated MinHash ledger after a batch — [[simhashLedgerAfter]]'s
-    * rules on the MinHash tier: prior entries win their slots before
-    * batch entries fill the remainder (ids are not ordered across
-    * snapshots), replayed rows collapse before ranking, the artifact
-    * stays O(buckets · cap). The first-sighting rule is scoped to rows
-    * COLLIDING IN THE SAME (band, bucket): a collapsed (band, bucket,
-    * id) row keeps its PRIOR signature there, but a changed-content
-    * doc's new banding still enters under the same id in OTHER buckets
-    * — the ledger can legitimately hold both signatures for one id,
-    * each canonical within its own bucket. */
-  def minhashLedgerAfter(batch: DataFrame, ledger: DataFrame,
-                         n: Int = 3, numHashes: Int = 8, bandSize: Int = 2,
-                         cap: Int = 64, idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame = {
-    require(cap >= 1, s"need cap >= 1, got $cap")
-    val w = Window.partitionBy(col("band"), col("bucket"))
-      .orderBy(col("_ord"), col("id"))
-    ledger.withColumn("_ord", lit(0))
-      .unionByName(bandedSigs(batch, n, numHashes, bandSize, idCol, textCol)
-        .withColumn("_ord", lit(1)))
-      .groupBy(col("band"), col("bucket"), col("id"))
-      .agg(min(col("_ord")).as("_ord"),
-        min_by(col("sig"), col("_ord")).as("sig"))
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= cap)
-      .select(col("id"), col("sig"), col("band"), col("bucket"))
-  }
-
   /** The shared SimHash vote pipeline: per token, md5-derived bits vote
     * ±1 per position; fingerprint bit b = 1 iff the vote sum is
     * positive. ONE hash-aggregate with `bits` sum columns instead of
@@ -458,10 +430,9 @@ object Dedup {
     pairTail(banded, banded, maxHamming)
   }
 
-  /** [[simhashPairs]] with a per-bucket KEEPER cap — the batch twin of
-    * [[graft.streaming.StreamingIngest.streamingNearDups]]'
-    * `perBucketCap`, for the pathological corpus the ×1000 scale
-    * rehearsal demonstrated (SCALING.md): when a band bucket holds n
+  /** [[simhashPairs]] with a per-bucket KEEPER cap, for the
+    * pathological corpus the ×1000 scale rehearsal demonstrated
+    * (SCALING.md): when a band bucket holds n
     * near-identical documents the exact pair space is O(n²), but a
     * dedup pipeline only needs each document matched to SOME earlier
     * keeper. Here only the `cap` smallest ids per (band, bucket) act as
@@ -469,10 +440,8 @@ object Dedup {
     * them — so the bucket's work drops to O(n · cap) plus an O(n log n)
     * in-bucket rank, while any bucket within the cap produces EXACTLY
     * [[simhashPairs]]' output (spec-pinned). Recall loss past the cap
-    * mirrors the streaming FIFO semantics: hits against evicted
-    * (here: rank > cap) fingerprints are the ones forgone, and like the
-    * streaming side the cap is a stated contract, not a silent
-    * truncation. Deterministic — keepers are an id-ordered rank. */
+    * is stated, not silent: hits against rank > cap fingerprints are
+    * the ones forgone. Deterministic — keepers are an id-ordered rank. */
   def simhashPairsCapped(docs: DataFrame, maxHamming: Int = 3, cap: Int = 64,
                          idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(cap >= 1, s"need cap >= 1, got $cap")
@@ -823,8 +792,7 @@ object Dedup {
     * `batch` dup — the capped in-batch [[semanticCandidatePairs]]
     * rule; else original. Assignment is map-side against the frozen
     * matrix literal; the only shuffles are the two cell-keyed joins —
-    * batch-sized work per day. [[semanticLedgerAfter]] emits the next
-    * artifact. */
+    * batch-sized work per day. */
   def semanticDedupIncremental(batch: DataFrame, ledger: DataFrame,
                                cents: Seq[(Int, Seq[Float])],
                                threshold: Double = 0.85, maxCellReps: Int = 4096,
@@ -853,30 +821,6 @@ object Dedup {
           .as("is_semantic_dup"),
         when(col("_led"), "ledger").when(col("_bat"), "batch")
           .otherwise(lit(null).cast("string")).as("dup_source"))
-  }
-
-  /** The updated representative ledger after a batch — prior entries
-    * win their per-cell slots before batch entries fill the remainder
-    * (the [[simhashLedgerAfter]] first-sighting rule; ids are not
-    * ordered across snapshots), replayed rows collapse before ranking
-    * (prior vector wins), O(cells · maxCellReps) forever. */
-  def semanticLedgerAfter(batch: DataFrame, ledger: DataFrame,
-                          cents: Seq[(Int, Seq[Float])], maxCellReps: Int = 4096,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding"): DataFrame = {
-    require(maxCellReps >= 1, s"need maxCellReps >= 1, got $maxCellReps")
-    val w = Window.partitionBy(col("cell")).orderBy(col("_ord"), col(idCol))
-    ledger.withColumn("_ord", lit(0))
-      .unionByName(
-        Similarity.assignCells(batch.select(col(idCol), col(vecCol)), cents, vecCol)
-          .select(col("cell"), col(idCol), col(vecCol))
-          .withColumn("_ord", lit(1)))
-      .groupBy(col("cell"), col(idCol))
-      .agg(min(col("_ord")).as("_ord"),
-        min_by(col(vecCol), col("_ord")).as(vecCol))
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= maxCellReps)
-      .select(col("cell"), col(idCol), col(vecCol))
   }
 
   /** Duplicated-PASSAGE extraction — exact substring dedup at span
@@ -1011,7 +955,7 @@ object Dedup {
     * for the two consumers), the capped per-gram doc rank
     * (WindowGroupLimit), one fp equi-join against the ledger, the
     * doc-scoped span merge — batch-sized work per day regardless of
-    * history depth. [[gramLedgerAfter]] emits the next artifact. */
+    * history depth. */
   def duplicatedSpansIncremental(batch: DataFrame, ledger: DataFrame,
                                  n: Int = 4, minDocs: Int = 2,
                                  minSpanWords: Int = 8,
@@ -1026,25 +970,6 @@ object Dedup {
         col("docs")))) >= minDocs)
       .select("fp")
     spanMerge(pos.join(dup, "fp"), n, minSpanWords, idCol)
-  }
-
-  /** The updated gram ledger after a batch: per fingerprint, the
-    * `minDocs` smallest distinct doc ids of (prior ∪ batch) — the
-    * smallest-k of two smallest-k sets is the global smallest-k, so
-    * the merge stays exact at bounded state; replays are a no-op
-    * (the union with an already-recorded id is idempotent). */
-  def gramLedgerAfter(batch: DataFrame, ledger: DataFrame,
-                      n: Int = 4, minDocs: Int = 2,
-                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(minDocs >= 1, s"need minDocs >= 1, got $minDocs")
-    topDocsPerGram(positionalGrams(batch, n, idCol, textCol), minDocs)
-      .withColumnRenamed("docs", "_bdocs")
-      .join(ledger.withColumnRenamed("docs", "_ldocs"), Seq("fp"), "full_outer")
-      .select(col("fp"),
-        slice(array_sort(array_distinct(concat(
-          coalesce(col("_ldocs"), array().cast("array<long>")),
-          coalesce(col("_bdocs"), array().cast("array<long>"))))),
-          1, minDocs).as("docs"))
   }
 
   /** The ACTION half of [[duplicatedSpans]]: emit each document with

@@ -373,31 +373,6 @@ object DocFixtures {
     out.toByteArray
   }
 
-  /** HYBRID-reference variant (Acrobat's 1.4-compat layout): the same
-    * body as [[pdfBytesXrefStream]], but `startxref` points at a
-    * CLASSIC xref table whose trailer carries `/XRefStm` → the xref
-    * stream that actually holds the compressed-object entries. A
-    * classic-only reader sees a well-formed (if sparse) table; a 1.5
-    * reader follows /XRefStm for the ObjStm members. */
-  def pdfBytesHybrid(pages: Seq[Seq[String]]): Array[Byte] = {
-    val base = pdfBytesXrefStream(pages)
-    val iso = StandardCharsets_ISO
-    val raw = new String(base, iso)
-    // body = everything up to (and excluding) the builder's startxref
-    val sx = raw.lastIndexOf("startxref")
-    val body = raw.substring(0, sx)
-    val xrefStmPos = raw.substring(sx + "startxref".length).trim.takeWhile(_.isDigit).toLong
-    val size = "/Size (\\d+)".r.findFirstMatchIn(raw).map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException("no /Size in base pdf"))
-    val out = new ByteArrayOutputStream()
-    out.write(body.getBytes(iso))
-    val tablePos = out.size()
-    out.write((s"xref\n0 1\n0000000000 65535 f \n" +
-      s"trailer\n<< /Size $size /Root 1 0 R /XRefStm $xrefStmPos >>\n" +
-      s"startxref\n$tablePos\n%%EOF\n").getBytes(iso))
-    out.toByteArray
-  }
-
   /** PDF 1.5+ fixture set for the xref-stream query surface (kept
     * separate from [[all]] so the classic-fixture VALUES oracles stay
     * untouched). */

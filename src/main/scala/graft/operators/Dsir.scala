@@ -68,12 +68,6 @@ object Dsir {
     concat(ws, Dedup.ngrams(ws, 2))
   }
 
-  /** Feature list straight from text (test/API convenience — hot paths
-    * materialize the words array as an attribute first, see
-    * [[featuresFromWords]]'s O(n²) note and the callers below). */
-  def featureList(text: Column): Column =
-    featuresFromWords(wordsCol(text))
-
   /** A feature's bucket: the shared 60-bit md5 integer mod
     * `numBuckets` (non-negative by construction, so `%` and `pmod`
     * agree — the DuckDB twin uses plain `%`). */

@@ -1,22 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing (prompt tier): treat image/audio/video as
   * opaque `BINARY` payloads with typed metadata, and run decode /
-  * feature-extraction as partition-parallel transforms.
+  * feature-extraction as column transforms.
   *
   * Image and audio decode are REAL — [[MediaCodec]] runs the JDK's own
-  * codecs (`javax.imageio`, `javax.sound.sampled`) inside the same
-  * `mapPartitions` shape. Only VIDEO, whose codecs genuinely aren't in
-  * the JDK, keeps the clearly-marked deterministic STUB ([[stubDecode]])
-  * below; everything Spark-side around it is real and scale-shaped:
-  * BinaryType columns, per-partition batch decode via `mapPartitions`
-  * (one decoder instance per partition, the Scala analogue of
-  * `mapInPandas` batching), generator-style frame sampling with
-  * `sequence`/`posexplode`, and column-pruning-friendly schemas (payload
-  * column only touched by the decode stage).
+  * codecs (`javax.imageio`, `javax.sound.sampled`) per partition. Only
+  * VIDEO, whose codecs genuinely aren't in the JDK, keeps the
+  * clearly-marked deterministic pseudo-header parse ([[decodeMeta]]);
+  * everything Spark-side around it is real and scale-shaped: BinaryType
+  * columns, generator-style frame sampling with `sequence`/`posexplode`,
+  * and column-pruning-friendly schemas (payload column only touched by
+  * the decode stage).
   */
 object Multimodal {
 
@@ -46,7 +44,7 @@ object Multimodal {
 
   /** Resize planning: aspect-preserving target geometry with the long
     * side capped at `maxSide` (integer math only — engine-reproducible).
-    * The actual pixel resample belongs in the stubbed decode kernel; the
+    * The actual pixel resample belongs in a real decoder; the
     * geometry computation is the part a query plan evaluates (e.g. to
     * partition work by output size or filter thumbnails). */
   def resizeMeta(meta: DataFrame, maxSide: Int = 224): DataFrame = {
@@ -71,33 +69,4 @@ object Multimodal {
           .as(Seq("sample_idx", "frame_idx")))
       .select(col("doc_id"), col("sample_idx").cast("int").as("sample_idx"),
         col("frame_idx"), (col("frame_idx") * 40L).as("frame_ts_ms"))
-
-  // ---- typed mapPartitions decode path (the library seam) -------------
-
-  case class MediaRow(doc_id: Long, payload: Array[Byte])
-  case class MediaMeta(doc_id: Long, byte_len: Int, width: Int, height: Int,
-                       n_frames: Long)
-
-  /** STUB decode kernel — stands in for a real codec call (PIL/ffmpeg
-    * equivalent). Deterministic on the payload bytes so tests are stable.
-    * Swap this single function for a real decoder; the `mapPartitions`
-    * plumbing around it is production-shaped (per-partition init, batch
-    * iteration, no driver collect). */
-  def stubDecode(r: MediaRow): MediaMeta = {
-    val len = r.payload.length
-    MediaMeta(r.doc_id, len, 64 + len % 576, 64 + (len * 7) % 416, len / 100L + 1L)
-  }
-
-  /** Partition-parallel decode: one kernel instance per partition,
-    * streaming the rows through it (the Scala face of
-    * `mapInPandas(decode_batch)`). */
-  def decodePartitioned(binDocs: DataFrame): Dataset[MediaMeta] = {
-    val spark = binDocs.sparkSession
-    import spark.implicits._
-    binDocs.select(col("doc_id").cast("long"), col("payload")).as[MediaRow]
-      .mapPartitions { rows =>
-        // a real impl would open the codec/context once per partition here
-        rows.map(stubDecode)
-      }
-  }
 }

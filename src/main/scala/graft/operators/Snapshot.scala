@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: both snapshots are projected to `(id, md5)` BEFORE the
   * join, so the full-outer join shuffles two narrow columns, never the
-  * document bodies; on bucketed-by-id tables ([[graft.io.Tables
-  * .writeBucketed]]) the shuffle disappears entirely. Output is the
+  * document bodies; on tables bucketed by id at write time the shuffle
+  * disappears entirely. Output is the
   * delta only — at a typical recrawl (≪10% churn) that's a small
   * fraction of either snapshot.
   */

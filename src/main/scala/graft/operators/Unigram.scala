@@ -147,14 +147,6 @@ object Unigram {
         (n * lit(model.big) - col("__cost")).as("piece_mass"))
   }
 
-  /** The whole operator over a corpus: collapse to the word vocabulary,
-    * fit the seed model, run the DP. */
-  def segmentCorpus(docs: DataFrame, maxPieceLen: Int = 4, keepTop: Int = 40,
-                    textCol: String = "text"): DataFrame = {
-    val vocab = Bpe.wordVocab(docs, textCol).select("word", "freq").localCheckpoint()
-    viterbiStats(vocab, fitSeed(vocab, maxPieceLen, keepTop))
-  }
-
   /** One full EM round: the M-step's expected counts BECOME the next
     * model's piece scores (unused pieces drop — SentencePiece's
     * pruning), with `BIG` re-derived for the new count range. Every

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 import graft.operators.TextAnalysis
 
@@ -13,46 +13,19 @@ import graft.operators.TextAnalysis
   * concurrency, idempotent by content hash, with upsert-overwrite
   * semantics in the vector index
   * (`ingestion_service.py:387,92-106`, `pinecone_manager.py:78,90`).
-  * Streaming mapping: a file/`readStream` source replaces the arrival
-  * loop (`maxFilesPerTrigger` = the semaphore), watermarked
-  * `dropDuplicates` on the content fingerprint replaces the hash cache,
-  * and a `foreachBatch` last-write-wins merge into the parquet index
-  * table replaces the Pinecone upsert. Checkpointing gives the
-  * exactly-once behavior the reference approximates with its cache.
+  * Streaming mapping: `foreachBatch` sinks replace the arrival loop,
+  * a last-write-wins crawl ledger ([[crawlAppendBatch]] +
+  * [[crawlCompact]]) replaces the Pinecone upsert, and versioned
+  * fingerprint ledgers outside the checkpoint ([[streamingLedgerDedup]],
+  * [[streamingNearDupLedger]]) replace the hash cache. The crash-safe
+  * tmp/bak swap ([[swapInto]], [[recoverSwap]]) is shared with
+  * [[graft.io.IvfIndex]].
   */
 object StreamingIngest {
 
-  /** Dedup + stamp stage, shared by batch and streaming callers: content
-    * fingerprint (S2), ingest timestamp, in-stream duplicate drop bounded
-    * by a watermark so state doesn't grow forever. */
-  def dedupStage(docs: DataFrame, withWatermark: Boolean = true): DataFrame = {
-    val stamped = docs
-      .withColumn("fp", TextAnalysis.fingerprint(col("text")))
-      .withColumn("ingest_ts", current_timestamp())
-    val wm = if (withWatermark) stamped.withWatermark("ingest_ts", "10 minutes")
-             else stamped
-    wm.dropDuplicates("fp")
-  }
-
-  /** Last-write-wins merge of a micro-batch into the parquet `target`
-    * table (S12 upsert semantics, keyed on `fp`): union old+new, keep the
-    * newest row per key (ties on `ingest_ts` — a same-second re-ingest or
-    * a retried batch — break deterministically by `doc_id` desc).
-    * Overwrite-rewrite keeps it dependency-free; on a Delta/Iceberg table
-    * this becomes a real MERGE.
-    *
-    * Crash safety: the swap is write-tmp → rename dst→bak → rename
-    * tmp→dst → delete bak, so a FULL copy of the table exists on disk at
-    * every instant; [[recoverSwap]] rolls an interrupted swap forward (or
-    * back) before the merge reads `existing`. A failed rename aborts the
-    * batch (checkpoint retries after recovery) — never a silent rebuild
-    * of the table from one micro-batch. */
-  def upsertBatch(spark: SparkSession, batch: DataFrame, targetDir: String): Unit =
-    upsertBatchWith(spark, batch, targetDir, resolveLww)
-
-  /** The fp-keyed newest-wins resolution [[upsertBatch]] and the
-    * segment views share: ONE row per fp, latest `ingest_ts`, ties by
-    * `doc_id` desc. */
+  /** The fp-keyed newest-wins resolution the crawl ledger applies
+    * after its winner filter: ONE row per fp, latest `ingest_ts`, ties
+    * by `doc_id` desc. */
   private def resolveLww(all: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("fp"))
       .orderBy(col("ingest_ts").desc, col("doc_id").desc)
@@ -60,31 +33,6 @@ object StreamingIngest {
       .filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** [[upsertBatch]] with a caller-chosen merge resolution — the crawl
-    * path resolves per PAGE ([[crawlResolve]]), everything else per
-    * row key ([[resolveLww]]); the crash-safe swap is identical. */
-  private def upsertBatchWith(spark: SparkSession, batch: DataFrame,
-                              targetDir: String,
-                              resolve: DataFrame => DataFrame): Unit = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(targetDir)
-    val tmp = new org.apache.hadoop.fs.Path(targetDir + "_tmp")
-    val bak = new org.apache.hadoop.fs.Path(targetDir + "_bak")
-    // resolve the TARGET's filesystem — FileSystem.get(conf) would
-    // resolve fs.defaultFS and break for any other scheme (s3a://, ...)
-    val fs = dst.getFileSystem(hadoopConf)
-    recoverSwap(fs, dst, tmp, bak)
-    // Treat ONLY a missing table as empty; any other read failure
-    // (transient FS error, corrupt footer) must abort the batch — the
-    // merge would otherwise silently rebuild the table from this batch
-    // alone, destroying all previously ingested rows.
-    val existing =
-      if (fs.exists(dst)) spark.read.parquet(targetDir)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], batch.schema)
-    val merged = resolve(existing.unionByName(batch, allowMissingColumns = true))
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    swapInto(fs, dst, tmp, bak, "upsertBatch")
-  }
 
   /** Crawl-ledger resolution: the winning RENDERING's blocks, never a
     * mix. A page's extraction is stamped with one `page_ver` shared by
@@ -107,13 +55,13 @@ object StreamingIngest {
       .drop("_win_ts", "_win_ver"))
   }
 
-  /** The COMMIT half of the tmp/bak dance, shared by [[upsertBatch]],
-    * [[graft.io.Tables.compact]] and [[graft.io.IvfIndex.build]]:
+  /** The COMMIT half of the tmp/bak dance, shared by [[crawlCompact]]
+    * and [[graft.io.IvfIndex]]'s build and fold:
     * `tmp` must already hold the COMPLETE new table. Renames dst→bak,
     * tmp→dst, drops bak; a failed promotion restores the old table (and
     * says which state survived if even that fails). ONE definition so
     * the [[recoverSwap]] invariant — bak exists ⇒ tmp was complete — is
-    * enforced by construction at every caller, not by three hand-rolled
+    * enforced by construction at every caller, not by hand-rolled
     * copies drifting apart. */
   private[graft] def swapInto(fs: org.apache.hadoop.fs.FileSystem,
       dst: org.apache.hadoop.fs.Path, tmp: org.apache.hadoop.fs.Path,
@@ -145,7 +93,7 @@ object StreamingIngest {
     if (fs.exists(bak)) fs.delete(bak, true)
   }
 
-  /** Roll an interrupted [[upsertBatch]] swap to a consistent state.
+  /** Roll an interrupted [[swapInto]] to a consistent state.
     * Invariant of the swap order: `bak` only comes into existence via
     * the dst→bak rename, which happens strictly AFTER the tmp write
     * finishes — so `bak` present is the proof that `tmp` is a complete
@@ -156,9 +104,9 @@ object StreamingIngest {
     *  - dst missing, tmp AND bak present → crashed between dst→bak and
     *    tmp→dst: roll FORWARD (tmp→dst, drop bak);
     *  - dst missing, only bak present → roll BACK (bak→dst); the
-    *    retried batch re-merges on top;
-    *  - dst missing, only tmp present → first-batch crash mid-write:
-    *    delete tmp; the retried batch rebuilds it;
+    *    retried write re-merges on top;
+    *  - dst missing, only tmp present → first-write crash mid-write:
+    *    delete tmp; the retried write rebuilds it;
     *  - dst present → any tmp is an unfinished write and any bak is a
     *    completed swap's leftover: both are stale, delete them. */
   private[graft] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
@@ -181,53 +129,21 @@ object StreamingIngest {
     }
   }
 
-  /** End-to-end ingest stream: JSON-lines documents arriving in `srcDir`
-    * → fingerprint dedup → last-write-wins upsert into `targetDir`.
-    * `maxFilesPerTrigger=5` mirrors the reference's download semaphore
-    * (`ingestion_service.py:376`). Caller starts/stops the query. */
-  def ingestStream(spark: SparkSession, srcDir: String, targetDir: String,
-                   checkpointDir: String): DataStreamWriter[Row] = {
-    val schema = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 5)
-      .json(srcDir)
-    dedupStage(src).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(spark, batch, targetDir)
-      }
-  }
-
-  /** One micro-batch of the STREAMING crawl chain: WARC shard bytes →
-    * [[graft.operators.Warc.warcHtmlBlocks]] (response records, 200 +
-    * text/html, boilerplate-filtered main-content blocks) → content
-    * fingerprint → last-write-wins merge into the parquet corpus table.
-    * The batch twin is `warcHtmlBlocks` alone; this adds the S2
-    * idempotence a continuous crawl needs — a RE-crawled page (same
-    * url/block/content ⇒ same fp) replaces its previous row instead of
-    * duplicating it, and an at-least-once replayed micro-batch is a
-    * no-op. The ledger key is (crawl_key, block_idx) where `crawl_key`
-    * = canonicalized rel=canonical-else-fetch-url — the page's DECLARED
-    * identity: an amp/mobile twin pair pointing at the same canonical
-    * collapses to one corpus row even across micro-batches and even
-    * when the twins' texts differ (the batch-side `canonical_dedup`
-    * semantics, honored in the stream). A re-crawl whose content
-    * changed REPLACES the previous extraction (true last-write-wins —
-    * the S12 upsert contract); content-level near-dup detection stays
-    * with the downstream dedup tier.
-    *
-    * Scale shape: the extract is the batch chain's zero-shuffle map
-    * pass; the merge costs one fp-hash shuffle over existing ∪ batch —
-    * on a real table this becomes a Delta/Iceberg MERGE (the
-    * [[upsertBatch]] contract). The `warc` shard column is dropped
-    * before the merge: two shards carrying the same page must collapse
-    * to ONE row, and which shard won is meaningless under LWW. */
-  def crawlUpsertBatch(spark: SparkSession, batch: DataFrame,
-                       targetDir: String): Unit =
-    upsertBatchWith(spark, crawlBlocksStamped(batch), targetDir, crawlResolve)
-
+  /** The STREAMING crawl chain's extract step: WARC shard bytes →
+    * [[graft.operators.Warc.warcHtmlBlocksCanonical]] (response
+    * records, 200 + text/html, boilerplate-filtered main-content
+    * blocks) → ledger key and version stamps. The ledger key is
+    * (crawl_key, block_idx) where `crawl_key` = canonicalized
+    * rel=canonical-else-fetch-url — the page's DECLARED identity: an
+    * amp/mobile twin pair pointing at the same canonical collapses to
+    * one corpus row even across micro-batches and even when the twins'
+    * texts differ (the batch-side `canonical_dedup` semantics, honored
+    * in the stream). A re-crawl whose content changed REPLACES the
+    * previous extraction (the S12 upsert contract); content-level
+    * near-dup detection stays with the downstream dedup tier. The
+    * `warc` shard column is dropped: two shards carrying the same page
+    * must collapse to ONE row, and which shard won is meaningless
+    * under LWW. */
   private def crawlBlocksStamped(batch: DataFrame): DataFrame = {
     // one version stamp per RENDERING (crawl_key x fetched url): the
     // order-insensitive sum of per-block hashes over the extraction --
@@ -258,7 +174,7 @@ object StreamingIngest {
       .drop("warc", "canonical")
   }
 
-  /** The O(batch) alternative to [[crawlUpsertBatch]] — the LSM shape a
+  /** One micro-batch of the streaming crawl, in the LSM shape a
     * CONTINUOUS crawl needs: each micro-batch extracts its blocks and
     * APPENDS one parquet segment under `<target>_seg`; no table read,
     * no corpus-sized window, no tmp/bak swap on the batch path (the
@@ -275,9 +191,9 @@ object StreamingIngest {
                        targetDir: String): Unit =
     crawlBlocksStamped(batch).write.mode("append").parquet(targetDir + "_seg")
 
-  /** The resolved corpus over base table + appended segments: one
-    * fp-keyed newest-wins window, identical to [[upsertBatch]]'s merge
-    * semantics (ties on `ingest_ts` break by `doc_id` desc). */
+  /** The resolved corpus over base table + appended segments:
+    * [[crawlResolve]]'s winning rendering per page, then one fp-keyed
+    * newest-wins window (ties on `ingest_ts` break by `doc_id` desc). */
   def crawlCorpusView(spark: SparkSession, targetDir: String): DataFrame = {
     val segDir = targetDir + "_seg"
     val fs = new org.apache.hadoop.fs.Path(targetDir)
@@ -292,8 +208,8 @@ object StreamingIngest {
 
   /** Fold the appended segments into the base table (the amortized
     * compaction [[crawlAppendBatch]] defers to): materialize
-    * [[crawlCorpusView]] through the same crash-safe tmp/bak swap as
-    * [[upsertBatch]], then drop the segments. A crash between swap and
+    * [[crawlCorpusView]] through the crash-safe tmp/bak swap
+    * ([[swapInto]]), then drop the segments. A crash between swap and
     * segment delete is benign: the next view/compact unions rows that
     * are already in the base and the LWW window collapses them —
     * idempotent by construction. */
@@ -311,153 +227,6 @@ object StreamingIngest {
       fs.delete(seg, true)
       ()
     }
-  }
-
-  /** Streaming sessionization: event-time `session_window` with a 30 min
-    * gap under a watermark — the streaming twin of
-    * [[graft.operators.EventOps.sessionize]]'s batch gaps-and-islands.
-    * State per (user, open session), expired by the watermark. */
-  def sessionWindowAgg(events: DataFrame, gap: String = "30 minutes",
-                       watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap).as("sw"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("sum_value"))
-      .select(col("user_id"), col("sw.start").as("session_start"),
-        col("sw.end").as("session_end"), col("n_events"), col("sum_value"))
-
-  /** Streaming retrieval — the reference's interactive per-request query
-    * path (`main.py:92-127`) as a stream: questions arrive on a stream,
-    * the vector index is a static table, and each micro-batch runs the
-    * exact same batch kNN (stream-static join; the static side is
-    * re-broadcast per batch, so index updates between batches are
-    * picked up). Top-k ranking needs the full batch → `foreachBatch`
-    * delegating to [[graft.operators.Retrieval.knnCosine]]; `sink` gets
-    * each batch's answers. */
-  def streamingRetrieval(questions: DataFrame, index: DataFrame, k: Int,
-                         sink: DataFrame => Unit): DataStreamWriter[Row] =
-    questions.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Retrieval.knnCosine(batch, index, k))
-      }
-
-  /** Stream-stream interval join: each click joined to the purchases of
-    * the same user that happen within `windowSec` AFTER it — the
-    * streaming twin of [[graft.operators.AsOf.rangeJoin]]. Both sides
-    * carry watermarks and the join condition bounds event time in both
-    * directions, so Spark can size the state store and EVICT rows the
-    * watermark has passed — without the time bound the state grows
-    * forever. The join key is the user equi-key; the interval is a
-    * post-condition on it, exactly the skew-safe shape the batch range
-    * join uses. */
-  def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame,
-                        windowSec: Int = 600, watermark: String = "1 hour"): DataFrame = {
-    val l = clicks.withWatermark("ts", watermark)
-      .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("click_ts"))
-    val r = purchases.withWatermark("ts", watermark)
-      .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-    l.join(r,
-      col("user_id") === col("p_user_id") &&
-        col("purchase_ts") > col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $windowSec SECONDS"))
-      .select(col("user_id"), col("click_id"), col("purchase_id"),
-        col("click_ts"), col("purchase_ts"))
-  }
-
-  // ---- custom state: flatMapGroupsWithState ---------------------------
-
-  case class FpDoc(fp: String, doc_id: Long, ingest_epoch: Long)
-  case class FpState(first_doc_id: Long, n_seen: Long)
-  case class FpDecision(fp: String, doc_id: Long, is_new: Boolean, dup_of: Long)
-
-  /** Stateful streaming dedup with explicit per-key state
-    * (`flatMapGroupsWithState`, SURVEY §2.11's custom-state tier): the
-    * first arrival of each content fingerprint is emitted `is_new=true`;
-    * later arrivals are tagged as duplicates of the keeper — the exact
-    * streaming analogue of the reference's hash-cache hit/miss
-    * (`ingestion_service.py:294-299`), with state that outlives a single
-    * micro-batch (unlike `dropDuplicates`, this reports the dup mapping).
-    * With `stateTtlMs` set, `ProcessingTimeTimeout` evicts idle keys like
-    * the reference's cache eviction (S16) — use it only with a real
-    * trigger interval: pending timeouts make the zero-interval
-    * micro-batch loop spin continuously (batches re-fire to check the
-    * clock), which also means a test that waits for the stream to go
-    * idle never returns. Default is NoTimeout. */
-  def statefulDedup(docs: org.apache.spark.sql.Dataset[FpDoc],
-                    stateTtlMs: Option[Long] = None): org.apache.spark.sql.Dataset[FpDecision] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val timeoutConf = if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-                      else GroupStateTimeout.NoTimeout()
-    docs.groupByKey(_.fp)
-      .flatMapGroupsWithState[FpState, FpDecision](OutputMode.Append(), timeoutConf) {
-        (fp: String, rows: Iterator[FpDoc], state: GroupState[FpState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.toSeq.sortBy(r => (r.ingest_epoch, r.doc_id))
-            var st = state.getOption.getOrElse(FpState(-1L, 0L))
-            val out = sorted.map { r =>
-              if (st.first_doc_id < 0) {
-                st = FpState(r.doc_id, 1L)
-                FpDecision(fp, r.doc_id, is_new = true, dup_of = -1L)
-              } else {
-                st = st.copy(n_seen = st.n_seen + 1)
-                FpDecision(fp, r.doc_id, is_new = false, dup_of = st.first_doc_id)
-              }
-            }
-            state.update(st)
-            stateTtlMs.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
-  }
-
-  // ---- custom state: transformWithState (Spark 4 arbitrary state) -----
-
-  case class UserEvent(user_id: Long, value: Double)
-  case class UserTotal(user_id: Long, n_events: Long, total_value: Double,
-                       batches_seen: Long)
-
-  /** Running per-user totals through `transformWithState` — Spark 4's
-    * arbitrary-state API (the successor to `flatMapGroupsWithState`
-    * [[statefulDedup]] uses): typed `ValueState` in the RocksDB state
-    * store, explicit `init`, per-key input iteration. Each micro-batch
-    * emits the UPDATED cumulative (count, sum, batches) row per user
-    * that received events — the streaming analogue of the reference's
-    * per-request usage counters (`embedding_generator.py:169-179`) kept
-    * durably across batches. Requires
-    * `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider (the only provider backing the new API). */
-  class RunningTotalProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, UserEvent, UserTotal] {
-    import org.apache.spark.sql.streaming.{TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.{Encoders => E}
-    @transient private var state: ValueState[UserTotal] = _
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      state = getHandle.getValueState[UserTotal]("totals",
-        E.product[UserTotal], TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[UserEvent],
-                                 tv: TimerValues): Iterator[UserTotal] = {
-      val prev = if (state.exists()) state.get() else UserTotal(key, 0L, 0.0, 0L)
-      var n = prev.n_events
-      var tot = prev.total_value
-      rows.foreach { r => n += 1; tot += r.value }
-      val next = UserTotal(key, n, tot, prev.batches_seen + 1)
-      state.update(next)
-      Iterator.single(next)
-    }
-  }
-
-  def runningUserTotals(
-      events: org.apache.spark.sql.Dataset[UserEvent]): org.apache.spark.sql.Dataset[UserTotal] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningTotalProcessor,
-        TimeMode.None(), OutputMode.Update())
   }
 
   // ---- streaming crawl frontier: per-host politeness state -----------
@@ -531,87 +300,6 @@ object StreamingIngest {
         TimeMode.None(), OutputMode.Append())
   }
 
-  // ---- streaming NEAR-dup: banded SimHash with per-bucket state ------
-
-  case class NearDoc(doc_id: Long, text: String, ingest_epoch: Long)
-  case class NearDupHit(doc_id: Long, dup_of: Long, hamming: Int)
-  case class BandState(ids: List[Long], fps: List[Long])
-
-  /** Streaming NEAR-duplicate detection — the banding half of
-    * [[graft.operators.Dedup.simhashPairs]] lifted onto per-bucket
-    * stream state. Each document's per-row 60-bit SimHash
-    * ([[graft.operators.Dedup.simhash60Col]] — computed BEFORE any
-    * stateful operator, so the query stays a single flatMapGroups stage)
-    * explodes into 4 × 15-bit band keys; each (band, bucket) group keeps
-    * the fingerprints it has seen and reports every incoming document
-    * within `maxHamming` XOR-popcount bits of a stored one, tagged with
-    * the EARLIEST matching keeper of that bucket. Pigeonhole gives the
-    * same exact-recall-≤-3 guarantee as the batch operator; a pair
-    * sharing several bands is reported by each (consumers
-    * `dropDuplicates(doc_id, dup_of)` — band-local state cannot know
-    * what other buckets already emitted).
-    *
-    * Scale/state honesty: per-bucket state is capped at `perBucketCap`
-    * fingerprints FIFO (a hot bucket would otherwise grow with the
-    * stream; beyond the cap, recall degrades against the evicted tail
-    * exactly like a production sliding dedup window), and `stateTtlMs`
-    * evicts idle buckets wholesale under the same
-    * ProcessingTimeTimeout contract (and caveats) as [[statefulDedup]].
-    *
-    * The cap is not silent: pass `evictions` to count every
-    * fingerprint dropped past `perBucketCap` (across all band buckets).
-    * It is an accumulator, so task retries / micro-batch replays can
-    * overcount — a MONITORING signal for "this stream is losing
-    * recall", not an exactly-once metric; zero still means zero. */
-  def streamingNearDups(docs: org.apache.spark.sql.Dataset[NearDoc],
-                        maxHamming: Int = 3, perBucketCap: Int = 64,
-                        stateTtlMs: Option[Long] = None,
-                        evictions: Option[org.apache.spark.util.LongAccumulator] = None)
-      : org.apache.spark.sql.Dataset[NearDupHit] = {
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val timeoutConf = if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-                      else GroupStateTimeout.NoTimeout()
-    val banded = docs
-      .withColumn("fp", graft.operators.Dedup.simhash60Col(col("text")))
-      .select(col("doc_id"), col("ingest_epoch"), col("fp"),
-        explode(org.apache.spark.sql.functions.array((0 until 4).map(b =>
-          (lit(b.toLong) * 32768L) +
-            shiftright(col("fp"), b * 15).bitwiseAND(lit(32767L))): _*))
-          .as("band_key"))
-      .as[(Long, Long, Long, Long)] // (doc_id, ingest_epoch, fp, band_key)
-    banded.groupByKey(_._4)
-      .flatMapGroupsWithState[BandState, NearDupHit](OutputMode.Append(), timeoutConf) {
-        (_: Long, rows: Iterator[(Long, Long, Long, Long)], state: GroupState[BandState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(BandState(Nil, Nil))
-            // oldest-first within the batch so in-batch pairs resolve to
-            // the earliest keeper, like the batch operator's id order
-            val sorted = rows.toSeq.sortBy(r => (r._2, r._1))
-            val out = Seq.newBuilder[NearDupHit]
-            sorted.foreach { case (id, _, fp, _) =>
-              // earliest stored entry within range wins (state lists are
-              // append-ordered, so the first hit is the earliest)
-              st.ids.iterator.zip(st.fps.iterator)
-                .find { case (_, sfp) =>
-                  java.lang.Long.bitCount(sfp ^ fp) <= maxHamming } match {
-                case Some((keeper, sfp)) =>
-                  out += NearDupHit(id, keeper, java.lang.Long.bitCount(sfp ^ fp))
-                case None => ()
-              }
-              val grown = st.ids :+ id
-              val dropped = grown.size - perBucketCap
-              if (dropped > 0) evictions.foreach(_.add(dropped.toLong))
-              st = BandState(grown.takeRight(perBucketCap),
-                (st.fps :+ fp).takeRight(perBucketCap))
-            }
-            state.update(st)
-            stateTtlMs.foreach(state.setTimeoutDuration)
-            out.result().iterator
-          }
-      }
-  }
 
   // ---- streaming incremental recrawl: per-URL validator state --------
 
@@ -747,9 +435,8 @@ object StreamingIngest {
     * classifies `original` via the incremental operator's self-keeper
     * rule instead of becoming a duplicate of itself. Old versions are
     * retained as the ledger's history (each is
-    * fingerprint-ledger-sized; a janitor can prune all but the latest
-    * committed version at any time without coordination).
-    * Caller starts/stops the query. */
+    * fingerprint-ledger-sized; the reader only ever opens the latest
+    * committed one). Caller starts/stops the query. */
   def streamingLedgerDedup(docs: DataFrame, ledgerDir: String,
                            verdictDir: String, checkpointDir: String)
       : DataStreamWriter[Row] =
@@ -772,8 +459,7 @@ object StreamingIngest {
     * write is a per-batch dynamic partition overwrite, and a
     * redelivered doc meeting ITSELF in the ledger is excluded by the
     * pair operator's self-id rule (it still pairs against its
-    * legitimate bucket mates — deterministic under replay).
-    * [[pruneLedgerVersions]] applies unchanged. */
+    * legitimate bucket mates — deterministic under replay). */
   def streamingNearDupLedger(docs: DataFrame, ledgerDir: String,
                              pairsDir: String, checkpointDir: String,
                              maxHamming: Int = 3, cap: Int = 64)
@@ -815,26 +501,4 @@ object StreamingIngest {
         next(b, ledger).localCheckpoint()
           .write.mode("overwrite").parquet(s"$ledgerDir/v$nextVersion")
       }
-
-  /** The ledger janitor: delete every COMMITTED version below the
-    * latest `keep` committed ones, plus any uncommitted crash residue
-    * OLDER than the latest committed version (an uncommitted dir newer
-    * than it may be a write in flight — never touched). Safe to run at
-    * any time, concurrently with the stream: the reader only ever
-    * opens the latest committed version, which is always retained
-    * (`keep` is clamped to ≥ 1). Returns the deleted version numbers. */
-  def pruneLedgerVersions(spark: org.apache.spark.sql.SparkSession,
-                          ledgerDir: String, keep: Int = 2): Seq[Long] = {
-    val (_, all, committed) = ledgerVersions(spark, ledgerDir)
-    if (committed.isEmpty) return Seq.empty
-    val keepFloor = committed.sorted.takeRight(math.max(1, keep)).head
-    val doomed = all.filter { v =>
-      if (committed.contains(v)) v < keepFloor
-      else v < committed.max // residue provably superseded
-    }.sorted
-    val root = new org.apache.hadoop.fs.Path(ledgerDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    doomed.foreach(v => fs.delete(new org.apache.hadoop.fs.Path(root, s"v$v"), true))
-    doomed
-  }
 }

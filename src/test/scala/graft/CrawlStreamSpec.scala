@@ -19,55 +19,46 @@ class CrawlStreamSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getInt(1), r.getBoolean(2), r.getString(3)))
       .sortBy(t => (t._1, t._2)).toSeq
 
+  /** One micro-batch of the crawl ledger folded straight into the base
+    * table: append the batch's segment, then compact it. */
+  private def appendCompact(batch: DataFrame, dir: String): Unit = {
+    StreamingIngest.crawlAppendBatch(spark, batch, dir)
+    StreamingIngest.crawlCompact(spark, dir)
+  }
+
   test("streamed crawl upserts equal the batch chain, one copy per page") {
     val dir = tmp("graft-crawl-parity")
     val all = DocFixtures.warcAll.toDF("warc", "content")
     // batch 0: the plain shard; batch 1: its gz twin — a RE-crawl of the
-    // same pages, which the fp-keyed LWW merge must collapse, not append
-    StreamingIngest.crawlUpsertBatch(spark, all.filter($"warc" === "crawl"), dir)
-    StreamingIngest.crawlUpsertBatch(spark, all.filter($"warc" === "crawl_gz"), dir)
-    // at-least-once replay of the second batch: byte-identical no-op
-    StreamingIngest.crawlUpsertBatch(spark, all.filter($"warc" === "crawl_gz"), dir)
-    val streamed = finalCols(spark.read.parquet(dir))
+    // same pages, which the fp-keyed LWW resolve must collapse, not
+    // append; then an at-least-once replay of the second batch
+    for (shard <- Seq("crawl", "crawl_gz", "crawl_gz"))
+      StreamingIngest.crawlAppendBatch(spark, all.filter($"warc" === shard), dir)
     val batch = finalCols(Warc.warcHtmlBlocks(all).dropDuplicates("url", "block_idx", "content"))
+    assert(batch.nonEmpty)
+    // the view resolves LWW without compacting…
+    val streamed = finalCols(StreamingIngest.crawlCorpusView(spark, dir))
     assert(streamed === batch)
-    assert(streamed.nonEmpty)
     // exactly ONE row per (url, block): the re-crawl replaced, the
     // replay no-op'd
     assert(streamed.map(t => (t._1, t._2)).distinct.size === streamed.size)
-  }
-
-  test("append+compact (LSM path) equals the per-batch upsert chain exactly") {
-    val upsertDir = tmp("graft-crawl-upsert")
-    val appendDir = tmp("graft-crawl-append")
-    val all = DocFixtures.warcAll.toDF("warc", "content")
-    for (shard <- Seq("crawl", "crawl_gz", "crawl_gz")) { // incl. the replay
-      StreamingIngest.crawlUpsertBatch(spark, all.filter($"warc" === shard), upsertDir)
-      StreamingIngest.crawlAppendBatch(spark, all.filter($"warc" === shard), appendDir)
-    }
-    // the view resolves LWW without compacting…
-    assert(finalCols(StreamingIngest.crawlCorpusView(spark, appendDir)) ===
-      finalCols(spark.read.parquet(upsertDir)))
     // …and compacting materializes the same rows and drops the segments
-    StreamingIngest.crawlCompact(spark, appendDir)
-    assert(finalCols(spark.read.parquet(appendDir)) ===
-      finalCols(spark.read.parquet(upsertDir)))
-    val fs = new org.apache.hadoop.fs.Path(appendDir)
+    StreamingIngest.crawlCompact(spark, dir)
+    assert(finalCols(spark.read.parquet(dir)) === batch)
+    val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(appendDir + "_seg")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "_seg")))
     // compact with no new segments is a no-op; appending after a
     // compact folds into the existing base on the next one
-    StreamingIngest.crawlCompact(spark, appendDir)
-    StreamingIngest.crawlAppendBatch(spark, all.filter($"warc" === "crawl"), appendDir)
-    StreamingIngest.crawlCompact(spark, appendDir)
-    assert(finalCols(spark.read.parquet(appendDir)) ===
-      finalCols(spark.read.parquet(upsertDir)))
+    StreamingIngest.crawlCompact(spark, dir)
+    appendCompact(all.filter($"warc" === "crawl"), dir)
+    assert(finalCols(spark.read.parquet(dir)) === batch)
   }
 
   test("a changed page on re-crawl REPLACES its previous extraction (identity-keyed LWW)") {
     val dir = tmp("graft-crawl-recrawl")
     val all = DocFixtures.warcAll.toDF("warc", "content")
-    StreamingIngest.crawlUpsertBatch(spark, all.filter($"warc" === "crawl"), dir)
+    appendCompact(all.filter($"warc" === "crawl"), dir)
     val before = spark.read.parquet(dir).count()
     // a re-crawl whose content CHANGED: same page identity (no declared
     // canonical → the fetch url), so LWW on (crawl_key, block_idx)
@@ -81,8 +72,7 @@ class CrawlStreamSpec extends SparkSpec {
         "Content-Length: " + httpBody.length + "\r\n\r\n").getBytes("ISO-8859-1") ++ httpBody
     val parsed = Warc.parseWarc(warc)
     assert(parsed.isDefined && parsed.get.head.http_status === Some(200))
-    StreamingIngest.crawlUpsertBatch(spark,
-      Seq(("recrawl", warc)).toDF("warc", "content"), dir)
+    appendCompact(Seq(("recrawl", warc)).toDF("warc", "content"), dir)
     val after = spark.read.parquet(dir)
     assert(after.count() === before)
     assert(after.filter($"content" === "Parsing at planetary scale").count() === 1)
@@ -101,17 +91,17 @@ class CrawlStreamSpec extends SparkSpec {
     }
     val p1 = "<p>First paragraph with plenty of real content inside.</p>"
     val p2 = "<p>Second paragraph that the re-crawl later removes entirely.</p>"
-    StreamingIngest.crawlUpsertBatch(spark,
+    appendCompact(
       Seq(pageWarc(s"<html><body>$p1$p2</body></html>")).toDF("warc", "content"), dir)
     assert(spark.read.parquet(dir).count() === 2)
     // the page shrank to ONE block: the old block_idx 1 row must die
     // with its version, not survive as a franken-document
-    StreamingIngest.crawlUpsertBatch(spark,
+    appendCompact(
       Seq(pageWarc(s"<html><body>$p1</body></html>")).toDF("warc", "content"), dir)
     val rows = spark.read.parquet(dir).collect()
     assert(rows.length === 1, rows.mkString("; "))
     assert(rows.head.getAs[String]("content").startsWith("First paragraph"))
-    // and the LSM path resolves identically
+    // and the uncompacted view resolves identically
     val segDir = tmp("graft-crawl-shrink-seg")
     StreamingIngest.crawlAppendBatch(spark,
       Seq(pageWarc(s"<html><body>$p1$p2</body></html>")).toDF("warc", "content"), segDir)
@@ -129,10 +119,10 @@ class CrawlStreamSpec extends SparkSpec {
         "\r\nContent-Length: " + httpBody.length + "\r\n\r\n").getBytes("ISO-8859-1")
         ++ httpBody)
     }
-    StreamingIngest.crawlUpsertBatch(spark, Seq(
+    appendCompact(Seq(
       twinWarc("http://amp.example.com/story", DocFixtures.canonicalTwinAHtml))
       .toDF("warc", "content"), dir)
-    StreamingIngest.crawlUpsertBatch(spark, Seq(
+    appendCompact(Seq(
       twinWarc("http://m.example.com/story", DocFixtures.canonicalTwinBHtml))
       .toDF("warc", "content"), dir)
     val rows = spark.read.parquet(dir)

@@ -7,6 +7,31 @@ import graft.operators.{DocExtract, DocFixtures}
   * from the implementation. */
 class DocExtractSpec extends SparkSpec {
 
+  /** HYBRID-reference variant (Acrobat's 1.4-compat layout): the same
+    * body as [[DocFixtures.pdfBytesXrefStream]], but `startxref` points
+    * at a CLASSIC xref table whose trailer carries `/XRefStm` → the xref
+    * stream that actually holds the compressed-object entries. A
+    * classic-only reader sees a well-formed (if sparse) table; a 1.5
+    * reader follows /XRefStm for the ObjStm members. */
+  private def pdfBytesHybrid(pages: Seq[Seq[String]]): Array[Byte] = {
+    val base = DocFixtures.pdfBytesXrefStream(pages)
+    val iso = java.nio.charset.StandardCharsets.ISO_8859_1
+    val raw = new String(base, iso)
+    // body = everything up to (and excluding) the builder's startxref
+    val sx = raw.lastIndexOf("startxref")
+    val body = raw.substring(0, sx)
+    val xrefStmPos = raw.substring(sx + "startxref".length).trim.takeWhile(_.isDigit).toLong
+    val size = "/Size (\\d+)".r.findFirstMatchIn(raw).map(_.group(1).toInt)
+      .getOrElse(throw new IllegalStateException("no /Size in base pdf"))
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(body.getBytes(iso))
+    val tablePos = out.size()
+    out.write((s"xref\n0 1\n0000000000 65535 f \n" +
+      s"trailer\n<< /Size $size /Root 1 0 R /XRefStm $xrefStmPos >>\n" +
+      s"startxref\n$tablePos\n%%EOF\n").getBytes(iso))
+    out.toByteArray
+  }
+
   // ---- DOCX ------------------------------------------------------------
 
   test("docx: paragraphs keep their full-enumeration index, headings become sections") {
@@ -227,7 +252,7 @@ class DocExtractSpec extends SparkSpec {
     val builders = Seq(
       DocFixtures.pdfBytes(DocFixtures.contractPages),
       DocFixtures.pdfBytesXrefStream(DocFixtures.amendmentPages),
-      DocFixtures.pdfBytesHybrid(DocFixtures.amendmentPages),
+      pdfBytesHybrid(DocFixtures.amendmentPages),
       DocFixtures.pdfBytesCid(DocFixtures.cidPages))
     val rnd = new scala.util.Random(4242)
     builders.foreach { base =>
@@ -367,7 +392,7 @@ class DocExtractSpec extends SparkSpec {
 
   test("pdf hybrid: classic trailer's /XRefStm reaches the ObjStm entries") {
     val pages = DocExtract.parsePdf(
-      DocFixtures.pdfBytesHybrid(DocFixtures.amendmentPages)).get
+      pdfBytesHybrid(DocFixtures.amendmentPages)).get
     assert(pages == DocExtract.parsePdf(
       DocFixtures.pdfBytesXrefStream(DocFixtures.amendmentPages)).get)
   }

@@ -58,18 +58,14 @@ class DsirSpec extends SparkSpec {
     }
   }
 
-  test("featureList emits word unigrams plus adjacent bigrams") {
-    val out = Seq(("Big Cats RUN fast!"))
-      .toDF("text").select(Dsir.featureList(col("text")).as("f"))
-      .as[Seq[String]].collect()(0)
-    assert(out == Seq("big", "cats", "run", "fast",
+  test("featuresFromWords emits word unigrams plus adjacent bigrams") {
+    def features(ws: Seq[String]): Seq[String] =
+      Seq(ws).toDF("ws").select(Dsir.featuresFromWords(col("ws")).as("f"))
+        .as[Seq[String]].collect()(0)
+    assert(features(Seq("big", "cats", "run", "fast")) == Seq("big", "cats", "run", "fast",
       "big cats", "cats run", "run fast"))
-    val one = Seq(("solo")).toDF("text")
-      .select(Dsir.featureList(col("text")).as("f")).as[Seq[String]].collect()(0)
-    assert(one == Seq("solo"))
-    val none = Seq(("123 456")).toDF("text")
-      .select(Dsir.featureList(col("text")).as("f")).as[Seq[String]].collect()(0)
-    assert(none.isEmpty)
+    assert(features(Seq("solo")) == Seq("solo"))
+    assert(features(Seq.empty).isEmpty)
   }
 
   test("fitBuckets counts are consistent and every row carries the totals") {

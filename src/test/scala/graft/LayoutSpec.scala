@@ -149,7 +149,6 @@ class LayoutSpec extends SparkSpec {
     assert(firstKept === firstInRange, "reordered JSON line must still be parsed")
     assert(kept.size >= 1, "the malformed line's file must be kept (fail safe)")
     assert(kept.size === (if (firstInRange) 2 else 1))
-    assert(Layout.trackedCols(spark, dir) === Seq("user_id"))
   }
 
   test("readPruned with a fully-out-of-range predicate returns an empty, well-typed frame") {
@@ -202,7 +201,6 @@ class LayoutSpec extends SparkSpec {
     Layout.writeWithStats(
       df.repartitionByRange(3, col("cat")).sortWithinPartitions("cat"),
       dir, Seq("cat"))
-    assert(Layout.trackedCols(spark, dir) === Seq("cat"))
     for ((v, wantId) <- Seq("apple" -> 1L, "zebra" -> 4L,
         "éclair" -> 5L, "😀moji" -> 6L)) {
       val (kept, total) = Layout.prunedPathsEq(spark, dir, "cat", v)
@@ -216,59 +214,6 @@ class LayoutSpec extends SparkSpec {
     assert(Layout.readPrunedEq(spark, dir, "cat", "nope").count() === 0L)
   }
 
-  test("compact re-derives the stats manifest so skipping survives re-filing") {
-    val dir = java.nio.file.Files.createTempDirectory("layout-compact").toString + "/t"
-    val ev = graft.io.Tables.events(spark, "/root/testdata/sf0.001")
-      .select("event_id", "user_id", "ts_ns")
-    Layout.writeWithStats(
-      Layout.zorderBy(ev, "user_id", "ts_ns", bits = 8, numFiles = 8),
-      dir, Seq("user_id", "ts_ns"))
-    assert(Layout.trackedCols(spark, dir).sorted === Seq("ts_ns", "user_id"))
-    val want = Layout.readPruned(spark, dir, "user_id", 10L, 20L)
-      .collect().map(_.getLong(0)).sorted.toSeq
-    // compact into fewer, larger files — the old manifest's names die
-    val n = graft.io.Tables.compact(spark, dir, targetFileBytes = 1L << 40)
-    assert(n === 1)
-    assert(Layout.trackedCols(spark, dir).sorted === Seq("ts_ns", "user_id"),
-      "compact must re-derive the manifest for the new files")
-    val got = Layout.readPruned(spark, dir, "user_id", 10L, 20L)
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(got === want, "skipping after compact must not change the answer")
-    // the single compacted file is everything — prune keeps it, bounded
-    val (kept, total) = Layout.prunedPaths(spark, dir, "user_id", 10L, 20L)
-    assert(total === 1 && kept.size === 1)
-    // and an impossible range now skips the WHOLE table via the manifest
-    val (none, _) = Layout.prunedPaths(spark, dir, "user_id", Long.MaxValue - 1, Long.MaxValue)
-    assert(none.isEmpty, "re-derived bounds must allow full skips")
-  }
-
-  test("compact still SPLITS an oversized file despite the at-target-count early exit") {
-    // one file whose bytes exceed targetFileBytes: count (1) <= nFiles,
-    // but the early exit must not skip the re-split — a hot partition
-    // accumulating into one ever-growing file would otherwise never be
-    // re-filed by any maintenance pass
-    val dir = java.nio.file.Files.createTempDirectory("layout-split").toString + "/t"
-    graft.io.Tables.events(spark, "/root/testdata/sf0.001")
-      .select("event_id", "user_id", "ts_ns")
-      .coalesce(1).write.parquet(dir)
-    def files() = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    assert(files().length === 1)
-    val oneFileBytes = files().head.length()
-    // already at target count AND under target size: pure-LIST skip,
-    // the file is not rewritten (names unchanged)
-    val before = files().map(_.getName).toSet
-    assert(graft.io.Tables.compact(spark, dir,
-      targetFileBytes = oneFileBytes * 2) === 1)
-    assert(files().map(_.getName).toSet === before,
-      "an already-compact table must not be rewritten")
-    // target = a quarter of the single file: count (1) <= nFiles (4),
-    // but the SIZE guard must force the re-split
-    val n = graft.io.Tables.compact(spark, dir, targetFileBytes = oneFileBytes / 4)
-    assert(files().length > 1, "an oversized file must be re-split")
-    assert(n === files().length)
-  }
-
   test("nested (dotted) stats columns round-trip the manifest and still prune") {
     val dir = java.nio.file.Files.createTempDirectory("layout-nested").toString + "/t"
     val df = (0L until 100L).map(i => (i, (i * 10, s"p$i")))
@@ -276,17 +221,13 @@ class LayoutSpec extends SparkSpec {
     Layout.writeWithStats(
       df.repartitionByRange(4, col("s.x")).sortWithinPartitions("s.x"),
       dir, Seq("s.x"))
-    // the dotted name must survive manifest parsing (regex quoting)
-    assert(Layout.trackedCols(spark, dir) === Seq("s.x"))
+    // the dotted name must survive manifest parsing (regex quoting):
+    // skipping under it proves its bounds were read back
     val (kept, total) = Layout.prunedPaths(spark, dir, "s.x", 0L, 90L)
     assert(total === 4 && kept.size < total, s"kept ${kept.size}/$total")
     val got = Layout.readPruned(spark, dir, "s.x", 0L, 90L)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(got === (0L to 9L), "s.x <= 90 keeps ids 0..9")
-    // and compact re-derives the dotted-key manifest intact
-    graft.io.Tables.compact(spark, dir, targetFileBytes = 1L << 40)
-    assert(Layout.trackedCols(spark, dir) === Seq("s.x"),
-      "dotted key must survive the compact re-derivation")
   }
 
   test("prunedPaths refuses a partitioned tree; readPruned degrades to a plain filter") {

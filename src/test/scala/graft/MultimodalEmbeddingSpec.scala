@@ -6,17 +6,15 @@ import graft.operators.{Embedding, Multimodal}
 class MultimodalEmbeddingSpec extends SparkSpec {
   import spark.implicits._
 
-  test("columnar decodeMeta and typed mapPartitions decode agree") {
+  test("columnar decodeMeta: byte length, head hex and the length-derived geometry") {
     val docs = Seq((1L, "hello world"), (2L, "x" * 250)).toDF("doc_id", "text")
-    val bin = Multimodal.binaryDocs(docs)
-    val colMeta = Multimodal.decodeMeta(bin)
-      .select("doc_id", "byte_len", "width", "height", "n_frames")
-      .orderBy("doc_id").collect()
-    val typedMeta = Multimodal.decodePartitioned(bin)
-      .toDF.select("doc_id", "byte_len", "width", "height", "n_frames")
-      .orderBy("doc_id").collect()
-    assert(colMeta.map(_.toSeq.map(_.toString)).toSeq ===
-      typedMeta.map(_.toSeq.map(_.toString)).toSeq)
+    val meta = Multimodal.decodeMeta(Multimodal.binaryDocs(docs))
+      .select("doc_id", "byte_len", "head_hex", "width", "height", "n_frames")
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    // width = 64 + len % 576, height = 64 + 7·len % 416, frames = len / 100 + 1
+    assert(meta === Seq(
+      Seq(1L, 11, "68656c6c6f20776f", 75, 141, 1L),
+      Seq(2L, 250, "7878787878787878", 314, 150, 3L)))
   }
 
   test("frame sampling emits every step-th frame with 25fps timestamps") {

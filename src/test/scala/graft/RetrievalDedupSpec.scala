@@ -159,8 +159,47 @@ class RetrievalDedupSpec extends SparkSpec {
     assert(replayed.collect().toSet === ledger.collect().toSet)
   }
 
+  test("simhashPairsCapped: a cap one below the fullest bucket's occupancy " +
+      "drops no pair (generative, seeded)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // word pool small enough that copies and one-word edits near-dup
+    val pool = Vector("alpha", "beta", "gamma", "delta", "epsilon",
+      "zeta", "eta", "theta", "iota", "kappa")
+    val freshDoc = Gen.choose(4, 8).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf(pool)).map(_.mkString(" ")))
+    val corpusGen: Gen[Seq[String]] = for {
+      n <- Gen.choose(8, 20)
+      texts <- Gen.listOfN(n, freshDoc)
+    } yield texts.zipWithIndex.map {
+      case (_, i) if i >= 2 && i % 4 == 0 => texts(i / 2) // exact copy
+      case (_, i) if i >= 2 && i % 3 == 0 =>                // one-word edit
+        (pool(i % pool.size) +: texts(i / 2).split(" ").drop(1)).mkString(" ")
+      case (t, _) => t
+    }
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    (0 until 6).flatMap(i => corpusGen.apply(Gen.Parameters.default, Seed(1300L + i)))
+      .foreach { texts =>
+        val docs = texts.zipWithIndex.map { case (t, j) => (j + 1L, t) }.toDF("doc_id", "text")
+        // the fullest (band, bucket) of the 4-band banding
+        val fullest = docs.select(Dedup.simhash60Col(col("text")).as("fp"))
+          .select(posexplode(array((0 until 4).map(b =>
+            shiftright(col("fp"), b * 15).bitwiseAND(lit(32767L))): _*))
+            .as(Seq("band", "bucket")))
+          .groupBy(col("band"), col("bucket")).count()
+          .agg(max(col("count"))).head().getLong(0).toInt
+        // a bucket's largest id is never a pair source (pairs run from
+        // the smaller id), so the tightest cap that drops nothing is one
+        // below the fullest bucket's occupancy
+        val cap = math.max(1, fullest - 1)
+        assert(pairs(Dedup.simhashPairsCapped(docs, cap = cap)) ===
+          pairs(Dedup.simhashPairs(docs)), s"cap=$cap must not drop a pair")
+      }
+  }
+
   test("minhash ledger: batch near-dups classify against prior snapshots; " +
-      "prior keepers survive smaller batch ids; replay is a no-op") {
+      "a replayed prior doc is not a near-dup of itself") {
     val base = "the quick brown fox jumps over the lazy dog near the river " +
       "bank while the miller watches the water wheel turn slowly all day"
     val prior = Seq((10L, base)).toDF("doc_id", "text")
@@ -180,21 +219,10 @@ class RetrievalDedupSpec extends SparkSpec {
     // self-keeper rule), not a near-dup of itself
     val replayOut = Dedup.minhashPairsIncremental(prior, ledger, cap = 2).collect()
     assert(!replayOut.exists(r => r.getLong(1) == 10L && r.getLong(2) == 10L))
-    // ledger update: prior keeper 10 holds its slots against smaller
-    // batch ids (first sighting wins), buckets stay capped, replay no-op
-    val smallIds = Seq((1L, base), (2L, base), (3L, base)).toDF("doc_id", "text")
-    val after = Dedup.minhashLedgerAfter(smallIds, ledger, cap = 2)
-    assert(after.filter(col("id") === 10L).count() === 4L,
-      "the prior keeper holds all four band slots")
-    val worst = after.groupBy("band", "bucket").count()
-      .agg(org.apache.spark.sql.functions.max("count")).head().getLong(0)
-    assert(worst <= 2L)
-    val replayedLedger = Dedup.minhashLedgerAfter(prior, ledger, cap = 2)
-    assert(replayedLedger.collect().toSet === ledger.collect().toSet)
   }
 
   test("semantic incremental: ledger reps flag batch dups under frozen " +
-      "centroids; self-replay stays original; ledgerAfter keeps priors") {
+      "centroids; self-replay stays original") {
     import graft.operators.Similarity
     // 12 vectors in two well-separated directions; ids chosen so the
     // prior third (id%3==0) covers both cells
@@ -226,20 +254,10 @@ class RetrievalDedupSpec extends SparkSpec {
       threshold = 0.99999, maxCellReps = 2).collect()
     assert(replay.forall(!_.getAs[Boolean]("is_semantic_dup")),
       "a replayed vector must not become a semantic dup of itself")
-    // ledgerAfter: priors keep their per-cell slots against smaller ids
-    val after = Dedup.semanticLedgerAfter(batch, ledger, cents, maxCellReps = 2)
-    val perCell = after.groupBy("cell").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(perCell.values.forall(_ <= 2L))
-    assert(after.filter(col("vec_id").isin(3L, 6L, 9L)).count() >= 2L,
-      "prior reps are not evicted by smaller batch ids")
-    val replayedAfter = Dedup.semanticLedgerAfter(prior, ledger, cents, maxCellReps = 2)
-    assert(replayedAfter.collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-      === ledger.collect().map(r => (r.getInt(0), r.getLong(1))).toSet)
   }
 
   test("gram ledger: cross-snapshot duplicated passages are caught, " +
-      "batch-only runs are blind to them; state stays capped and exact") {
+      "batch-only runs are blind to them") {
     val passage = "the quick brown fox jumps over the lazy dog beside the river"
     val prior = Seq((100L, s"opening words here $passage closing words here"))
       .toDF("doc_id", "text")
@@ -254,23 +272,6 @@ class RetrievalDedupSpec extends SparkSpec {
     val spans = Dedup.duplicatedSpansIncremental(batch, ledger).collect()
     assert(spans.nonEmpty && spans.forall(_.getAs[Long]("doc_id") == 200L),
       "the cross-snapshot duplicated passage must surface, on the batch doc")
-    // state is capped at minDocs ids per gram, exactly the smallest
-    val flood = (1L to 9L).map(i => (i, s"pad$i $passage tail$i")).toDF("doc_id", "text")
-    val after = Dedup.gramLedgerAfter(flood, ledger)
-    val sizes = after.select(size(col("docs"))).collect().map(_.getInt(0))
-    assert(sizes.forall(_ <= 2))
-    // a passage gram seen by prior doc 100 and flood docs keeps the
-    // two smallest ids (1, 2) — the global minima, not first-writes
-    val passageFp = Dedup.gramLedger(
-        Seq((0L, passage)).toDF("doc_id", "text"))
-      .select("fp").collect().map(_.getLong(0)).toSet
-    val merged = after.filter(col("fp").isin(passageFp.toSeq: _*))
-      .select(col("docs")).collect().map(_.getSeq[Long](0))
-    assert(merged.nonEmpty && merged.forall(_ == Seq(1L, 2L)))
-    // replay is a no-op
-    val replayed = Dedup.gramLedgerAfter(prior, ledger)
-    assert(replayed.collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
-      === ledger.collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet)
   }
 
   test("kmeansLoop round 1 equals kmeansStep; later rounds re-center") {

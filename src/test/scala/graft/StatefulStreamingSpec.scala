@@ -1,103 +1,9 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.StreamingIngest
-import graft.streaming.StreamingIngest.{FpDoc, FpDecision}
 
 class StatefulStreamingSpec extends SparkSpec {
   import spark.implicits._
-
-  test("flatMapGroupsWithState dedup tags first arrival new, later ones dup") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[FpDoc]
-    val q = StreamingIngest.statefulDedup(input.toDS())
-      .writeStream.format("memory").queryName("fp_decisions")
-      .outputMode("append").start()
-    try {
-      input.addData(FpDoc("fpA", 1L, 100L), FpDoc("fpA", 2L, 200L), FpDoc("fpB", 3L, 100L))
-      q.processAllAvailable()
-      // second micro-batch: state must remember fpA's keeper
-      input.addData(FpDoc("fpA", 4L, 300L), FpDoc("fpC", 5L, 300L))
-      q.processAllAvailable()
-      val out = spark.table("fp_decisions").as[FpDecision].collect()
-        .sortBy(_.doc_id)
-      assert(out.map(d => (d.doc_id, d.is_new, d.dup_of)).toSeq === Seq(
-        (1L, true, -1L),   // first fpA
-        (2L, false, 1L),   // same batch dup
-        (3L, true, -1L),   // first fpB
-        (4L, false, 1L),   // cross-batch dup: state survived
-        (5L, true, -1L)))
-    } finally q.stop()
-  }
-
-  test("transformWithState running totals accumulate across micro-batches") {
-    import graft.streaming.StreamingIngest.{UserEvent, UserTotal}
-    implicit val sqlCtx = spark.sqlContext
-    // the new arbitrary-state API runs only on the RocksDB provider —
-    // scope the conf to this query and restore afterwards
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[UserEvent]
-    val q = StreamingIngest.runningUserTotals(input.toDS())
-      .writeStream.format("memory").queryName("user_totals")
-      .outputMode("update").start()
-    try {
-      input.addData(UserEvent(1L, 0.5), UserEvent(1L, 0.25), UserEvent(2L, 1.0))
-      q.processAllAvailable()
-      input.addData(UserEvent(1L, 0.25), UserEvent(3L, 2.0))
-      q.processAllAvailable()
-      val out = spark.table("user_totals").as[UserTotal].collect()
-      // last emitted row per user = the cumulative state
-      val last = out.groupBy(_.user_id).map { case (u, rows) =>
-        u -> rows.maxBy(_.batches_seen)
-      }
-      assert(last(1L) == UserTotal(1L, 3L, 1.0, 2L))  // state crossed the batch
-      assert(last(2L) == UserTotal(2L, 1L, 1.0, 1L))
-      assert(last(3L) == UserTotal(3L, 1L, 2.0, 1L))
-      // batch 1 emitted user 1's intermediate total too (update mode)
-      assert(out.exists(t => t.user_id == 1L && t.n_events == 2L && t.total_value == 0.75))
-    } finally {
-      q.stop()
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-    }
-  }
-
-  test("stream-stream interval join matches clicks to in-window purchases") {
-    import org.apache.spark.sql.functions._
-    implicit val sqlCtx = spark.sqlContext
-    // offset event times away from epoch 0: the join's late-row filter
-    // drops rows with event_time <= watermark, and the INITIAL watermark
-    // is epoch 0 — a row stamped exactly 1970-01-01T00:00:00 is "late"
-    // before the first batch even runs
-    val ts = (s: Long) => new java.sql.Timestamp((1000000L + s) * 1000)
-    val clicks = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val purchases = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    def shape(ms: MemoryStream[(Long, Long, java.sql.Timestamp)]) =
-      ms.toDF().toDF("user_id", "event_id", "ts")
-    // watermark wider than the event-time span: the two MemoryStreams can
-    // land in different micro-batches, and a tight watermark would then
-    // (correctly) drop the older purchases as late data
-    val joined = StreamingIngest.clickPurchaseJoin(
-      shape(clicks), shape(purchases), windowSec = 600, watermark = "10 hours")
-    // enqueue BEFORE start so batch 0 sees both sides
-    clicks.addData((1L, 10L, ts(0)), (1L, 11L, ts(5000)), (2L, 12L, ts(0)))
-    purchases.addData(
-      (1L, 90L, ts(300)),   // within 10 min of click 10
-      (1L, 91L, ts(2000)),  // > 10 min after click 10, before click 11
-      (2L, 92L, ts(0)))     // same instant: excluded (strict >)
-    val q = joined.writeStream.format("memory").queryName("cp_join")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val out = spark.table("cp_join")
-        .select("click_id", "purchase_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(out === Set((10L, 90L)))
-    } finally q.stop()
-  }
 
   test("dropDuplicatesWithinWatermark dedups across batches inside the window") {
     import org.apache.spark.sql.functions._

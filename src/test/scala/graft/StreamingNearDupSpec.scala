@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.operators.Dedup
-import graft.streaming.StreamingIngest
-import graft.streaming.StreamingIngest.{NearDoc, NearDupHit}
 import org.apache.spark.sql.functions._
 
+/** The per-row SimHash the streaming near-dup ledger bands on
+  * (`streamingNearDupLedger` through `Dedup.simhashPairsIncremental`). */
 class StreamingNearDupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -18,108 +17,5 @@ class StreamingNearDupSpec extends SparkSpec {
       .filter(col("fp_agg") =!= col("fp_row")).count()
     assert(diff === 0L)
     assert(row.count() === 500L)
-  }
-
-  test("streaming near-dup: same-batch and cross-batch hits with surviving state") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[NearDoc]
-    val q = StreamingIngest.streamingNearDups(input.toDS())
-      .writeStream.format("memory").queryName("near_hits")
-      .outputMode("append").start()
-    try {
-      // identical text = Hamming 0 (a guaranteed near-dup); distinct
-      // vocabularies for the far document
-      input.addData(
-        NearDoc(1L, "alpha beta gamma delta", 100L),
-        NearDoc(2L, "alpha beta gamma delta", 200L),
-        NearDoc(3L, "zulu yankee xray whiskey victor uniform", 100L))
-      q.processAllAvailable()
-      input.addData(NearDoc(4L, "alpha beta gamma delta", 300L))
-      q.processAllAvailable()
-      val hits = spark.table("near_hits").as[NearDupHit].collect()
-        .map(h => (h.doc_id, h.dup_of, h.hamming)).distinct.sortBy(_._1)
-      // 2 dups of 1 in-batch; 4 dups of 1 across the batch boundary; 3 clean
-      assert(hits.toSeq === Seq((2L, 1L, 0), (4L, 1L, 0)))
-    } finally q.stop()
-  }
-
-  test("one-batch stream flags exactly the docs the batch banding operator pairs") {
-    implicit val sqlCtx = spark.sqlContext
-    val docs = graft.io.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text").collect()
-      .map(r => NearDoc(r.getLong(0), r.getString(1), 0L))
-    val batchPairs = Dedup.simhashPairs(
-        graft.io.Tables.documents(spark, "/root/testdata/sf0.001"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    val pairSet = batchPairs.map { case (a, b, h) => (a, b) -> h }.toMap
-    // equal epochs → in-batch order is doc_id asc, so the later id of
-    // every batch pair must be flagged
-    val expectFlagged = batchPairs.map(_._2).toSet
-    val input = MemoryStream[NearDoc]
-    val q = StreamingIngest.streamingNearDups(input.toDS(), perBucketCap = 100000)
-      .writeStream.format("memory").queryName("near_corpus")
-      .outputMode("append").start()
-    try {
-      input.addData(docs.toIndexedSeq: _*)
-      q.processAllAvailable()
-      val hits = spark.table("near_corpus").as[NearDupHit].collect()
-      // soundness: every hit is a genuine batch pair with the same distance
-      hits.foreach { h =>
-        assert(h.dup_of < h.doc_id, s"keeper must be earlier: $h")
-        assert(pairSet.get((h.dup_of, h.doc_id)).contains(h.hamming),
-          s"hit not confirmed by the batch operator: $h")
-      }
-      // completeness: exactly the batch-paired later docs get flagged
-      assert(hits.map(_.doc_id).toSet === expectFlagged)
-      assert(expectFlagged.nonEmpty, "corpus should contain near-dups")
-    } finally q.stop()
-  }
-
-  test("perBucketCap evicts FIFO: the keeper shifts to the oldest retained entry") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[NearDoc]
-    val evicted = spark.sparkContext.longAccumulator("near-dup-evictions")
-    val q = StreamingIngest.streamingNearDups(input.toDS(), perBucketCap = 1,
-        evictions = Some(evicted))
-      .writeStream.format("memory").queryName("near_cap")
-      .outputMode("append").start()
-    try {
-      input.addData(NearDoc(1L, "same words here", 100L))
-      q.processAllAvailable()
-      assert(evicted.value === 0L, "cap not reached yet — counter must stay silent")
-      input.addData(NearDoc(2L, "same words here", 200L))
-      q.processAllAvailable()
-      input.addData(NearDoc(3L, "same words here", 300L))
-      q.processAllAvailable()
-      val hits = spark.table("near_cap").as[NearDupHit].collect()
-        .map(h => (h.doc_id, h.dup_of)).distinct.sortBy(_._1)
-      // cap 1: after doc 2 arrives, doc 1's fingerprint is evicted, so
-      // doc 3 resolves to keeper 2, not 1
-      assert(hits.toSeq === Seq((2L, 1L), (3L, 2L)))
-      // the cap is observable: docs 2 and 3 each evict one fingerprint
-      // in each of the 4 band buckets (identical text → same 4 buckets)
-      assert(evicted.value === 8L,
-        s"expected 2 docs x 4 bands evictions, saw ${evicted.value}")
-    } finally q.stop()
-  }
-
-  test("below the cap the eviction counter stays zero while pairing parity holds") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[NearDoc]
-    val evicted = spark.sparkContext.longAccumulator("near-dup-evictions-parity")
-    val q = StreamingIngest.streamingNearDups(input.toDS(), perBucketCap = 64,
-        evictions = Some(evicted))
-      .writeStream.format("memory").queryName("near_zero")
-      .outputMode("append").start()
-    try {
-      input.addData((1L to 10L).map(i =>
-        NearDoc(i, "the quick brown fox jumps over the lazy dog", i * 100L)): _*)
-      q.processAllAvailable()
-      val hits = spark.table("near_zero").as[NearDupHit].collect()
-        .map(h => (h.doc_id, h.dup_of)).distinct
-      // all 10 identical docs pair to the earliest keeper, nothing evicted
-      assert(hits.toSeq.sortBy(_._1) === (2L to 10L).map(i => i -> 1L))
-      assert(evicted.value === 0L, "under-cap stream must not report evictions")
-    } finally q.stop()
   }
 }

@@ -31,40 +31,6 @@ class StreamingValidationSpec extends SparkSpec {
     assert(out(2).getString(0) === "file_too_large,unsupported_type")
   }
 
-  test("streaming ingest dedups by fingerprint and upserts idempotently") {
-    val src = Files.createTempDirectory("graft_src").toString
-    val tgt = Files.createTempDirectory("graft_tgt").toString + "/docs"
-    val ckp = Files.createTempDirectory("graft_ckp").toString
-
-    def writeBatch(file: String, rows: Seq[(Long, String)]): Unit = {
-      val lines = rows.map { case (id, text) =>
-        s"""{"doc_id": $id, "text": "$text", "lang": "en", "source": "t", "n_chars": ${text.length}}"""
-      }
-      Files.write(java.nio.file.Paths.get(src, file),
-        lines.mkString("\n").getBytes("UTF-8"))
-    }
-
-    // batch 1: two docs, one duplicated content
-    writeBatch("b1.json", Seq((1L, "alpha beta"), (2L, "alpha beta"), (3L, "gamma")))
-    StreamingIngest.ingestStream(spark, src, tgt, ckp).start().awaitTermination()
-    val after1 = spark.read.parquet(tgt)
-    assert(after1.count() === 2) // fp-dedup collapsed 1 and 2
-    val gammaTs1 = after1.filter(col("doc_id") === 3L)
-      .select(col("ingest_ts")).head.getTimestamp(0)
-    // batch 2: same content again (idempotent) + one new doc — a RESTART
-    // from the same checkpoint must resume, not replay b1
-    writeBatch("b2.json", Seq((4L, "alpha beta"), (5L, "delta")))
-    StreamingIngest.ingestStream(spark, src, tgt, ckp).start().awaitTermination()
-    val after2 = spark.read.parquet(tgt)
-    assert(after2.count() === 3) // still one "alpha beta", plus gamma, delta
-    assert(after2.select(countDistinct(col("fp"))).head.getLong(0) === 3)
-    // exactly-once at the source: a replay of b1 would re-stamp gamma
-    // with a fresh ingest_ts and win the last-write-wins merge
-    val gammaTs2 = after2.filter(col("doc_id") === 3L)
-      .select(col("ingest_ts")).head.getTimestamp(0)
-    assert(gammaTs2 === gammaTs1, "restart replayed the committed batch")
-  }
-
   test("streaming ledger dedup: the fingerprint ledger survives a restart " +
       "with a FRESH checkpoint (state lives outside the stream)") {
     import graft.operators.Dedup
@@ -129,38 +95,29 @@ class StreamingValidationSpec extends SparkSpec {
       "an absent ledger path is an empty ledger, not an AnalysisException")
   }
 
-  test("ledger janitor prunes old committed versions, keeps the live tail " +
-      "and any possibly-in-flight newer residue") {
+  test("ledgerLatest reads the newest committed version, never uncommitted " +
+      "residue, and numbers the next write past every version dir") {
     import graft.operators.Dedup
-    val work = Files.createTempDirectory("graft-ledger-janitor")
+    val work = Files.createTempDirectory("graft-ledger-latest")
     val ledgerDir = s"$work/ledger"
     def writeVersion(v: Long): Unit =
       Dedup.fpLedger(Seq((v, s"content $v")).toDF("doc_id", "text"))
         .write.parquet(s"$ledgerDir/v$v")
     (0L to 3L).foreach(writeVersion)
-    // uncommitted residue: v1x older than the latest committed (delete),
-    // v9 newer (a write possibly in flight — keep)
-    def bareDir(name: String): Unit = {
-      val d = new java.io.File(s"$ledgerDir/$name"); d.mkdirs()
-      java.nio.file.Files.write(d.toPath.resolve("part-junk.parquet"),
-        Array[Byte](1, 2, 3))
-    }
-    new java.io.File(s"$ledgerDir/v2/_SUCCESS").delete() // v2 -> uncommitted
-    bareDir("v9")
-    val deleted = StreamingIngest.pruneLedgerVersions(spark, ledgerDir, keep = 2)
-    assert(deleted === Seq(0L, 2L),
-      "v0 is an old committed version; v2 is residue older than v3")
-    val left = new java.io.File(ledgerDir).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(left === Seq("v1", "v3", "v9"),
-      "the keep=2 committed tail (v1, v3) and the newer residue survive")
-    // the reader still resolves the latest committed state
+    // uncommitted residue: v3 loses its commit marker (a crashed write)
+    // and v9 is a bare dir (a write possibly in flight)
+    new java.io.File(s"$ledgerDir/v3/_SUCCESS").delete()
+    val v9 = new java.io.File(s"$ledgerDir/v9"); v9.mkdirs()
+    java.nio.file.Files.write(v9.toPath.resolve("part-junk.parquet"), Array[Byte](1, 2, 3))
     val (df, next) = StreamingIngest.ledgerLatest(spark, ledgerDir)
-    assert(df.count() === 1L && next === 10L)
-    assert(StreamingIngest.pruneLedgerVersions(spark, s"$work/absent") === Seq.empty)
+    assert(df.select("keeper_id").as[Long].collect().toSeq === Seq(2L),
+      "the reader opens v2, the newest committed version")
+    assert(next === 10L, "the next write lands past every version dir, committed or not")
+    val (fresh, freshNext) = StreamingIngest.ledgerLatest(spark, s"$work/absent")
+    assert(fresh.count() === 0L && freshNext === 0L)
   }
 
-  test("upsertBatch swap recovery rolls forward/back without losing the table") {
+  test("recoverSwap rolls an interrupted swap forward/back without losing the table") {
     import org.apache.hadoop.fs.Path
     val base = Files.createTempDirectory("graft_swap").toString
     val dst = new Path(s"$base/docs"); val tmp = new Path(s"$base/docs_tmp")
@@ -199,27 +156,17 @@ class StreamingValidationSpec extends SparkSpec {
     assert(!fs.exists(dst) && !fs.exists(tmp))
   }
 
-  test("upsertBatch breaks ingest_ts ties deterministically by doc_id") {
+  test("crawlCorpusView breaks ingest_ts ties deterministically by doc_id") {
     val tgt = Files.createTempDirectory("graft_tie").toString + "/docs"
     val ts = new java.sql.Timestamp(1000000L)
-    val b1 = Seq((1L, "fp_a", ts), (7L, "fp_a", ts), (3L, "fp_a", ts))
+    // one page version, three rows on one fp key at one ingest_ts
+    Seq((1L, "fp_a", ts), (7L, "fp_a", ts), (3L, "fp_a", ts))
       .toDF("doc_id", "fp", "ingest_ts")
-    StreamingIngest.upsertBatch(spark, b1, tgt)
-    val kept = spark.read.parquet(tgt).select("doc_id").as[Long].collect().toSeq
+      .withColumn("crawl_key", lit("http://example.com/p"))
+      .withColumn("page_ver", lit(1L))
+      .write.parquet(tgt)
+    val kept = StreamingIngest.crawlCorpusView(spark, tgt)
+      .select("doc_id").as[Long].collect().toSeq
     assert(kept === Seq(7L)) // highest doc_id wins the tie, every run
-  }
-
-  test("session_window aggregates event-time sessions (batch execution)") {
-    val ts = (s: Long) => new java.sql.Timestamp(s * 1000)
-    val events = Seq(
-      (1L, ts(0), 10.0), (1L, ts(600), 5.0),    // same session (gap 10 min)
-      (1L, ts(6000), 1.0),                       // new session (gap > 30 min)
-      (2L, ts(0), 2.0))
-      .toDF("user_id", "ts", "value")
-    val out = StreamingIngest.sessionWindowAgg(events)
-      .orderBy("user_id", "session_start").collect()
-    assert(out.map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"))).toSeq ===
-      Seq((1L, 2L), (1L, 1L), (2L, 1L)))
-    assert(out.head.getAs[Double]("sum_value") === 15.0)
   }
 }

@@ -1,42 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.ExplainMode
 import graft.io.Tables
 
 class TablesSpec extends SparkSpec {
   import spark.implicits._
-
-  test("partitioned layout prunes non-matching partitions at scan time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/docs"
-    val docs = Seq((1L, "a", "en"), (2L, "b", "de"), (3L, "c", "en"), (4L, "d", "fr"))
-      .toDF("doc_id", "text", "lang")
-    Tables.overwritePartitioned(docs, dir, "lang")
-
-    // hive-style directories exist
-    val langDirs = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("lang="))
-    assert(langDirs.toSet === Set("lang=en", "lang=de", "lang=fr"))
-
-    val q = spark.read.parquet(dir).filter(col("lang") === "en")
-    val plan = q.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    val pf = plan.linesIterator.filter(_.contains("PartitionFilters")).mkString
-    assert("lang#\\d+ = en".r.findFirstIn(pf).isDefined,
-      s"filter must prune partitions, got: $pf")
-    assert(q.count() === 2)
-  }
-
-  test("ORC and XML sources roundtrip the documents schema byte-exactly") {
-    import graft.io.Tables
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val base = java.nio.file.Files.createTempDirectory("graft_fmt").toString
-    docs.write.orc(s"$base/orc")
-    docs.write.option("rowTag", "doc").option("rootTag", "docs").xml(s"$base/xml")
-    val viaOrc = Tables.documentsFromOrc(spark, s"$base/orc")
-    val viaXml = Tables.documentsFromXml(spark, s"$base/xml")
-    val want = docs.collect().map(_.toSeq).toSet
-    assert(viaOrc.collect().map(_.toSeq).toSet == want)
-    assert(viaXml.collect().map(_.toSeq).toSet == want)
-  }
 
   test("overwrite reinitializes a table (S13 delete_if_exists semantics)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ow").toString + "/t"
@@ -70,122 +38,6 @@ class TablesSpec extends SparkSpec {
         .select(col("ts_ns"), unix_timestamp(col("ts")).as("es")).head
       assert(r.getLong(0) === us * 1000L, s"$d: ts_ns ${r.getLong(0)}")
       assert(r.getLong(1) === us / 1000000L, s"$d: epoch-s ${r.getLong(1)}")
-    }
-  }
-
-  test("compact: collapses a many-small-files table, preserves every row, leaves no debris") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toFile
-    val path = new java.io.File(dir, "t").getAbsolutePath
-    try {
-      (1L to 1000L).toDF("v").repartition(20).write.parquet(path)
-      def files = new java.io.File(path).listFiles()
-        .count(_.getName.endsWith(".parquet"))
-      assert(files == 20)
-      val n = Tables.compact(spark, path) // default target ≫ table size → 1 file
-      assert(n == 1 && files == 1)
-      val vs = spark.read.parquet(path).as[Long].collect().sorted
-      assert(vs.toSeq == (1L to 1000L))
-      assert(!new java.io.File(path + "_tmp").exists())
-      assert(!new java.io.File(path + "_bak").exists())
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir); ()
-    }
-  }
-
-  test("compact: recovers a crash between the two swap renames on retry") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_crash").toFile
-    val path = new java.io.File(dir, "t").getAbsolutePath
-    try {
-      (1L to 100L).toDF("v").repartition(4).write.parquet(path)
-      // simulate: previous compact died after dst->bak and tmp write,
-      // before tmp->dst — dst missing, full copies at tmp and bak
-      (1L to 100L).toDF("v").repartition(1).write.parquet(path + "_tmp")
-      assert(new java.io.File(path).renameTo(new java.io.File(path + "_bak")))
-      val n = Tables.compact(spark, path)
-      assert(n == 1)
-      val vs = spark.read.parquet(path).as[Long].collect().sorted
-      assert(vs.toSeq == (1L to 100L))
-      assert(!new java.io.File(path + "_tmp").exists())
-      assert(!new java.io.File(path + "_bak").exists())
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir); ()
-    }
-  }
-
-  test("compact: heals a legacy _compact_tmp/_compact_bak crash remnant after upgrade") {
-    import spark.implicits._
-    // upgrade hazard: pre-shared-namespace compacts staged at
-    // `<dir>_compact_tmp`/`_compact_bak`. A crash remnant under those
-    // names with dst missing would otherwise read as a first-ever
-    // table; the one-time legacy recovery must roll it forward/back
-    // instead of stranding (then deleting) the only surviving copy.
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_legacy").toFile
-    val path = new java.io.File(dir, "t").getAbsolutePath
-    try {
-      // old-version compact died after dst->bak, before tmp->dst:
-      // dst missing, full copies at the LEGACY-named siblings
-      (1L to 100L).toDF("v").repartition(1).write.parquet(path + "_compact_tmp")
-      (1L to 100L).toDF("v").repartition(4).write.parquet(path + "_compact_bak")
-      val n = Tables.compact(spark, path)
-      assert(n == 1)
-      val vs = spark.read.parquet(path).as[Long].collect().sorted
-      assert(vs.toSeq == (1L to 100L),
-        "the legacy remnant must be rolled forward, not treated as first-ever")
-      assert(!new java.io.File(path + "_compact_tmp").exists())
-      assert(!new java.io.File(path + "_compact_bak").exists())
-      // and with dst healthy, stale legacy staging is simply cleared
-      (1L to 50L).toDF("v").repartition(1).write.parquet(path + "_compact_tmp")
-      Tables.compact(spark, path)
-      assert(!new java.io.File(path + "_compact_tmp").exists())
-      assert(spark.read.parquet(path).as[Long].collect().sorted.toSeq == (1L to 100L))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir); ()
-    }
-  }
-
-  test("a crashed compact on the upsert table is healed by the stream's own recovery") {
-    import spark.implicits._
-    // the cross-family composition hazard: compact and upsertBatch share
-    // one swap-sibling namespace per dst, so the stream's recoverSwap
-    // rolls a crashed compact forward instead of treating the missing
-    // table as first-ever and silently rebuilding it from one micro-batch
-    val dir = java.nio.file.Files.createTempDirectory("graft_xfam").toFile
-    val path = new java.io.File(dir, "t").getAbsolutePath
-    try {
-      val prior = Seq((1L, "old doc one"), (2L, "old doc two"))
-        .toDF("doc_id", "text")
-        .withColumn("fp", graft.operators.TextAnalysis.fingerprint(col("text")))
-        .withColumn("ingest_ts", current_timestamp())
-      prior.write.parquet(path)
-      // simulate compact crashing between its two renames: dst gone,
-      // complete copies at the (shared) tmp and bak siblings
-      prior.repartition(1).write.parquet(path + "_tmp")
-      assert(new java.io.File(path).renameTo(new java.io.File(path + "_bak")))
-      val batch = Seq((3L, "new doc")).toDF("doc_id", "text")
-        .withColumn("fp", graft.operators.TextAnalysis.fingerprint(col("text")))
-        .withColumn("ingest_ts", current_timestamp())
-      graft.streaming.StreamingIngest.upsertBatch(spark, batch, path)
-      val ids = spark.read.parquet(path).select("doc_id").as[Long].collect().sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L),
-        s"prior rows must survive a crashed compact + resumed stream, got ${ids.toSeq}")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir); ()
-    }
-  }
-
-  test("compact: refuses a hive-partitioned layout instead of flattening it") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_part").toFile
-    val path = new java.io.File(dir, "t").getAbsolutePath
-    try {
-      Seq((1L, "a"), (2L, "b")).toDF("v", "k")
-        .write.partitionBy("k").parquet(path)
-      val e = intercept[IllegalArgumentException] { Tables.compact(spark, path) }
-      assert(e.getMessage.contains("partition subdirectories"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir); ()
     }
   }
 }

@@ -54,12 +54,12 @@ class UnigramSpec extends SparkSpec {
     best(word.length)
   }
 
-  test("segmentCorpus equals the reference DP on the testdata corpus") {
+  test("fitSeed + viterbiStats equal the reference DP on the testdata corpus") {
     val d = graft.io.Tables.documents(spark, "/root/testdata/sf0.001")
-    val words = Bpe.wordVocab(d).select("word", "freq").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val vocab = Bpe.wordVocab(d).select("word", "freq").localCheckpoint()
+    val words = vocab.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val inv = refPrune(refSeed(words, 4), 40)
-    val got = Unigram.segmentCorpus(d).collect()
+    val got = Unigram.viterbiStats(vocab, Unigram.fitSeed(vocab, 4, 40)).collect()
       .map(r => r.getString(0) -> ((r.getLong(2), r.getLong(3)))).toMap
     assert(got.keySet === words.keySet)
     words.keys.foreach { w =>
