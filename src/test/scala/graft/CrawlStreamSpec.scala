@@ -19,8 +19,8 @@ class CrawlStreamSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getInt(1), r.getBoolean(2), r.getString(3)))
       .sortBy(t => (t._1, t._2)).toSeq
 
-  /** One micro-batch of the crawl ledger folded straight into the base
-    * table: append the batch's segment, then compact it. */
+  /** One micro-batch of the crawl ledger upserted into the base table:
+    * append the batch's segment, then compact it. */
   private def appendCompact(batch: DataFrame, dir: String): Unit = {
     StreamingIngest.crawlAppendBatch(spark, batch, dir)
     StreamingIngest.crawlCompact(spark, dir)
@@ -33,26 +33,41 @@ class CrawlStreamSpec extends SparkSpec {
     // same pages, which the fp-keyed LWW resolve must collapse, not
     // append; then an at-least-once replay of the second batch
     for (shard <- Seq("crawl", "crawl_gz", "crawl_gz"))
-      StreamingIngest.crawlAppendBatch(spark, all.filter($"warc" === shard), dir)
+      appendCompact(all.filter($"warc" === shard), dir)
+    val streamed = finalCols(spark.read.parquet(dir))
     val batch = finalCols(Warc.warcHtmlBlocks(all).dropDuplicates("url", "block_idx", "content"))
-    assert(batch.nonEmpty)
-    // the view resolves LWW without compacting…
-    val streamed = finalCols(StreamingIngest.crawlCorpusView(spark, dir))
     assert(streamed === batch)
+    assert(streamed.nonEmpty)
     // exactly ONE row per (url, block): the re-crawl replaced, the
     // replay no-op'd
     assert(streamed.map(t => (t._1, t._2)).distinct.size === streamed.size)
+  }
+
+  test("append+compact (LSM path) equals the per-batch upsert chain exactly") {
+    val upsertDir = tmp("graft-crawl-upsert")
+    val appendDir = tmp("graft-crawl-append")
+    val all = DocFixtures.warcAll.toDF("warc", "content")
+    for (shard <- Seq("crawl", "crawl_gz", "crawl_gz")) { // incl. the replay
+      appendCompact(all.filter($"warc" === shard), upsertDir)
+      StreamingIngest.crawlAppendBatch(spark, all.filter($"warc" === shard), appendDir)
+    }
+    // the view resolves LWW without compacting…
+    assert(finalCols(StreamingIngest.crawlCorpusView(spark, appendDir)) ===
+      finalCols(spark.read.parquet(upsertDir)))
     // …and compacting materializes the same rows and drops the segments
-    StreamingIngest.crawlCompact(spark, dir)
-    assert(finalCols(spark.read.parquet(dir)) === batch)
-    val fs = new org.apache.hadoop.fs.Path(dir)
+    StreamingIngest.crawlCompact(spark, appendDir)
+    assert(finalCols(spark.read.parquet(appendDir)) ===
+      finalCols(spark.read.parquet(upsertDir)))
+    val fs = new org.apache.hadoop.fs.Path(appendDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "_seg")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(appendDir + "_seg")))
     // compact with no new segments is a no-op; appending after a
     // compact folds into the existing base on the next one
-    StreamingIngest.crawlCompact(spark, dir)
-    appendCompact(all.filter($"warc" === "crawl"), dir)
-    assert(finalCols(spark.read.parquet(dir)) === batch)
+    StreamingIngest.crawlCompact(spark, appendDir)
+    StreamingIngest.crawlAppendBatch(spark, all.filter($"warc" === "crawl"), appendDir)
+    StreamingIngest.crawlCompact(spark, appendDir)
+    assert(finalCols(spark.read.parquet(appendDir)) ===
+      finalCols(spark.read.parquet(upsertDir)))
   }
 
   test("a changed page on re-crawl REPLACES its previous extraction (identity-keyed LWW)") {
