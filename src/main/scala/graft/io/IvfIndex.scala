@@ -14,12 +14,12 @@ import graft.operators.Similarity
   *
   * Layout under `dir`:
   *  - `vectors/cell=<c>/…parquet` — every vector with its coarse-cell
-  *    assignment, hive-partitioned BY CELL. A probe equi-joins its
-  *    nprobe cells against this scan, and because cell is the partition
-  *    key, Spark's dynamic partition pruning drops every unprobed
-  *    directory at the scan: a query batch reads ~nprobe/nlist of the
-  *    index bytes, the I/O story a 100 TB index needs (spec-asserted on
-  *    the plan's PartitionFilters).
+  *    assignment, hive-partitioned BY CELL. A probe ranks its cells on
+  *    the driver and equi-joins them against this scan; because cell is
+  *    the partition key, the probed cell set is a static partition
+  *    filter that drops every unprobed directory at the scan: a query
+  *    batch reads ~nprobe/nlist of the index bytes, the I/O story a
+  *    100 TB index needs (spec-asserted on the scans' PartitionFilters).
   *  - `centroids/…parquet` — the nlist-row sidecar (cell, centroid).
   *    Metadata-sized driver state on read, exactly like the in-query
   *    codebook samples (README "Scale design": past nlist ~10⁵ the
@@ -175,16 +175,33 @@ object IvfIndex {
       graft.streaming.StreamingIngest.recoverSwap(fs, dst, buildTmp(dir), buildBak(dir))
   }
 
-  /** The stored centroid sample, cell-ordered — nlist rows of driver
-    * state, the same shape the in-query quantizers hold. Every read
-    * entry point ([[probe]]/[[append]] come through here) first heals a
-    * crashed build swap via [[recoverIfMissing]] — conditional, so it
-    * never touches an in-flight rebuild's staging. */
+  /** The centroid sidecar's fixed schema: read with it, the sidecar
+    * costs one scan job and no footer-inference job. */
+  private val CentroidSchema = "cell INT, centroid ARRAY<FLOAT>"
+
+  /** The data schema Spark wrote into a parquet file's footer (the
+    * `org.apache.spark.sql.parquet.row.metadata` key), read on the
+    * driver: one footer instead of a schema-inference job. */
+  private def footerSchema(spark: SparkSession, file: org.apache.hadoop.fs.Path)
+      : org.apache.spark.sql.types.StructType = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        file, spark.sparkContext.hadoopConfiguration))
+    try org.apache.spark.sql.types.DataType.fromJson(reader.getFooter.getFileMetaData
+      .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    finally reader.close()
+  }
+
+  /** The stored centroid sample, cell-ordered on the driver — nlist rows
+    * of driver state, the same shape the in-query quantizers hold. Every
+    * read entry point ([[probe]]/[[append]] come through here) first
+    * heals a crashed build swap via [[recoverIfMissing]] — conditional,
+    * so it never touches an in-flight rebuild's staging. */
   def centroids(spark: SparkSession, dir: String): Seq[(Int, Seq[Float])] = {
     recoverIfMissing(spark, dir)
-    spark.read.parquet(s"$dir/centroids")
-      .orderBy("cell").collect().toSeq
-      .map(r => (r.getInt(0), r.getSeq[Float](1)))
+    spark.read.schema(CentroidSchema).parquet(s"$dir/centroids").collect().toSeq
+      .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
   }
 
   /** Incremental maintenance: assign NEW vectors against the STORED
@@ -435,7 +452,7 @@ object IvfIndex {
       // next swap's dst→bak rename forever
       graft.streaming.StreamingIngest.recoverSwap(fs, dst, tmp, bak)
       val base = spark.read.parquet(s"$dir/vectors")
-      spark.read.parquet(s"$dir/centroids").coalesce(1)
+      spark.read.schema(CentroidSchema).parquet(s"$dir/centroids").coalesce(1)
         .write.parquet(s"$tmp/centroids")
       writeCells(base.unionByName(appendsFrame(spark, dir, base.schema).drop("batch")),
         s"$tmp/vectors")
@@ -487,37 +504,44 @@ object IvfIndex {
   /** Probe the persisted index: identical ranking semantics to
     * [[graft.operators.Similarity.ivfTopK]], but the assignment comes
     * from the cell-partitioned scan (no per-query re-assignment of the
-    * corpus) and unprobed cells are pruned TWICE — at planning time the
-    * base tree LISTS only the probed cell directories (the probe's cell
-    * set is computable up front from the queries × the driver-held
-    * centroid sidecar, so at nlist=10⁵ the scan pays ≤ nprobe·|queries|
-    * directory existence checks instead of a 10⁵-partition discovery —
-    * on an object store the listing is the dominant probe cost), and at
-    * runtime the broadcast probe join's dynamic partition pruning
-    * covers whatever a listing-based reader cannot (the appends forest,
-    * and the spec pins it stays on the plan). Correctness is unchanged
-    * by construction: the listing prune and the probe join share ONE
-    * cell-ranking definition ([[Similarity.probeCellsDF]]), and a cell
-    * outside the probe set cannot contribute rows to the join. The
-    * query frame is evaluated once more for the cell set — it is
-    * broadcast-sized by the probe contract. */
+    * corpus), and the probe is planned on the driver. The query frame is
+    * collected ONCE (broadcast-sized by the probe contract) and each
+    * query's cells are ranked there against the centroid sidecar
+    * ([[Similarity.probeCellsLocal]], the same cell-score tree as
+    * [[Similarity.probeCellsDF]]); the (qid, qvec, cell) rows join the
+    * scan as a local relation. The probed cell set then prunes both
+    * trees statically: the base tree LISTS only the probed cell
+    * directories (at nlist=10⁵ the scan pays ≤ nprobe·|queries|
+    * directory checks instead of a 10⁵-partition discovery — on an
+    * object store the listing is the dominant probe cost), and both the
+    * base and the appends scan carry a `cell IN (probed)` partition
+    * filter, so an unprobed cell's files are never read in either tree.
+    * Both scans take their schema from one parquet footer read on the
+    * driver rather than an inference job. A cell outside the probe set
+    * could not contribute rows to the join anyway, so the prune changes
+    * no answer. */
   def probe(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
             nprobe: Int,
             qidCol: String = "q_vec_id", qvecCol: String = "q_embedding",
             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cents = centroids(spark, dir)
+    val (probeCells, cells) =
+      Similarity.probeCellsLocal(queries, centroids(spark, dir), nprobe, qidCol, qvecCol)
+    val inProbe = col("cell").isInCollection(cells)
     val vroot = s"$dir/vectors"
     val vfs = fsOf(spark, new org.apache.hadoop.fs.Path(vroot))
-    val probedDirs = Similarity.probeCellIds(queries, cents, nprobe, qidCol, qvecCol)
-      .map(c => new org.apache.hadoop.fs.Path(s"$vroot/cell=$c"))
+    val probedDirs = cells.map(c => new org.apache.hadoop.fs.Path(s"$vroot/cell=$c"))
       .filter(vfs.exists) // a cell no vector landed in has no directory
-    val base =
-      if (probedDirs.isEmpty) spark.read.parquet(vroot) // degenerate: empty/alien probe set
-      else spark.read.option("basePath", vroot)
-        .parquet(probedDirs.map(_.toString): _*)
+    val footer = probedDirs.iterator.flatMap(vfs.listStatus(_)).map(_.getPath)
+      .find(_.getName.endsWith(".parquet"))
+    val base = (footer match {
+      case Some(f) => spark.read
+        .schema(footerSchema(spark, f).add("cell", org.apache.spark.sql.types.IntegerType))
+        .option("basePath", vroot).parquet(probedDirs.map(_.toString): _*)
+      case None => spark.read.parquet(vroot) // degenerate: no probed cell holds a base vector
+    }).filter(inProbe)
     // committed streaming appends live beside the build tree (see
-    // [[append]]); `cell` is a partition column in both, so the probe's
-    // pruning applies to each scan. The rename-atomic publish means
+    // [[append]]); `cell` is a partition column in both, so the static
+    // cell filter prunes each scan. The rename-atomic publish means
     // every `batch=<id>` here is complete — no partial batch is visible.
     val appends = new org.apache.hadoop.fs.Path(s"$dir/appends")
     val fs = fsOf(spark, appends)
@@ -534,7 +558,7 @@ object IvfIndex {
             val manifest = foldedBatches(fs, dir)
             val folded = manifest.flatMap(n => n.stripPrefix("batch=").toLongOption)
             val wm = foldedWatermark(manifest)
-            val app = appendsFrame(spark, dir, base.schema)
+            val app = appendsFrame(spark, dir, base.schema).filter(inProbe)
             val unfolded = {
               val f = if (folded.isEmpty) app
                       else app.filter(!col("batch").isInCollection(folded))
@@ -545,7 +569,6 @@ object IvfIndex {
             unfolded.select(col(idCol), col(vecCol), col("cell"))
           }
       else base
-    Similarity.probeScore(queries, assigned, cents, k, nprobe,
-      qidCol, qvecCol, idCol, vecCol)
+    Similarity.probeScore(probeCells, assigned, k, qidCol, qvecCol, idCol, vecCol)
   }
 }

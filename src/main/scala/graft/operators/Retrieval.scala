@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import graft.functions.{CountContained, Kernel, VectorOps}
 
 /** The reference's two retrieval strategies, re-expressed as set-oriented
@@ -245,12 +247,25 @@ object Retrieval {
     // document frequency df is a window count over the already-pruned
     // tf rows (distinct (doc,term) ⇒ the count IS df), so no separate
     // vocabulary aggregate exists either. The exploded tokens are
-    // pruned to the query vocabulary by a broadcast semi-join BEFORE
-    // the tf aggregate, so the only shuffles are over O(query-vocab
-    // hits) rows: tf, the df window, and the final per-question score —
-    // each tiny next to the corpus. (Earlier forms aggregated tf over
-    // the whole vocabulary and joined dl/df back: one O(corpus tokens)
-    // exchange plus two joins that existed only to be 99% discarded.)
+    // pruned to the query vocabulary by an IN-list filter BEFORE the tf
+    // aggregate, so the only shuffles are over O(query-vocab hits) rows:
+    // tf, the df window, and the final per-question score — each tiny
+    // next to the corpus. (Earlier forms aggregated tf over the whole
+    // vocabulary and joined dl/df back: one O(corpus tokens) exchange
+    // plus two joins that existed only to be 99% discarded.)
+    //
+    // The question side is request-sized, so it is planned on the
+    // driver: one projection tokenizes it and is collected (over a local
+    // frame the projection folds into the relation and no job runs),
+    // the driver explodes the terms, and they come back as the IN list
+    // and as the (question_id, term) local relation of the score join.
+    val spark = questions.sparkSession
+    val qSide = questions.select(col("question_id"),
+      array_distinct(split(lower(col("question")), "\\s+")).as("terms"))
+    val qRows = qSide.collect().toSeq.flatMap(r =>
+      Option(r.getSeq[String](1)).getOrElse(Nil).filter(_ != "").map(t => Row(r.get(0), t)))
+    val qTerms = spark.createDataFrame(qRows.asJava,
+      StructType(Seq(qSide.schema(0), StructField("term", StringType, nullable = false))))
     val words = docs.select(col(idCol),
       filter(split(lower(col(textCol)), "\\s+"), w => w =!= "").as("_words"))
     // dl > 0 keeps n_docs/avgdl identical to the aggregate-derived form
@@ -261,17 +276,14 @@ object Retrieval {
     val corpus = words.select(size(col("_words")).cast("long").as("dl"))
       .filter(col("dl") > 0)
       .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-    val qTerms = broadcast(questions.select(col("question_id"),
-        explode(array_distinct(split(lower(col("question")), "\\s+"))).as("term"))
-      .filter(col("term") =!= ""))
     val tfq = words
       .select(col(idCol), size(col("_words")).cast("long").as("dl"),
         explode(col("_words")).as("term"))
-      .join(broadcast(qTerms.select(col("term")).distinct()), "term")
+      .filter(col("term").isInCollection(qRows.map(_.getString(1)).distinct))
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
     val wDf = Window.partitionBy(col("term"))
-    val scored = qTerms
+    val scored = broadcast(qTerms)
       .join(tfq.withColumn("df", count(lit(1)).over(wDf)), "term")
       .crossJoin(broadcast(corpus))
       .withColumn("idf", round(

@@ -1,8 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.BindReferences
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
 import graft.functions.VectorOps
 
 /** Approximate similarity search over an embedding column
@@ -146,19 +152,18 @@ object Similarity {
     df.withColumn("cell", graft.functions.MatrixArg.argmaxCosine(
       VectorOps.asDouble(col(vecCol)), cents.map(_._2.map(_.toDouble)), 6))
 
-  /** The probe-and-score stage shared by [[ivfTopK]] (in-query
-    * assignment) and [[graft.io.IvfIndex]] (assignment read back from a
-    * cell-partitioned index): rank each query's `nprobe` nearest cells
-    * against the broadcast centroid table, equi-join the probe set to
-    * the assigned vectors on cell, exact-cosine score, top-k per query.
-    * When `assigned` is a scan of a table PARTITIONED BY cell, the
-    * broadcast probe join triggers dynamic partition pruning — only the
-    * probed nprobe·|queries| cell directories are read. */
-  /** Each query's `nprobe` probe cells, ranked against the broadcast
-    * centroid table (rounded cosine desc, ties to the lowest cell) —
-    * ONE definition shared by [[probeScore]]'s join side and
-    * [[probeCellIds]]' driver-side listing prune, so the two can never
-    * disagree about which cells a query probes. */
+  /** The probe-cell score: a query vector's rounded cosine against one
+    * centroid. ONE definition: [[probeCellsDF]] plans it, and
+    * [[probeCellsLocal]] evaluates the same Catalyst tree on the driver,
+    * so the two rankings cannot drift apart. */
+  private def cellScore(qvec: Column, centroid: Column): Column =
+    round(VectorOps.cosineNative(qvec, centroid), 6)
+
+  /** Each query's `nprobe` probe cells, ranked in the plan against the
+    * broadcast centroid table ([[cellScore]] desc, ties to the lowest
+    * cell): the (qid, qvec, cell) probe side of [[probeScore]] for the
+    * in-query paths ([[ivfTopK]], [[ivfSq8TopK]]), whose query side is
+    * table-sized. */
   private[graft] def probeCellsDF(queries: DataFrame, cents: Seq[(Int, Seq[Float])],
                                   nprobe: Int, qidCol: String, qvecCol: String)
       : DataFrame = {
@@ -167,27 +172,62 @@ object Similarity {
     // centroid table is nlist rows — broadcast side of the probe ranking
     val centroids = cents.toDF("cell", "centroid")
     val probes = broadcast(queries).join(broadcast(centroids))
-      .withColumn("c_score",
-        round(graft.functions.VectorOps.cosineNative(col(qvecCol), col("centroid")), 6))
+      .withColumn("c_score", cellScore(col(qvecCol), col("centroid")))
     val wProbe = Window.partitionBy(col(qidCol)).orderBy(col("c_score").desc, col("cell"))
     probes.withColumn("p_rank", row_number().over(wProbe))
       .filter(col("p_rank") <= nprobe)
       .select(col(qidCol), col(qvecCol), col("cell"))
   }
 
-  /** The DISTINCT cell ids a query batch will probe — metadata-sized
-    * (≤ nprobe·|queries|, and the query side is broadcast-sized by the
-    * probe contract), collected to the driver so a persisted index can
-    * list ONLY those cell directories instead of discovering all nlist
-    * partitions (see [[graft.io.IvfIndex.probe]]). */
-  private[graft] def probeCellIds(queries: DataFrame, cents: Seq[(Int, Seq[Float])],
-                                  nprobe: Int, qidCol: String, qvecCol: String)
-      : Seq[Int] =
-    probeCellsDF(queries, cents, nprobe, qidCol, qvecCol)
-      .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted.toSeq
+  /** [[probeCellsDF]]'s rows, ranked on the driver: the query side is
+    * collected once (broadcast-sized by the persisted probe's contract;
+    * a projection over a local frame collects without a Spark job), each
+    * row is scored against the nlist centroids by evaluating
+    * [[cellScore]]'s tree bound to the (query vector, centroid) pair, and
+    * each query id keeps its `nprobe` best cells in the window's order:
+    * score descending under Spark's double order, nulls last, ties to the
+    * lowest cell. Returns the (qid, qvec, cell) rows as a local relation
+    * together with the distinct probed cells, sorted. */
+  private[graft] def probeCellsLocal(queries: DataFrame, cents: Seq[(Int, Seq[Float])],
+                                     nprobe: Int, qidCol: String, qvecCol: String)
+      : (DataFrame, Seq[Int]) = {
+    val spark = queries.sparkSession
+    val q = queries.select(col(qidCol), col(qvecCol))
+    val qvecType = q.schema(1).dataType
+    // cellScore analyzed over an empty (qvec, centroid) relation, then
+    // bound to that row shape: the tree the plan runs, evaluated per pair
+    val pair = spark.createDataFrame(java.util.List.of[Row](), StructType(Seq(
+        StructField("q", qvecType), StructField("c", ArrayType(FloatType, containsNull = false)))))
+      .select(cellScore(col("q"), col("c"))).queryExecution.analyzed
+    val score = BindReferences.bindReference(pair.expressions.head, pair.children.head.output)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(qvecType)
+    val centData = cents.map { case (c, v) => (c, ArrayData.toArrayData(v.toArray)) }
+    // (score or null, cell): the window's ORDER BY c_score DESC, cell
+    val order: Ordering[(java.lang.Double, Int)] = (a, b) => {
+      val byScore =
+        if (a._1 == null || b._1 == null) java.lang.Boolean.compare(a._1 == null, b._1 == null)
+        else SQLOrderingUtil.compareDoubles(b._1, a._1)
+      if (byScore != 0) byScore else Integer.compare(a._2, b._2)
+    }
+    val ranked = q.collect().toSeq.groupBy(_.get(0)).valuesIterator.flatMap { rows =>
+      rows.flatMap { r =>
+        val qv = toCatalyst(r.get(1))
+        centData.map { case (cell, c) =>
+          (r, (score.eval(InternalRow(qv, c)).asInstanceOf[java.lang.Double], cell))
+        }
+      }.sortBy(_._2)(order).take(nprobe)
+    }.map { case (r, (_, cell)) => Row(r.get(0), r.get(1), cell) }.toSeq
+    (spark.createDataFrame(ranked.asJava, q.schema.add("cell", IntegerType, nullable = false)),
+      ranked.map(_.getInt(2)).distinct.sorted)
+  }
 
-  private[graft] def probeScore(queries: DataFrame, assigned: DataFrame,
-                                cents: Seq[(Int, Seq[Float])], k: Int, nprobe: Int,
+  /** The probe-and-score stage shared by [[ivfTopK]] (in-query
+    * assignment) and [[graft.io.IvfIndex]] (assignment read back from a
+    * cell-partitioned index): equi-join each query's probe cells
+    * (`probeCells`, (qid, qvec, cell) rows from [[probeCellsDF]] or
+    * [[probeCellsLocal]]) to the assigned vectors on cell, exact-cosine
+    * score, top-k per query. */
+  private[graft] def probeScore(probeCells: DataFrame, assigned: DataFrame, k: Int,
                                 qidCol: String, qvecCol: String,
                                 idCol: String, vecCol: String,
                                 // scorer for the within-cell stage: the
@@ -198,7 +238,6 @@ object Similarity {
                                 // DuckDB replay
                                 scoreFn: (Column, Column) => Column =
                                   graft.functions.VectorOps.cosineNative): DataFrame = {
-    val probeCells = probeCellsDF(queries, cents, nprobe, qidCol, qvecCol)
     val scored = broadcast(probeCells).join(assigned, "cell")
       .withColumn("score", round(scoreFn(col(qvecCol), col(vecCol)), 4))
     val w = Window.partitionBy(col(qidCol)).orderBy(col("score").desc, col(idCol))
@@ -213,7 +252,8 @@ object Similarity {
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cents = coarseCentroids(candidates, nlist, idCol, vecCol)
     val assigned = assignCells(candidates, cents, vecCol)
-    probeScore(queries, assigned, cents, k, nprobe, qidCol, qvecCol, idCol, vecCol)
+    probeScore(probeCellsDF(queries, cents, nprobe, qidCol, qvecCol), assigned, k,
+      qidCol, qvecCol, idCol, vecCol)
   }
 
   /** IVF-SQ8 — FAISS's standard memory-lever index, composed from two
@@ -261,8 +301,8 @@ object Similarity {
         c => col("_qmin") + c.cast("double") * col("_qscale"))))
       .filter(VectorOps.normSq(col("_recon")) > 0)
       .select(col(idCol), col("cell"), col("_recon"))
-    probeScore(queries, coded, cents, k, nprobe, qidCol, qvecCol, idCol, "_recon",
-      scoreFn = VectorOps.cosine)
+    probeScore(probeCellsDF(queries, cents, nprobe, qidCol, qvecCol), coded, k,
+      qidCol, qvecCol, idCol, "_recon", scoreFn = VectorOps.cosine)
   }
 
   /** Product quantization (the PQ of FAISS's IVF-PQ): split each vector

@@ -406,10 +406,6 @@ object StreamingIngest {
     (df, next)
   }
 
-  private[graft] def ledgerLatest(spark: org.apache.spark.sql.SparkSession,
-                                  ledgerDir: String): (DataFrame, Long) =
-    versionedLatest(spark, ledgerDir, emptyFpLedger(spark))
-
   private def emptyFpLedger(spark: SparkSession): DataFrame =
     spark.range(0).select(
       col("id").cast("string").as("fp"), lit(null).cast("long").as("keeper_id"))
@@ -421,7 +417,7 @@ object StreamingIngest {
     * original), land the verdicts under `verdictDir` partitioned by
     * batch id, and write the post-batch ledger
     * ([[graft.operators.Dedup.ledgerAfter]]) as a NEW version
-    * `ledgerDir/v<N>` (see [[ledgerLatest]]) so the next batch — or
+    * `ledgerDir/v<N>` (see [[versionedLatest]]) so the next batch — or
     * tomorrow's restart, even with a fresh checkpoint — sees every
     * fingerprint ever ingested. The ledger IS the durable state, kept
     * OUTSIDE the stream checkpoint (survives checkpoint wipes, shared

@@ -1,7 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, In, InSet}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.ExplainMode
 
 import graft.io.IvfIndex
 import graft.operators.Similarity
@@ -75,9 +75,10 @@ class IvfIndexSpec extends SparkSpec {
     // BASE-derived centroids (append must NOT re-train)
     val qs = vecs(3, 16, seed = 77)
       .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding"))
-    val expected = rows(Similarity.probeScore(qs,
+    val expected = rows(Similarity.probeScore(
+      Similarity.probeCellsDF(qs, storedCents, nprobe = 3, "q_vec_id", "q_embedding"),
       Similarity.assignCells(base.unionByName(late), storedCents, "embedding"),
-      storedCents, k = 8, nprobe = 3, "q_vec_id", "q_embedding", "vec_id", "embedding"))
+      k = 8, "q_vec_id", "q_embedding", "vec_id", "embedding"))
     val got = rows(IvfIndex.probe(spark, dir, qs, k = 8, nprobe = 3))
     assert(got == expected)
     // the appended ids are actually reachable
@@ -481,26 +482,48 @@ class IvfIndexSpec extends SparkSpec {
     val cellDirs = new java.io.File(s"$dir/vectors").listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell=")).sorted
     assert(cellDirs.length > 1, s"expected multiple cell partitions, saw ${cellDirs.mkString(",")}")
-    // the probe plan must carry a dynamic partition-pruning filter on
-    // the cell scan — unprobed directories are never read
-    val plan = IvfIndex.probe(spark, dir, qs, k = 5, nprobe = 2)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(plan.contains("dynamicpruning"),
-      s"probe scan is not partition-pruned:\n$plan")
-    // ...and pruning must SURVIVE the appends union: with a committed
-    // batch present the probe reads base ∪ appends, and the base scan —
-    // the 100 TB side — must still be dynamically pruned
-    IvfIndex.append(vecs(40, 16, seed = 75).withColumn("vec_id", col("vec_id") + 6000L),
-      dir, batchId = Some(1L))
-    val unionPlan = IvfIndex.probe(spark, dir, qs, k = 5, nprobe = 2)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    val dppScans = "dynamicpruningexpression".r.findAllIn(unionPlan).length
-    assert(dppScans >= 2,
-      s"both sides of the union must stay partition-pruned (saw $dppScans):\n$unionPlan")
+    // with a committed batch the probe reads base ∪ appends: BOTH scans
+    // must carry the probed cell set as a partition filter and select
+    // files of probed cells only — the appends tree has no listing
+    // prune, so its static filter is what keeps unprobed cells unread
+    val late = vecs(40, 16, seed = 75).withColumn("vec_id", col("vec_id") + 6000L)
+    IvfIndex.append(late, dir, batchId = Some(1L))
+    val appendCells = new java.io.File(s"$dir/appends/batch=1").listFiles()
+      .map(_.getName).filter(_.startsWith("cell=")).toSet
+    val cents = IvfIndex.centroids(spark, dir)
+    val probed = Similarity.probeCellsDF(qs, cents, nprobe = 2, "q_vec_id", "q_embedding")
+      .select("cell").distinct().collect().map(_.getInt(0)).toSet
+    assert(probed.size < cellDirs.length && (appendCells -- probed.map(c => s"cell=$c")).nonEmpty,
+      s"fixture must leave unprobed cells in both trees (probed $probed, appends $appendCells)")
+    val res = IvfIndex.probe(spark, dir, qs, k = 5, nprobe = 2)
+    val scans = res.queryExecution.executedPlan.collect {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }.flatMap(_.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s })
+    val roots = scans.map(_.relation.location.rootPaths.map(_.getName))
+    assert(roots.size == 2 && roots.contains(Seq("appends")) &&
+      roots.exists(_.forall(_.startsWith("cell="))), s"expected the base and the appends scan: $roots")
+    def isCell(e: Expression) = e.references.map(_.name).toSet == Set("cell")
+    scans.foreach { scan =>
+      val cellSets = scan.partitionFilters.collect {
+        case InSet(a, hset) if isCell(a) => hset.map(_.asInstanceOf[Int])
+        case In(a, list) if isCell(a) => list.map(_.eval().asInstanceOf[Int]).toSet
+      }
+      assert(cellSets === Seq(probed), s"scan of ${scan.relation.location.rootPaths.head} " +
+        s"lacks the probed cell filter: ${scan.partitionFilters}")
+      val files = scan.selectedPartitions.toPartitionArray.map(_.filePath.toString)
+      assert(files.nonEmpty && files.forall(f =>
+        "cell=(\\d+)".r.findFirstMatchIn(f).exists(m => probed(m.group(1).toInt))),
+        s"scan reads files of unprobed cells: ${files.mkString(", ")}")
+    }
+    // and the prune changes nothing about the answer
+    assert(rows(res) == rows(Similarity.probeScore(
+      Similarity.probeCellsDF(qs, cents, nprobe = 2, "q_vec_id", "q_embedding"),
+      Similarity.assignCells(cands.unionByName(late), cents, "embedding"),
+      k = 5, "q_vec_id", "q_embedding", "vec_id", "embedding")))
   }
 
-  test("probe LISTS only the probed cell directories — planning-time prune " +
-      "on top of the runtime DPP") {
+  test("probe lists only the probed cell directories, a planning-time prune") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
     val cands = vecs(400, 16, seed = 11)
     val qs = vecs(2, 16, seed = 47)
@@ -508,8 +531,9 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.build(cands, dir, nlist = 8)
     val allCells = new java.io.File(s"$dir/vectors").listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell=")).toSet
-    val probed = Similarity.probeCellIds(qs, IvfIndex.centroids(spark, dir),
-      nprobe = 2, "q_vec_id", "q_embedding").map(c => s"cell=$c").toSet
+    val probed = Similarity.probeCellsDF(qs, IvfIndex.centroids(spark, dir),
+      nprobe = 2, "q_vec_id", "q_embedding").select("cell").distinct().collect()
+      .map(r => s"cell=${r.getInt(0)}").toSet
     assert(probed.size < allCells.size,
       s"fixture must leave unprobed cells (probed $probed of $allCells)")
     val res = IvfIndex.probe(spark, dir, qs, k = 5, nprobe = 2)
@@ -521,6 +545,56 @@ class IvfIndexSpec extends SparkSpec {
       s"listing prune read $listedCells, probe set is $probed")
     // and the prune changes nothing about the answer
     assert(rows(res) == rows(Similarity.ivfTopK(qs, cands, k = 5, nlist = 8, nprobe = 2)))
+  }
+
+  test("the driver's probe-cell ranking equals probeCellsDF row for row") {
+    val rnd = new scala.util.Random(2718)
+    def v(d: Int) = Seq.fill(d)(rnd.nextFloat() * 2 - 1)
+    val cents = Seq.tabulate(12)(c => (c, v(16)))
+    val queries = Seq.tabulate(20)(i => (i.toLong, v(16)))
+    // exact score ties: cells 6..11 repeat centroids 0..5, so a query
+    // scores each pair identically and the lower cell must win
+    val duplicated = cents.take(6) ++ cents.take(6).map { case (c, x) => (c + 6, x) }
+    // null scores: a query of the wrong dimension (cosine is null on a
+    // mismatch) and a null vector rank every cell last, lowest cell first;
+    // a zero vector scores 0.0 everywhere, a 12-way tie
+    val odd = Seq((100L, v(15)), (101L, null), (102L, Seq.fill(16)(0f)))
+    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), Option(r.getSeq[Float](1)).map(_.toList), r.getInt(2)))
+      .toList.sortBy(t => (t._1, t._3))
+    for ((name, cs) <- Seq("random" -> cents, "duplicated centroids" -> duplicated);
+         nprobe <- Seq(1, 3, 12)) {
+      val qs = (queries ++ odd).toDF("q_vec_id", "q_embedding")
+      val (local, cells) = Similarity.probeCellsLocal(qs, cs, nprobe, "q_vec_id", "q_embedding")
+      val planned = key(Similarity.probeCellsDF(qs, cs, nprobe, "q_vec_id", "q_embedding"))
+      assert(key(local) === planned, s"$name, nprobe $nprobe")
+      assert(cells === planned.map(_._3).distinct.sorted, s"$name, nprobe $nprobe")
+      assert(planned.filter(_._1 >= 100L).map(_._3).toSet === (0 until nprobe).toSet,
+        s"$name, nprobe $nprobe: null and all-tied scores must rank the lowest cells")
+    }
+  }
+
+  test("a probe plus collect over a built index runs at most 4 Spark jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    IvfIndex.build(vecs(400, 16, seed = 13), dir, nlist = 8)
+    // a local query frame, as a request hands the probe its questions
+    val qs = vecs(3, 16, seed = 29).collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toDF("q_vec_id", "q_embedding")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.sql.GraftColumns.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = IvfIndex.probe(spark, dir, qs, k = 5, nprobe = 3).collect()
+      org.apache.spark.sql.GraftColumns.drainListeners(spark.sparkContext)
+      assert(out.length == 15)
+      // the centroid read, the broadcast of the local probe cells, and
+      // the scan plus its top-k shuffle
+      assert(jobs.get() <= 4, s"probe + collect ran ${jobs.get()} jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("randomized commit/replay/compact schedules never lose or duplicate a row") {

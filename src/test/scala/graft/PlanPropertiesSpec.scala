@@ -160,18 +160,22 @@ class PlanPropertiesSpec extends SparkSpec {
 
   test("bm25 has no full-vocabulary aggregate: every groupBy sits above the query-vocab prune") {
     // the r4 rewrite derives dl scan-only and prunes tokens to the query
-    // vocabulary via broadcast semi-join BEFORE any (id, term) aggregate;
-    // a regression to aggregate-then-prune shows up as a HashAggregate
-    // whose input subtree lacks the broadcast join with the term list
+    // vocabulary BEFORE any (id, term) aggregate — today an IN-list
+    // filter on term over the exploded tokens; a regression to
+    // aggregate-then-prune shows up as a HashAggregate whose input
+    // subtree lacks that filter
     val p = SparkEntry.queries("bm25_search")(spark, d).queryExecution.executedPlan match {
       // AQE root doesn't expose the plan as children — unwrap it
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
       case other => other
     }
-    def subtreeHasBroadcastJoin(n: org.apache.spark.sql.execution.SparkPlan): Boolean =
-      n.collect { case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => b }.nonEmpty
-    // only corpus-fed aggregates matter: the question-side distinct() is
-    // term-keyed too but reads a LocalTableScan, not the parquet corpus
+    def subtreeHasVocabPrune(n: org.apache.spark.sql.execution.SparkPlan): Boolean =
+      n.collect { case f: org.apache.spark.sql.execution.FilterExec => f.condition }.exists(
+        _.exists {
+          case org.apache.spark.sql.catalyst.expressions.InSet(a, _) => a.references.exists(_.name == "term")
+          case org.apache.spark.sql.catalyst.expressions.In(a, _) => a.references.exists(_.name == "term")
+          case _ => false
+        })
     def readsCorpus(n: org.apache.spark.sql.execution.SparkPlan): Boolean =
       n.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.nonEmpty
     val byTermAggs = p.collect {
@@ -180,7 +184,7 @@ class PlanPropertiesSpec extends SparkSpec {
     }
     assert(byTermAggs.nonEmpty, "expected corpus-fed term-keyed aggregates in the bm25 plan")
     byTermAggs.foreach { agg =>
-      assert(subtreeHasBroadcastJoin(agg),
+      assert(subtreeHasVocabPrune(agg),
         "a term-keyed aggregate runs over unpruned corpus tokens — " +
           "the full-vocabulary exchange the rewrite removed is back")
     }

@@ -95,8 +95,7 @@ class StreamingValidationSpec extends SparkSpec {
       "an absent ledger path is an empty ledger, not an AnalysisException")
   }
 
-  test("ledgerLatest reads the newest committed version, never uncommitted " +
-      "residue, and numbers the next write past every version dir") {
+  test("versionedLatest opens the newest committed version, numbers the next") {
     import graft.operators.Dedup
     val work = Files.createTempDirectory("graft-ledger-latest")
     val ledgerDir = s"$work/ledger"
@@ -109,11 +108,14 @@ class StreamingValidationSpec extends SparkSpec {
     new java.io.File(s"$ledgerDir/v3/_SUCCESS").delete()
     val v9 = new java.io.File(s"$ledgerDir/v9"); v9.mkdirs()
     java.nio.file.Files.write(v9.toPath.resolve("part-junk.parquet"), Array[Byte](1, 2, 3))
-    val (df, next) = StreamingIngest.ledgerLatest(spark, ledgerDir)
+    // the fingerprint ledger's empty state: the reader's bootstrap frame
+    val empty = spark.range(0).select(
+      col("id").cast("string").as("fp"), lit(null).cast("long").as("keeper_id"))
+    val (df, next) = StreamingIngest.versionedLatest(spark, ledgerDir, empty)
     assert(df.select("keeper_id").as[Long].collect().toSeq === Seq(2L),
       "the reader opens v2, the newest committed version")
     assert(next === 10L, "the next write lands past every version dir, committed or not")
-    val (fresh, freshNext) = StreamingIngest.ledgerLatest(spark, s"$work/absent")
+    val (fresh, freshNext) = StreamingIngest.versionedLatest(spark, s"$work/absent", empty)
     assert(fresh.count() === 0L && freshNext === 0L)
   }
 

@@ -1,7 +1,8 @@
 #!/bin/sh
 # Lists the engine surface nothing reaches: every def, val, class,
-# object, trait or type declared in src/main without a `private`,
-# `protected` or `override` modifier whose name appears on no code line
+# object, trait or type declared in src/main without a plain `private`,
+# a `protected` or an `override` modifier (package-private
+# `private[graft]` declarations are listed) whose name appears on no code line
 # of src/main or perfbench/harness/src other than its own declaration.
 # Specs do not count as callers. Comment lines, block comments and
 # trailing `//` comments are skipped; string literals count (the oracle
@@ -33,7 +34,7 @@ find src/main perfbench/harness/src -name '*.scala' | sort | xargs awk '
     if (code ~ /def main\(/) hasMain[FILENAME] = 1
     if (!match(code, /(^|[[:space:]])(def|val|lazy val|class|object|trait|type)[[:space:]]+[A-Za-z_][A-Za-z0-9_]*/)) next
     head = substr(code, 1, RSTART)
-    if (head ~ /(private|protected|override)/) next
+    if (head ~ /(private([^[]|$)|protected|override)/) next
     decl = substr(code, RSTART, RLENGTH)
     sub(/^[[:space:]]*/, "", decl)
     n++; file[n] = FILENAME; where[n] = FILENAME ":" FNR
