@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, StringType}
 import graft.functions.{CosineSimilarity, CountContained, Kernel}
 
 /** Engine SQL surface: `spark.sql.extensions=graft.GraftExtensions`
@@ -13,7 +13,9 @@ import graft.functions.{CosineSimilarity, CountContained, Kernel}
   * Connect server-side).
   *
   * Currently: `cosine_sim(ARRAY<FLOAT>, ARRAY<FLOAT>) -> DOUBLE`
-  * ([[graft.functions.CosineSimilarity]]) and
+  * ([[graft.functions.CosineSimilarity.cosine]]; the builder, which
+  * analysis calls with resolved arguments, rejects any other argument
+  * type, without implicit casts) and
   * `count_contained(ARRAY<STRING>, STRING) -> INT`
   * ([[graft.functions.CountContained.count]]; its declared input types
   * give SQL callers Spark's implicit casts and analysis-time check).
@@ -21,7 +23,15 @@ import graft.functions.{CosineSimilarity, CountContained, Kernel}
 object GraftExtensions {
   /** Each function's name and builder; both registration paths read it. */
   private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    binary("cosine_sim")(CosineSimilarity(_, _)),
+    binary("cosine_sim") { (a, b) =>
+      val types = Seq(a, b).map(_.dataType)
+      if (!types.forall { case ArrayType(FloatType, _) => true; case _ => false })
+        throw new AnalysisException("DATATYPE_MISMATCH.TYPE_CHECK_FAILURE_WITH_HINT", Map(
+          "sqlExpr" -> s"\"cosine_sim(${a.sql}, ${b.sql})\"", "hint" -> "",
+          "msg" -> s"cosine_sim expects (ARRAY<FLOAT>, ARRAY<FLOAT>), got (${types
+            .map(_.simpleString).mkString(", ")})"))
+      Kernel.expr(CosineSimilarity, "cosine", DoubleType, Seq(a, b))
+    },
     binary("count_contained")((words, text) =>
       Kernel.expr(CountContained, "count", IntegerType, Seq(words, text),
         inputTypes = Seq(ArrayType(StringType), StringType))))

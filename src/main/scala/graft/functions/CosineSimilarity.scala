@@ -1,22 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native Catalyst expression for cosine similarity over two
-  * `ARRAY<FLOAT>` columns (SURVEY.md §4.3 #1 — the flagship query's hot
-  * loop; reference scoring is delegated to Pinecone's index,
-  * `config.py:20`, `pinecone_manager.py:115-121`).
+/** Native kernel for cosine similarity over two `ARRAY<FLOAT>` vectors
+  * (SURVEY.md §4.3 #1 — the flagship query's hot loop; reference scoring
+  * is delegated to Pinecone's index, `config.py:20`,
+  * `pinecone_manager.py:115-121`), called through [[Kernel]] by
+  * [[VectorOps.cosineNative]] and the `cosine_sim` SQL function.
   *
-  * Why an Expression and not the `aggregate(zip_with(...))` composition
+  * Why a kernel and not the `aggregate(zip_with(...))` composition
   * ([[VectorOps.cosine]]): higher-order functions allocate a lambda frame
-  * per element and box the accumulator; this expression compiles (via
-  * `doGenCode`) to a tight primitive-float loop inside whole-stage
-  * codegen — no allocation, no virtual calls — and stays codegen-
-  * compatible so the surrounding projection/filter fuses around it.
+  * per element and box the accumulator; this is one primitive loop
+  * called directly from whole-stage codegen, so the surrounding
+  * projection/filter fuses around it.
   * Semantics vs the composition: identical double accumulation
   * (dot(a,b) / (||a||·||b||)), null if either input is null, and null on
   * MISMATCHED dimensions (a truncated score would mask corrupt data —
@@ -25,32 +21,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * zero-vector fallback, `embedding_generator.py:111`) where the
   * composition yields NaN from 0/0.
   */
-case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+object CosineSimilarity {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim expects (ARRAY<FLOAT>, ARRAY<FLOAT>), " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true // null on mismatched dimensions
-  override def prettyName: String = "cosine_sim"
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarity =
-    copy(left = newLeft, right = newRight)
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
+  /** The per-row loop; null on mismatched dimensions. */
+  def cosine(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
+    if (n != y.numElements()) return null
     var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
     while (i < n) {
       // Widen BEFORE multiplying: float*float rounds to float, which
@@ -60,26 +36,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
     if (nx == 0.0 || ny == 0.0) 0.0 else dot / (math.sqrt(nx) * math.sqrt(ny))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi"); val yi = ctx.freshName("yi")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $xi = (double) $a.getFloat($i); double $yi = (double) $b.getFloat($i);
-         |    $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-         |  }
-         |  ${ev.value} = ($nx == 0.0 || $ny == 0.0) ? 0.0
-         |    : $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-         |}
-       """.stripMargin
-    })
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Vector math over `ARRAY<FLOAT>`/`ARRAY<DOUBLE>` embedding columns,
   * composed from codegen'd higher-order functions (no UDFs — stays inside
@@ -37,15 +38,13 @@ object VectorOps {
     * index (`pinecone_manager.py:115-121`, metric at `config.py:20`). */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Cosine via the native codegen [[CosineSimilarity]] Expression — the
-    * hot-path variant: one fused primitive-float loop instead of three
-    * higher-order-function folds. Inputs must be ARRAY<FLOAT> (the
+  /** Cosine via the native [[CosineSimilarity]] kernel — the hot-path
+    * variant: one primitive-float loop instead of three
+    * higher-order-function folds. Inputs are cast to ARRAY<FLOAT> (the
     * at-rest embedding type); same left-to-right double accumulation as
     * [[cosine]], so scores are bit-identical. */
   def cosineNative(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftColumns.column(
-      CosineSimilarity(org.apache.spark.sql.GraftColumns.expression(a.cast("array<float>")),
-        org.apache.spark.sql.GraftColumns.expression(b.cast("array<float>"))))
+    Kernel.call(CosineSimilarity, "cosine", DoubleType, a.cast("array<float>"), b.cast("array<float>"))
 
   /** L2-normalize a vector so cosine ≡ dot (reference
     * `embedding_generator.py:102,146`: F.normalize(p=2, dim=1)).

@@ -1,7 +1,10 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.operators.Similarity
 
@@ -504,28 +507,35 @@ object IvfIndex {
   /** Probe the persisted index: identical ranking semantics to
     * [[graft.operators.Similarity.ivfTopK]], but the assignment comes
     * from the cell-partitioned scan (no per-query re-assignment of the
-    * corpus), and the probe is planned on the driver. The query frame is
-    * collected ONCE (broadcast-sized by the probe contract) and each
-    * query's cells are ranked there against the centroid sidecar
-    * ([[Similarity.probeCellsLocal]], the same cell-score tree as
-    * [[Similarity.probeCellsDF]]); the (qid, qvec, cell) rows join the
-    * scan as a local relation. The probed cell set then prunes both
-    * trees statically: the base tree LISTS only the probed cell
-    * directories (at nlist=10⁵ the scan pays ≤ nprobe·|queries|
-    * directory checks instead of a 10⁵-partition discovery — on an
-    * object store the listing is the dominant probe cost), and both the
-    * base and the appends scan carry a `cell IN (probed)` partition
-    * filter, so an unprobed cell's files are never read in either tree.
-    * Both scans take their schema from one parquet footer read on the
-    * driver rather than an inference job. A cell outside the probe set
-    * could not contribute rows to the join anyway, so the prune changes
-    * no answer. */
+    * corpus), and the probe is planned on the driver. The query frame's
+    * (qid, qvec, probe cells) projection is collected ONCE
+    * (broadcast-sized by the probe contract; over a local query frame
+    * the collect runs no Spark job): each query's cells come from the
+    * same top-cells kernel against the centroid sidecar as the in-query
+    * path ([[graft.operators.Similarity.topCells]]), and the driver
+    * flattens them into (qid, qvec, cell) rows that join the scan as a
+    * local relation. The probed cell set then prunes both trees
+    * statically: the base tree LISTS only the probed cell directories
+    * (at nlist=10⁵ the scan pays ≤ nprobe·|queries| directory checks
+    * instead of a 10⁵-partition discovery — on an object store the
+    * listing is the dominant probe cost), and both the base and the
+    * appends scan carry a `cell IN (probed)` partition filter, so an
+    * unprobed cell's files are never read in either tree. Both scans
+    * take their schema from one parquet footer read on the driver rather
+    * than an inference job. A cell outside the probe set could not
+    * contribute rows to the join anyway, so the prune changes no
+    * answer. */
   def probe(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
             nprobe: Int,
             qidCol: String = "q_vec_id", qvecCol: String = "q_embedding",
             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val (probeCells, cells) =
-      Similarity.probeCellsLocal(queries, centroids(spark, dir), nprobe, qidCol, qvecCol)
+    val q = queries.select(col(qidCol), col(qvecCol),
+      Similarity.topCells(col(qvecCol), centroids(spark, dir), nprobe))
+    val ranked = q.collect().toSeq.flatMap(r =>
+      r.getSeq[Int](2).map(cell => Row(r.get(0), r.get(1), cell)))
+    val probeCells = spark.createDataFrame(ranked.asJava,
+      StructType(q.schema.take(2)).add("cell", IntegerType, nullable = false))
+    val cells = ranked.map(_.getInt(2)).distinct.sorted
     val inProbe = col("cell").isInCollection(cells)
     val vroot = s"$dir/vectors"
     val vfs = fsOf(spark, new org.apache.hadoop.fs.Path(vroot))

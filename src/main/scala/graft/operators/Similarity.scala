@@ -1,14 +1,8 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.BindReferences
-import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
 import graft.functions.VectorOps
 
 /** Approximate similarity search over an embedding column
@@ -104,29 +98,13 @@ object Similarity {
         to_json(sq8Codes(VectorOps.asDouble(col(vecCol)), lo, hi)).as("q_codes"))
   }
 
-  /** IVF (inverted-file) approximate top-k — the classic ANN scale path:
-    * `nlist` coarse centroids partition the candidate set; each query
-    * probes only its `nprobe` nearest cells. Centroids are a
-    * deterministic hash-ordered sample of the candidate vectors (the
-    * FAISS "train on a subset" quantizer without the iterative fit — an
-    * iterative refinement would run in the OFFLINE index build, which
-    * also persists the assignment; queries pay only the probe join).
-    * The sample order is the md5 bucket the PQ codebook uses, and cell /
-    * probe scores are rounded to 6 decimals before the argmax/rank, so
-    * any engine (the DuckDB oracle included) assigns identical cells —
-    * which is what lets [[SparkEntry]]'s `ann_recall` replay a genuinely
-    * approximate nprobe < nlist run.
-    * Cell assignment is a map-side argmax-cosine against the nlist
-    * centroid literals: scan-only, zero shuffle, zero fit jobs. The
-    * probe join is an equi-join on cell id — distributable, no
-    * all-pairs scan. Recall/latency tradeoff is nprobe/nlist, exactly
-    * as in FAISS-style IVF. */
   /** The hash-minimal coarse-centroid sample shared by the quantizer
     * family ([[ivfTopK]], [[Dedup.semanticDedup]]): nlist rows to the
     * driver is metadata-sized (KMeans keeps the same centroid state
     * driver-side); hash-order + id tiebreak makes the sample
     * reproducible under any partitioning. ONE definition so every
-    * DuckDB replay of the sample stays in lockstep. */
+    * DuckDB replay of the sample stays in lockstep. Cell ids are the
+    * row indexes, which the matrix kernels return. */
   private[graft] def coarseCentroids(vecs: DataFrame, n: Int, idCol: String,
                                      vecCol: String): Seq[(Int, Seq[Float])] =
     vecs.select(col(idCol), col(vecCol))
@@ -138,11 +116,11 @@ object Similarity {
   /** Map-side argmax-cosine cell assignment against ONE centroid-matrix
     * literal ([[graft.functions.MatrixArg]]) — scan-only, zero shuffle;
     * scores rounded to 6 decimals, ties to the lowest cell. The matrix
-    * rides in as a single array-of-arrays `typedLit`, so generated code
-    * is a constant-size nested loop: codegen size is O(1) in nlist where
-    * the previous per-centroid expression array grew linearly and would
-    * hit Janino limits at the nlist ~10³–10⁵ a 100 TB IVF index needs
-    * (see README "Scale design"). Bit-identical scores to the old
+    * rides in as a single plan-time object, so generated code is a
+    * constant-size call: codegen size is O(1) in nlist where the
+    * previous per-centroid expression array grew linearly and would hit
+    * Janino limits at the nlist ~10³–10⁵ a 100 TB IVF index needs (see
+    * README "Scale design"). Bit-identical scores to the old
     * `array(round(cosineNative(v, c_j), 6))` + `array_position(array_max)`
     * form — [[graft.functions.CosineSimilarity]]'s accumulation order and
     * Spark's HALF_UP round, spec-asserted. Shared by the same callers as
@@ -152,81 +130,35 @@ object Similarity {
     df.withColumn("cell", graft.functions.MatrixArg.argmaxCosine(
       VectorOps.asDouble(col(vecCol)), cents.map(_._2.map(_.toDouble)), 6))
 
-  /** The probe-cell score: a query vector's rounded cosine against one
-    * centroid. ONE definition: [[probeCellsDF]] plans it, and
-    * [[probeCellsLocal]] evaluates the same Catalyst tree on the driver,
-    * so the two rankings cannot drift apart. */
-  private def cellScore(qvec: Column, centroid: Column): Column =
-    round(VectorOps.cosineNative(qvec, centroid), 6)
+  /** A query vector's `nprobe` probe cells as ARRAY<INT>, ranked by the
+    * [[graft.functions.MatrixArg]] `topCosine` kernel against the
+    * centroid matrix: cosine over the float-cast query rounded to 6
+    * decimals, descending, NaN greatest, a null score (a null or
+    * wrong-dimension query) last, ties to the lowest cell.
+    *
+    * The ranking is per query ROW. The window form it replaced ranked
+    * per query id; the two agree because every caller passes unique
+    * query ids: the `vec_id < 5` query sides of the retrieval queries,
+    * and the benchmark's distinct question ids. */
+  private[graft] def topCells(qvec: Column, cents: Seq[(Int, Seq[Float])],
+                              nprobe: Int): Column =
+    graft.functions.MatrixArg.topCosine(VectorOps.asDouble(qvec.cast("array<float>")),
+      cents.map(_._2.map(_.toDouble)), 6, nprobe)
 
-  /** Each query's `nprobe` probe cells, ranked in the plan against the
-    * broadcast centroid table ([[cellScore]] desc, ties to the lowest
-    * cell): the (qid, qvec, cell) probe side of [[probeScore]] for the
-    * in-query paths ([[ivfTopK]], [[ivfSq8TopK]]), whose query side is
-    * table-sized. */
-  private[graft] def probeCellsDF(queries: DataFrame, cents: Seq[(Int, Seq[Float])],
-                                  nprobe: Int, qidCol: String, qvecCol: String)
-      : DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    // centroid table is nlist rows — broadcast side of the probe ranking
-    val centroids = cents.toDF("cell", "centroid")
-    val probes = broadcast(queries).join(broadcast(centroids))
-      .withColumn("c_score", cellScore(col(qvecCol), col("centroid")))
-    val wProbe = Window.partitionBy(col(qidCol)).orderBy(col("c_score").desc, col("cell"))
-    probes.withColumn("p_rank", row_number().over(wProbe))
-      .filter(col("p_rank") <= nprobe)
-      .select(col(qidCol), col(qvecCol), col("cell"))
-  }
-
-  /** [[probeCellsDF]]'s rows, ranked on the driver: the query side is
-    * collected once (broadcast-sized by the persisted probe's contract;
-    * a projection over a local frame collects without a Spark job), each
-    * row is scored against the nlist centroids by evaluating
-    * [[cellScore]]'s tree bound to the (query vector, centroid) pair, and
-    * each query id keeps its `nprobe` best cells in the window's order:
-    * score descending under Spark's double order, nulls last, ties to the
-    * lowest cell. Returns the (qid, qvec, cell) rows as a local relation
-    * together with the distinct probed cells, sorted. */
-  private[graft] def probeCellsLocal(queries: DataFrame, cents: Seq[(Int, Seq[Float])],
-                                     nprobe: Int, qidCol: String, qvecCol: String)
-      : (DataFrame, Seq[Int]) = {
-    val spark = queries.sparkSession
-    val q = queries.select(col(qidCol), col(qvecCol))
-    val qvecType = q.schema(1).dataType
-    // cellScore analyzed over an empty (qvec, centroid) relation, then
-    // bound to that row shape: the tree the plan runs, evaluated per pair
-    val pair = spark.createDataFrame(java.util.List.of[Row](), StructType(Seq(
-        StructField("q", qvecType), StructField("c", ArrayType(FloatType, containsNull = false)))))
-      .select(cellScore(col("q"), col("c"))).queryExecution.analyzed
-    val score = BindReferences.bindReference(pair.expressions.head, pair.children.head.output)
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(qvecType)
-    val centData = cents.map { case (c, v) => (c, ArrayData.toArrayData(v.toArray)) }
-    // (score or null, cell): the window's ORDER BY c_score DESC, cell
-    val order: Ordering[(java.lang.Double, Int)] = (a, b) => {
-      val byScore =
-        if (a._1 == null || b._1 == null) java.lang.Boolean.compare(a._1 == null, b._1 == null)
-        else SQLOrderingUtil.compareDoubles(b._1, a._1)
-      if (byScore != 0) byScore else Integer.compare(a._2, b._2)
-    }
-    val ranked = q.collect().toSeq.groupBy(_.get(0)).valuesIterator.flatMap { rows =>
-      rows.flatMap { r =>
-        val qv = toCatalyst(r.get(1))
-        centData.map { case (cell, c) =>
-          (r, (score.eval(InternalRow(qv, c)).asInstanceOf[java.lang.Double], cell))
-        }
-      }.sortBy(_._2)(order).take(nprobe)
-    }.map { case (r, (_, cell)) => Row(r.get(0), r.get(1), cell) }.toSeq
-    (spark.createDataFrame(ranked.asJava, q.schema.add("cell", IntegerType, nullable = false)),
-      ranked.map(_.getInt(2)).distinct.sorted)
-  }
+  /** The (qid, qvec, cell) probe side of [[probeScore]] for the in-query
+    * paths ([[ivfTopK]], [[ivfSq8TopK]]): one row per query and probed
+    * cell ([[topCells]]), map-side — no join, no shuffle. */
+  private[graft] def probeCells(queries: DataFrame, cents: Seq[(Int, Seq[Float])],
+                                nprobe: Int, qidCol: String, qvecCol: String): DataFrame =
+    queries.select(col(qidCol), col(qvecCol),
+      explode(topCells(col(qvecCol), cents, nprobe)).as("cell"))
 
   /** The probe-and-score stage shared by [[ivfTopK]] (in-query
     * assignment) and [[graft.io.IvfIndex]] (assignment read back from a
     * cell-partitioned index): equi-join each query's probe cells
-    * (`probeCells`, (qid, qvec, cell) rows from [[probeCellsDF]] or
-    * [[probeCellsLocal]]) to the assigned vectors on cell, exact-cosine
-    * score, top-k per query. */
+    * (`probeCells`, (qid, qvec, cell) rows from [[probeCells]] or the
+    * persisted probe's local relation) to the assigned vectors on cell,
+    * exact-cosine score, top-k per query. */
   private[graft] def probeScore(probeCells: DataFrame, assigned: DataFrame, k: Int,
                                 qidCol: String, qvecCol: String,
                                 idCol: String, vecCol: String,
@@ -246,13 +178,31 @@ object Similarity {
       .select(col(qidCol), col(idCol), col("score"), col("rank"))
   }
 
+  /** IVF (inverted-file) approximate top-k — the classic ANN scale path:
+    * `nlist` coarse centroids partition the candidate set; each query
+    * probes only its `nprobe` nearest cells. Centroids are a
+    * deterministic hash-ordered sample of the candidate vectors (the
+    * FAISS "train on a subset" quantizer without the iterative fit — an
+    * iterative refinement would run in the OFFLINE index build, which
+    * also persists the assignment; queries pay only the probe join).
+    * The sample order is the md5 bucket the PQ codebook uses, and cell /
+    * probe scores are rounded to 6 decimals before the argmax/rank, so
+    * any engine (the DuckDB oracle included) assigns identical cells —
+    * which is what lets [[SparkEntry]]'s `ann_recall` replay a genuinely
+    * approximate nprobe < nlist run.
+    * Cell assignment is a map-side argmax-cosine against the nlist
+    * centroid matrix: scan-only, zero shuffle, zero fit jobs. Each
+    * query's probe cells come from a map-side top-nprobe kernel over the
+    * same matrix ([[probeCells]]), and the probe join is an equi-join on
+    * cell id — distributable, no all-pairs scan. Recall/latency tradeoff is nprobe/nlist, exactly
+    * as in FAISS-style IVF. */
   def ivfTopK(queries: DataFrame, candidates: DataFrame, k: Int,
               nlist: Int = 16, nprobe: Int = 4,
               qidCol: String = "q_vec_id", qvecCol: String = "q_embedding",
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cents = coarseCentroids(candidates, nlist, idCol, vecCol)
     val assigned = assignCells(candidates, cents, vecCol)
-    probeScore(probeCellsDF(queries, cents, nprobe, qidCol, qvecCol), assigned, k,
+    probeScore(probeCells(queries, cents, nprobe, qidCol, qvecCol), assigned, k,
       qidCol, qvecCol, idCol, vecCol)
   }
 
@@ -301,8 +251,21 @@ object Similarity {
         c => col("_qmin") + c.cast("double") * col("_qscale"))))
       .filter(VectorOps.normSq(col("_recon")) > 0)
       .select(col(idCol), col("cell"), col("_recon"))
-    probeScore(probeCellsDF(queries, cents, nprobe, qidCol, qvecCol), coded, k,
+    probeScore(probeCells(queries, cents, nprobe, qidCol, qvecCol), coded, k,
       qidCol, qvecCol, idCol, "_recon", scoreFn = VectorOps.cosine)
+  }
+
+  /** The `k` hash-minimal vectors by id — the engine-reproducible
+    * codebook/centroid sample shared by the PQ family (one driver-side
+    * TakeOrdered job; callers reuse the result rather than re-sampling). */
+  private def hashMinimalCodebook(vecs: DataFrame, k: Int, idCol: String,
+                                  vecCol: String): Seq[Seq[Double]] = {
+    val cw = vecs
+      .select(col(idCol), VectorOps.asDouble(col(vecCol)).as("e"))
+      .orderBy(Sampling.md5Bucket64k(col(idCol)), col(idCol))
+      .limit(k).collect().map(_.getSeq[Double](1).toSeq).toSeq
+    require(cw.size == k, s"codebook needs at least $k vectors, found ${cw.size}")
+    cw
   }
 
   /** Product quantization (the PQ of FAISS's IVF-PQ): split each vector
@@ -317,19 +280,6 @@ object Similarity {
     * input splits, the property every sketch here shares. Subspace
     * distances are rounded to 6 decimals before the argmin (index
     * tiebreak) so any engine assigns identical codes. */
-  /** The `k` hash-minimal vectors by id — the engine-reproducible
-    * codebook/centroid sample shared by the PQ family (one driver-side
-    * TakeOrdered job; callers reuse the result rather than re-sampling). */
-  private def hashMinimalCodebook(vecs: DataFrame, k: Int, idCol: String,
-                                  vecCol: String): Seq[Seq[Double]] = {
-    val cw = vecs
-      .select(col(idCol), VectorOps.asDouble(col(vecCol)).as("e"))
-      .orderBy(Sampling.md5Bucket64k(col(idCol)), col(idCol))
-      .limit(k).collect().map(_.getSeq[Double](1).toSeq).toSeq
-    require(cw.size == k, s"codebook needs at least $k vectors, found ${cw.size}")
-    cw
-  }
-
   def pqCodes(vecs: DataFrame, m: Int = 4, k: Int = 8,
               idCol: String = "vec_id", vecCol: String = "embedding",
               codebook: Option[Seq[Seq[Double]]] = None): DataFrame = {

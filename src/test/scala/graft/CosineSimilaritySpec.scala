@@ -92,6 +92,22 @@ class CosineSimilaritySpec extends SparkSpec {
     assert(typed.getMessage.contains("DATATYPE_MISMATCH"), typed.getMessage)
   }
 
+  test("cosine_sim rejects a wrong arity and a non-ARRAY<FLOAT> argument") {
+    GraftExtensions.register(spark)
+    val floats = "CAST(array(1.0, 0.0) AS ARRAY<FLOAT>)"
+    val arity = intercept[Exception](spark.sql(s"SELECT cosine_sim($floats)").collect())
+    assert(arity.getMessage.contains("cosine_sim takes exactly 2 arguments"))
+    // an ARRAY<INT> or ARRAY<DOUBLE> would cast implicitly; the function
+    // takes ARRAY<FLOAT> only, and says so at analysis
+    for (arg <- Seq("array(1, 0)", "array(1.0D, 0.0D)", "map('a', 1)")) {
+      val typed = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT cosine_sim($arg, $floats)").collect())
+      assert(typed.getMessage.contains("DATATYPE_MISMATCH"), typed.getMessage)
+      assert(typed.getMessage.contains("cosine_sim expects (ARRAY<FLOAT>, ARRAY<FLOAT>)"),
+        typed.getMessage)
+    }
+  }
+
   test("cosine_sim returns null on mismatched dimensions") {
     GraftExtensions.register(spark)
     val r = spark.sql("SELECT cosine_sim(CAST(array(1.0, 0.0) AS ARRAY<FLOAT>), " +

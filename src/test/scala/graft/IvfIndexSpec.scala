@@ -76,7 +76,7 @@ class IvfIndexSpec extends SparkSpec {
     val qs = vecs(3, 16, seed = 77)
       .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding"))
     val expected = rows(Similarity.probeScore(
-      Similarity.probeCellsDF(qs, storedCents, nprobe = 3, "q_vec_id", "q_embedding"),
+      Similarity.probeCells(qs, storedCents, nprobe = 3, "q_vec_id", "q_embedding"),
       Similarity.assignCells(base.unionByName(late), storedCents, "embedding"),
       k = 8, "q_vec_id", "q_embedding", "vec_id", "embedding"))
     val got = rows(IvfIndex.probe(spark, dir, qs, k = 8, nprobe = 3))
@@ -491,7 +491,7 @@ class IvfIndexSpec extends SparkSpec {
     val appendCells = new java.io.File(s"$dir/appends/batch=1").listFiles()
       .map(_.getName).filter(_.startsWith("cell=")).toSet
     val cents = IvfIndex.centroids(spark, dir)
-    val probed = Similarity.probeCellsDF(qs, cents, nprobe = 2, "q_vec_id", "q_embedding")
+    val probed = Similarity.probeCells(qs, cents, nprobe = 2, "q_vec_id", "q_embedding")
       .select("cell").distinct().collect().map(_.getInt(0)).toSet
     assert(probed.size < cellDirs.length && (appendCells -- probed.map(c => s"cell=$c")).nonEmpty,
       s"fixture must leave unprobed cells in both trees (probed $probed, appends $appendCells)")
@@ -518,7 +518,7 @@ class IvfIndexSpec extends SparkSpec {
     }
     // and the prune changes nothing about the answer
     assert(rows(res) == rows(Similarity.probeScore(
-      Similarity.probeCellsDF(qs, cents, nprobe = 2, "q_vec_id", "q_embedding"),
+      Similarity.probeCells(qs, cents, nprobe = 2, "q_vec_id", "q_embedding"),
       Similarity.assignCells(cands.unionByName(late), cents, "embedding"),
       k = 5, "q_vec_id", "q_embedding", "vec_id", "embedding")))
   }
@@ -531,7 +531,7 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.build(cands, dir, nlist = 8)
     val allCells = new java.io.File(s"$dir/vectors").listFiles()
       .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell=")).toSet
-    val probed = Similarity.probeCellsDF(qs, IvfIndex.centroids(spark, dir),
+    val probed = Similarity.probeCells(qs, IvfIndex.centroids(spark, dir),
       nprobe = 2, "q_vec_id", "q_embedding").select("cell").distinct().collect()
       .map(r => s"cell=${r.getInt(0)}").toSet
     assert(probed.size < allCells.size,
@@ -547,7 +547,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(rows(res) == rows(Similarity.ivfTopK(qs, cands, k = 5, nlist = 8, nprobe = 2)))
   }
 
-  test("the driver's probe-cell ranking equals probeCellsDF row for row") {
+  test("the probeCells builder equals the window form row for row") {
     val rnd = new scala.util.Random(2718)
     def v(d: Int) = Seq.fill(d)(rnd.nextFloat() * 2 - 1)
     val cents = Seq.tabulate(12)(c => (c, v(16)))
@@ -559,18 +559,38 @@ class IvfIndexSpec extends SparkSpec {
     // mismatch) and a null vector rank every cell last, lowest cell first;
     // a zero vector scores 0.0 everywhere, a 12-way tie
     val odd = Seq((100L, v(15)), (101L, null), (102L, Seq.fill(16)(0f)))
+    // a NaN component makes cell 4 score NaN, which ranks greatest:
+    // every other query probes it
+    val nanCell = cents.updated(4, (4, v(16).updated(3, Float.NaN)))
+    val qs = (queries ++ odd).toDF("q_vec_id", "q_embedding")
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), Option(r.getSeq[Float](1)).map(_.toList), r.getInt(2)))
       .toList.sortBy(t => (t._1, t._3))
-    for ((name, cs) <- Seq("random" -> cents, "duplicated centroids" -> duplicated);
-         nprobe <- Seq(1, 3, 12)) {
-      val qs = (queries ++ odd).toDF("q_vec_id", "q_embedding")
-      val (local, cells) = Similarity.probeCellsLocal(qs, cs, nprobe, "q_vec_id", "q_embedding")
-      val planned = key(Similarity.probeCellsDF(qs, cs, nprobe, "q_vec_id", "q_embedding"))
-      assert(key(local) === planned, s"$name, nprobe $nprobe")
-      assert(cells === planned.map(_._3).distinct.sorted, s"$name, nprobe $nprobe")
-      assert(planned.filter(_._1 >= 100L).map(_._3).toSet === (0 until nprobe).toSet,
+    // the persisted probe collects the projection over its local query
+    // frame and flattens it on the driver; a repartitioned frame runs the
+    // builder in generated code, or interpreted under NO_CODEGEN
+    def built(cs: Seq[(Int, Seq[Float])], nprobe: Int) = Seq(
+      "driver" -> qs.select(col("q_vec_id"), col("q_embedding"),
+          Similarity.topCells(col("q_embedding"), cs, nprobe)).collect().toList
+        .flatMap(r => r.getSeq[Int](2).map(c =>
+          (r.getLong(0), Option(r.getSeq[Float](1)).map(_.toList), c)))
+        .sortBy(t => (t._1, t._3)),
+      "codegen" -> key(Similarity.probeCells(qs.repartition(2), cs, nprobe, "q_vec_id", "q_embedding")),
+      "interpreted" -> {
+        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+        try key(Similarity.probeCells(qs.repartition(2), cs, nprobe, "q_vec_id", "q_embedding"))
+        finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+      })
+    for ((name, cs) <- Seq("random" -> cents, "duplicated centroids" -> duplicated,
+                           "a NaN centroid" -> nanCell);
+         nprobe <- Seq(1, 3, 12, 15)) {
+      val window = key(ReferenceForms.probeCellsWindow(qs, cs, nprobe, "q_vec_id", "q_embedding"))
+      for ((path, rows) <- built(cs, nprobe))
+        assert(rows === window, s"$name, nprobe $nprobe, $path")
+      assert(window.filter(_._1 >= 100L).map(_._3).toSet === (0 until nprobe.min(12)).toSet,
         s"$name, nprobe $nprobe: null and all-tied scores must rank the lowest cells")
+      if (name == "a NaN centroid") assert(window.filter(_._1 < 100L).groupBy(_._1).values
+        .forall(_.exists(_._3 == 4)), s"nprobe $nprobe: NaN must rank greatest")
     }
   }
 

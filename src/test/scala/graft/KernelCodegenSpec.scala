@@ -31,6 +31,8 @@ class KernelCodegenSpec extends SparkSpec {
     (w: Column) => Kernel.call(UnigramViterbi, method, dataType, w,
       UnigramViterbi.toJavaMap(model.pieces), model.big, 2)
   private val words = array(lit("a"), lit("b"), lit("c"))
+  private val vec = array(lit(1.0), lit(0.0))
+  private val matrix = Seq(Seq(0.0, 1.0), Seq(1.0, 0.0), Seq(1.0, 1.0))
 
   private val cases = Seq(
     Case(static("UrlKernels", "host"), lit("http://u@Ex.com:80/a"), UrlOps.urlHost, null),
@@ -62,7 +64,14 @@ class KernelCodegenSpec extends SparkSpec {
     Case(static("GreedyPieces", "encode"), lit("abcab"),
       Wordpiece.wordpiecePieces(_, Seq("ab", "##c", "##ab")), null),
     Case(static("UnigramViterbi", "cost"), lit("abab"), unigram("cost", LongType), null),
-    Case(static("UnigramViterbi", "pieces"), lit("abab"), unigram("pieces", strings), null))
+    Case(static("UnigramViterbi", "pieces"), lit("abab"), unigram("pieces", strings), null),
+    Case(static("CosineSimilarity", "cosine"), array(lit(1f), lit(2f)),
+      VectorOps.cosineNative(_, array(lit(2f), lit(1f))), null),
+    Case(static("MatrixArg", "argmaxCosine"), vec, MatrixArg.argmaxCosine(_, matrix, 6), null),
+    Case(static("MatrixArg", "argminSqdist"), vec, MatrixArg.argminSqdist(_, matrix, 6), null),
+    Case(static("MatrixArg", "dots"), vec, MatrixArg.dots(_, matrix), null),
+    // a null vector reaches the kernel and gets the lowest rows
+    Case(static("MatrixArg", "topCosine"), vec, MatrixArg.topCosine(_, matrix, 6, 2), Seq(0, 1)))
 
   test("every kernel is a direct call in generated code and keeps its null rule") {
     GraftExtensions.register(spark)
@@ -108,15 +117,15 @@ class KernelCodegenSpec extends SparkSpec {
       .contains("graft.functions.DsirScoreSum.score("))
   }
 
-  test("graft.functions holds exactly the three Expression classes that stay") {
+  test("graft.functions holds exactly one Expression class, ComputeOnce") {
     val pkg = new java.io.File(
-      classOf[CosineSimilarity].getProtectionDomain.getCodeSource.getLocation.toURI)
+      Kernel.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
     val names = new java.io.File(pkg, "graft/functions").listFiles()
       .map(_.getName).filter(_.endsWith(".class")).map(_.stripSuffix(".class"))
     val expressions = names
       .map(n => Class.forName(s"graft.functions.$n", false, getClass.getClassLoader))
       .filter(classOf[Expression].isAssignableFrom)
       .map(_.getSimpleName).toSet
-    assert(expressions === Set("CosineSimilarity", "MatrixArg", "ComputeOnce"))
+    assert(expressions === Set("ComputeOnce"))
   }
 }

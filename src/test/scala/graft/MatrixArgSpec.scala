@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{MatrixArg, VectorOps}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
+import graft.functions.{Kernel, MatrixArg, VectorOps}
 import graft.operators.Similarity
 
 /** [[graft.functions.MatrixArg]] — the scale-safe quantizer assignment
@@ -78,13 +79,11 @@ class MatrixArgSpec extends SparkSpec {
 
   test("null/mismatched rows are skipped in arg modes, null elements in dots") {
     val df = Seq((1L, Seq(1f, 0f))).toDF("vec_id", "embedding")
-    val m = typedLit(Seq(Some(Seq(9.9)), None, Some(Seq(1.0, 0.0))))
+    val m = Array(Array(9.9), null, Array(1.0, 0.0))
     val v = VectorOps.asDouble(col("embedding"))
-    def expr(mode: String) = org.apache.spark.sql.GraftColumns.column(
-      MatrixArg(org.apache.spark.sql.GraftColumns.expression(v),
-        org.apache.spark.sql.GraftColumns.expression(m), mode, 6))
-    val r = df.select(expr("argmax_cosine"), expr("argmin_sqdist"),
-      expr("dots")).head
+    val r = df.select(Kernel.call(MatrixArg, "argmaxCosine", IntegerType, v, m, 6),
+      Kernel.call(MatrixArg, "argminSqdist", IntegerType, v, m, 6),
+      Kernel.call(MatrixArg, "dots", ArrayType(DoubleType), v, m)).head
     assert(r.getInt(0) === 2) // rows 0 (wrong dim) and 1 (null) skipped
     assert(r.getInt(1) === 2)
     val dots = r.getSeq[java.lang.Double](2)

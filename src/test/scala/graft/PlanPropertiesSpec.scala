@@ -147,7 +147,7 @@ class PlanPropertiesSpec extends SparkSpec {
 
   test("near-dup cosine kernel is evaluated once, not re-pushed into the filter") {
     val p = planTree("embed_near_dups")
-    assert("cosine_sim".r.findAllIn(p).size === 1,
+    assert("CosineSimilarity\\.cosine\\(".r.findAllIn(p).size === 1,
       "threshold pushdown must not duplicate the scoring kernel")
   }
 

@@ -1,15 +1,19 @@
 package graft
 
+import graft.functions.VectorOps
 import graft.operators.{Unigram, UrlOps}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The interpreted forms of native kernels in `graft.functions`: the
   * `aggregate`-expression forms of the subword kernels
   * (`GreedyPieces.encode`, `UnigramViterbi.cost` and `.pieces`) and the
   * regexp/when-chain forms of the URL kernels (`UrlKernels.canonicalize`,
-  * `.host` and `.resolve`, `RobotsMatcher.allowed`). Higher-order functions
-  * are CodegenFallback and regexp chains re-scan each row, which is why
+  * `.host` and `.resolve`, `RobotsMatcher.allowed`), and the
+  * cross-join-plus-window form of the IVF probe-cell ranking
+  * (`MatrixArg.topCosine`). Higher-order functions are CodegenFallback,
+  * regexp chains re-scan each row and the window shuffles, which is why
   * the native kernels replaced them; they stay here as the reference
   * each kernel's parity spec checks row for row. */
 object ReferenceForms {
@@ -233,5 +237,23 @@ object ReferenceForms {
       .when(href.startsWith("?"), concat(origin,
         when(basePath === "", lit("/")).otherwise(basePath), href))
       .otherwise(concat(origin, baseDir, href))
+  }
+
+  /** The window form of [[graft.operators.Similarity.probeCells]]: each
+    * query id's `nprobe` cells, ranked in the plan against the broadcast
+    * centroid table by `round(cosineNative(qvec, centroid), 6)` desc,
+    * ties to the lowest cell (parity with the `topCosine` kernel:
+    * IvfIndexSpec). */
+  def probeCellsWindow(queries: DataFrame, cents: Seq[(Int, Seq[Float])], nprobe: Int,
+                       qidCol: String, qvecCol: String): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val centroids = cents.toDF("cell", "centroid")
+    val w = Window.partitionBy(col(qidCol)).orderBy(col("c_score").desc, col("cell"))
+    broadcast(queries).join(broadcast(centroids))
+      .withColumn("c_score", round(VectorOps.cosineNative(col(qvecCol), col("centroid")), 6))
+      .withColumn("p_rank", row_number().over(w))
+      .filter(col("p_rank") <= nprobe)
+      .select(col(qidCol), col(qvecCol), col("cell"))
   }
 }
